@@ -32,7 +32,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import persist_tracked, shared
 from ..functions.compat import dround
 from ..functions.vectors import (
     EMB_DIM,
@@ -247,49 +247,40 @@ def _minhash_bands(sh: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped shingle index + candidate-pair cache.  In a production
-# dedup pipeline the shingle/MinHash index is BUILT ONCE and probed by
-# every consumer (LSH dedup, exact-Jaccard verify, containment verify);
-# the in-session analogue is one localCheckpoint'd materialization per
-# (session, sf_dir) shared by `dedup_minhash_lsh`, `dedup_ngram_jaccard`
-# and `dedup_containment` — a checkpoint, not a persist, so the
-# per-query `release_persists` leaves it intact (same pattern as the
-# CC-label and codebook caches).
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The shingle/MinHash index is built once and probed by every consumer
+# (LSH dedup, exact-Jaccard verify, containment verify): one
+# localCheckpoint'd materialization per ``cache.shared`` entry, shared by
+# `dedup_minhash_lsh`, `dedup_ngram_jaccard` and `dedup_containment`.
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        sh = _shingles(_corpus_with_mutants(spark, sf_dir)).localCheckpoint()
-        _SHINGLE_CACHE[key] = sh
-    return sh
+    return shared(
+        "shingles",
+        spark,
+        sf_dir,
+        lambda s, d: _shingles(_corpus_with_mutants(s, d)).localCheckpoint(),
+    )
 
 
 def _shared_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash signatures, materialized once per session — the
     k-salted-md5 signature pass is the most expensive stage of the
     index and is identical for every consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    bands = _BANDS_CACHE.get(key)
-    if bands is None:
-        bands = _minhash_bands(_shared_shingles(spark, sf_dir)).localCheckpoint()
-        _BANDS_CACHE[key] = bands
-    return bands
+    return shared(
+        "bands",
+        spark,
+        sf_dir,
+        lambda s, d: _minhash_bands(_shared_shingles(s, d)).localCheckpoint(),
+    )
 
 
 def _shared_pair_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cands = _PAIRS_CACHE.get(key)
-    if cands is None:
-        cands = _pair_candidates(
-            _shared_shingles(spark, sf_dir), _shared_bands(spark, sf_dir)
-        ).localCheckpoint()
-        _PAIRS_CACHE[key] = cands
-    return cands
+    return shared(
+        "pair_candidates",
+        spark,
+        sf_dir,
+        lambda s, d: _pair_candidates(
+            _shared_shingles(s, d), _shared_bands(s, d)
+        ).localCheckpoint(),
+    )
 
 
 def _doc_sid_sets(sh: DataFrame) -> DataFrame:
@@ -338,19 +329,16 @@ def _verify_counts(
     )
 
 
-_DOCSETS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shared_doc_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared :func:`_doc_sid_sets` over the shared md5 shingle
     relation — probed by the four md5-family verify stages (same
     build-once pattern as ``_shared_bands``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    ds = _DOCSETS_CACHE.get(key)
-    if ds is None:
-        ds = _doc_sid_sets(_shared_shingles(spark, sf_dir)).localCheckpoint()
-        _DOCSETS_CACHE[key] = ds
-    return ds
+    return shared(
+        "doc_sets",
+        spark,
+        sf_dir,
+        lambda s, d: _doc_sid_sets(_shared_shingles(s, d)).localCheckpoint(),
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,23 +1085,15 @@ def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-# Converged CC labels shared across the session's consumers
-# (``dedup_components`` and ``dedup_canonical_pick`` both need them; in a
-# production pipeline the component table is materialized ONCE and read
-# by every downstream keep/drop stage — the in-session analogue is
-# sharing the localCheckpoint'd frame, whose executor-side blocks stay
-# alive as long as we hold the reference; a checkpoint is not a persist,
-# so ``release_persists`` between queries leaves it intact).
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Converged (node, label) frame of the duplicate graph, computing it
-    on first use and reusing the materialized checkpoint thereafter."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Converged (node, label) frame of the duplicate graph, shared by
+    ``dedup_components`` and ``dedup_canonical_pick`` (the component
+    table a production pipeline materializes once for every downstream
+    keep/drop stage)."""
+    return shared("cc_labels", spark, sf_dir, _build_cc_labels)
+
+
+def _build_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _cc_edges(spark, sf_dir).localCheckpoint()
     labels = edges.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -1159,7 +1139,6 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=False)
         )
-    _CC_CACHE[key] = labels
     return labels
 
 

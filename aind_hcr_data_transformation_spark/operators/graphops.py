@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import persist_tracked, shared
 from ..tables import load_table
 
 _SCALE = 1_000_000_000  # fixed-point 1e9: ranks sum to ~_SCALE
@@ -51,19 +51,16 @@ _ITERS = 3
 # expression it replicates); a billion-NODE graph would keep the
 # vector iteration distributed, but a 25-node vector costs more to
 # schedule than to compute.
-_EDGE_CACHE: dict[tuple[str, str], tuple[list, list]] = {}
-
-
 def _nation_trade_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, list]:
     """((nationkey, name) rows, (src, dst, w) rows) — the weighted
     nation-level trade edge list, UNFILTERED (self-loops included;
     consumers drop them as needed), collected once per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return shared("nation_trade_graph", spark, sf_dir, _collect_trade_graph)
+
+
+def _collect_trade_graph(spark: SparkSession, sf_dir: str):
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
@@ -87,7 +84,6 @@ def _nation_trade_graph(
     )
     nations = [(r[0], r[1]) for r in n.collect()]
     edge_rows = [(r[0], r[1], r[2]) for r in edges.collect()]
-    _EDGE_CACHE[key] = (nations, edge_rows)
     return nations, edge_rows
 
 

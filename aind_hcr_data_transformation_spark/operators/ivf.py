@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import persist_tracked, shared
 from ..functions.compat import dround
 from ..functions.vectors import (
     EMB_DIM,
@@ -191,30 +191,21 @@ def _train(emb: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped trained-codebook cache.  The operational IVF pattern is
-# train ONCE, search many times (``save_codebook``/``load_codebook`` is
-# the cross-job form); within one session, ``ivf_kmeans_ann`` and
-# ``ivfpq_search`` share one coarse-quantizer Lloyd chain.  The cache
-# stores the collected centroid VALUES (k rows of k×dim doubles —
-# driver-tiny by design; this is a codebook, not data) and rebuilds a
-# local relation on reuse, so it survives the per-query persist release
-# and hands every consumer bit-identical centroids (Python floats
-# round-trip IEEE doubles exactly).
-_CB_CACHE: dict[tuple[str, str], list] = {}
+def _train_codebook_values(spark: SparkSession, sf_dir: str) -> list:
+    emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
+        "vec_id", "embedding"
+    )
+    return _train_values(emb)
 
 
 def _trained_codebook_values(spark: SparkSession, sf_dir: str) -> list:
     """Collected (cluster, cemb) centroid values of the session's coarse
-    quantizer, training it on first use."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _CB_CACHE.get(key)
-    if rows is None:
-        emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
-            "vec_id", "embedding"
-        )
-        rows = _train_values(emb)
-        _CB_CACHE[key] = rows
-    return rows
+    quantizer — train once, search many times (``save_codebook``/
+    ``load_codebook`` is the cross-job form): ``ivf_kmeans_ann`` and
+    ``ivfpq_search`` share one Lloyd chain, and Python floats round-trip
+    the IEEE doubles exactly, so every consumer gets bit-identical
+    centroids."""
+    return shared("ivf_codebook", spark, sf_dir, _train_codebook_values)
 
 
 def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,11 +472,6 @@ _SEM_EPS = 0.98
 _SEM_MUT_OFFSET = 1_000_000
 
 
-# SemDeDup's session codebook cache — same contract as _CB_CACHE, keyed
-# separately because it trains on the normalized mutant-augmented corpus
-_SEM_CB_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _sem_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings ∪ planted semantic duplicates: every 50th vector
     re-appears scaled ×1.1 (id + 1e6).  Uniform scaling preserves
@@ -547,12 +533,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 iterations × 2 consumers + the final assignment
     corpus = persist_tracked(_normalize(_sem_corpus(spark, sf_dir)))
     # train-once-per-session + literal-codebook assignment, exactly as
-    # the IVF read path (see _CB_CACHE / _cell_candidates)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    values = _SEM_CB_CACHE.get(key)
-    if values is None:
-        values = _train_values(corpus)
-        _SEM_CB_CACHE[key] = values
+    # the IVF read path (see _trained_codebook_values / _cell_candidates);
+    # its own key because it trains on the normalized mutant-augmented
+    # corpus
+    values = shared(
+        "semdedup_codebook", spark, sf_dir, lambda s, d: _train_values(corpus)
+    )
     assigned = persist_tracked(
         corpus.select(
             "vec_id",
@@ -662,11 +648,11 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     This composes the two trainers this module family already proves
     (:func:`_train` here, ``vectorops._pq_train``) into one index.
 
-    Plan: both codebooks are trained once per session (the ``_CB_CACHE``
-    / ``_PQ_CB_CACHE`` collected-values caches) and INLINED as literal
-    expressions, so the corpus side — cell assignment AND all four PQ
-    codes — is one map-only projection over the embedding scan: zero
-    joins, zero aggregates, zero shuffles before the probe join.  The
+    Plan: both codebooks are trained once per session (``cache.shared``
+    keys ``ivf_codebook``/``pq_codebook``, collected values) and INLINED
+    as literal expressions, so the corpus side — cell assignment AND all
+    four PQ codes — is one map-only projection over the embedding scan:
+    zero joins, zero aggregates, zero shuffles before the probe join.  The
     probe list (5 queries × nprobe cells) and the four per-query lookup
     tables are broadcast; the only exchange in the whole read path is
     the final per-query top-k window.  At 100 TB: cells shard the

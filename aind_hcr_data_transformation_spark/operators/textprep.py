@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import persist_tracked, shared
 from ..functions.compat import dround, sql_round
 from ..tables import load_table, table_count
 
@@ -1871,24 +1871,20 @@ ORACLES["mix_doremi_weights"] = MIX_DOREMI_SQL
 # BPE tokenizer APPLY at corpus scale (round 6)
 # ---------------------------------------------------------------------------
 
-#: session-learned merge table values — (rank, left, right), tiny by
-#: definition (a merge table, not data); same cache shape as the IVF/PQ
-#: codebooks: train once per (session, sf_dir), every consumer reuses
-_BPE_MERGES_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _learned_merges(spark: SparkSession, sf_dir: str) -> list:
     """(rank, left, right, n_pairs) rows of the session's trained merge
-    table, running the real training loop on first use."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _BPE_MERGES_CACHE.get(key)
-    if rows is None:
-        rows = sorted(
+    table — tiny by definition (a merge table, not data), so collected
+    like the IVF/PQ codebooks: the real training loop runs on first
+    use, every later consumer reuses the values."""
+    return shared(
+        "bpe_merges",
+        spark,
+        sf_dir,
+        lambda s, d: sorted(
             (r["rank"], r["left_sym"], r["right_sym"], r["n_pairs"])
-            for r in _bpe_learn_loop(spark, sf_dir).collect()
-        )
-        _BPE_MERGES_CACHE[key] = rows
-    return rows
+            for r in _bpe_learn_loop(s, d).collect()
+        ),
+    )
 
 
 def bpe_learn_merges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import persist_tracked, shared
 from ..functions.compat import dround, dsum, sql_round
 from ..functions.vectors import (
     EMB_DIM,
@@ -295,21 +295,13 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped PQ codebook cache — same rationale and shape as
-# ivf._CB_CACHE: the (m, cluster) sub-codebooks are m×k tiny rows whose
-# collected values rebuild exactly, so every consumer after the first
-# (embed_pq_quantize, pq_adc_topk, ivfpq_search) skips the Lloyd rounds
-# and only re-runs the final assignment against the cached centroids.
-_PQ_CB_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _pq_codebook_values(spark: SparkSession, sf_dir: str) -> list:
     """Collected (m, cluster, cemb) PQ sub-codebook values for the
-    session, training on first use."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_CB_CACHE:
-        _PQ_CB_CACHE[key] = _pq_train_values(spark, sf_dir)
-    return _PQ_CB_CACHE[key]
+    session, training on first use: the m×k tiny rows rebuild exactly,
+    so every consumer after the first (embed_pq_quantize, pq_adc_topk,
+    ivfpq_search) skips the Lloyd rounds and only re-runs the final
+    assignment against the cached centroids."""
+    return shared("pq_codebook", spark, sf_dir, _pq_train_values)
 
 
 def _pq_train_values(spark: SparkSession, sf_dir: str) -> list:

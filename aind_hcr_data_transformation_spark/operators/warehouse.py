@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import persist_tracked, shared
 from ..functions.compat import dround, sql_round
 from ..tables import load_table
 
@@ -78,46 +78,38 @@ def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-shared basket frames — the dedup-module localCheckpoint
-#: precedent (shared shingle/band/candidate frames): `assoc_basket_rules`
-#: and `graph_triangle_count` both need the distinct (order, brand)
-#: basket table AND its co-occurrence pair counts; building them twice
-#: repeats the largest shuffles in both queries.  localCheckpoint (not
-#: persist) so the materialization survives the harness's per-query
-#:  release_persists(), keyed per session + fixture generation.
-_BASKET_CACHE: dict[tuple, tuple] = {}
-
-
 def shared_brand_baskets(spark: SparkSession, sf_dir: str):
-    """(items, pair_counts, n_baskets) — the frames localCheckpoint-
-    materialized, and the basket count collected, once per (session,
-    sf_dir).  ``items`` = distinct (l_orderkey, brand); ``pair_counts``
+    """(items, pair_counts, n_baskets), built once per session for
+    `assoc_basket_rules` and `graph_triangle_count`."""
+    return shared("brand_baskets", spark, sf_dir, _build_brand_baskets)
+
+
+def _build_brand_baskets(spark: SparkSession, sf_dir: str):
+    """The frames localCheckpoint-materialized, and the basket count
+    collected.  ``items`` = distinct (l_orderkey, brand); ``pair_counts``
     = (brand_a < brand_b, co) basket co-occurrence counts from the
     basket-keyed self-join; ``n_baskets`` = countDistinct(l_orderkey)
     as a plain int — a 1-value collected aggregate (codebook-sized by
     any standard) that both consumers previously re-derived with their
     own distinct-aggregate shuffle and bounded-BNLJ crossJoin."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BASKET_CACHE:
-        items = _brand_baskets(spark, sf_dir).localCheckpoint()
-        a = items.select(
-            F.col("l_orderkey").alias("ok"), F.col("brand").alias("brand_a")
-        )
-        b = items.select(
-            F.col("l_orderkey").alias("ok"), F.col("brand").alias("brand_b")
-        )
-        pairs = (
-            a.join(b, "ok")
-            .filter(F.col("brand_a") < F.col("brand_b"))
-            .groupBy("brand_a", "brand_b")
-            .agg(F.count(F.lit(1)).alias("co"))
-            .localCheckpoint()
-        )
-        n_baskets = items.agg(
-            F.countDistinct("l_orderkey").alias("n")
-        ).collect()[0]["n"]
-        _BASKET_CACHE[key] = (items, pairs, int(n_baskets))
-    return _BASKET_CACHE[key]
+    items = _brand_baskets(spark, sf_dir).localCheckpoint()
+    a = items.select(
+        F.col("l_orderkey").alias("ok"), F.col("brand").alias("brand_a")
+    )
+    b = items.select(
+        F.col("l_orderkey").alias("ok"), F.col("brand").alias("brand_b")
+    )
+    pairs = (
+        a.join(b, "ok")
+        .filter(F.col("brand_a") < F.col("brand_b"))
+        .groupBy("brand_a", "brand_b")
+        .agg(F.count(F.lit(1)).alias("co"))
+        .localCheckpoint()
+    )
+    n_baskets = items.agg(
+        F.countDistinct("l_orderkey").alias("n")
+    ).collect()[0]["n"]
+    return items, pairs, int(n_baskets)
 
 
 def assoc_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .cache import shared
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLE_NAMES = (
@@ -223,20 +225,13 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-# memoized table row counts: the size-derived operator parameters
-# (dedup df cap, LSH widths) each need the corpus count, and several
-# queries run per session — one parquet metadata count per (sf_dir,
-# table), not one per query call. Fixture tables are immutable for a
-# session's lifetime.
-_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
 def table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of one fixture table, memoized per (sf_dir, table)."""
-    key = (sf_dir, name)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, name).count()
-    return _COUNT_CACHE[key]
+    """Row count of one table — the size-derived operator parameters
+    (dedup df cap, LSH widths) each need it, so it is one parquet
+    metadata count per ``cache.shared`` entry, not one per query call."""
+    return shared(
+        f"count/{name}", spark, sf_dir, lambda s, d: load_table(s, d, name).count()
+    )
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
