@@ -15,7 +15,8 @@ Two layers (see /root/repo/SURVEY.md):
    pyramid → chunked compressed sink + OME-NGFF metadata) re-expressed with
    Spark's execution model: block-index DataFrames + Arrow-native
    ``mapInArrow`` scans/sinks (voxel payloads read zero-copy from Arrow
-   buffers), ``applyInArrow`` chunk re-tiling, ``groupBy`` downsampling.
+   buffers), chunk re-tiling by JVM exchange + sort, ``groupBy``
+   downsampling.
    The manual round-robin/SLURM partition plumbing of the reference
    (``zeiss_job.py:29-60``) is replaced by Spark's scheduler.
 

@@ -5,7 +5,7 @@ path of SURVEY §2.5 A1 form (2), complementing the relational form in
 Because block z-offsets are chunk-aligned and the chunk is divisible by
 the scale factor (128 = 2⁷ — the same alignment the reference relies on,
 SURVEY §7 hard-part 4), every input block downsamples independently: a
-pure ``mapInPandas`` with zero shuffle. Edge blocks with odd extents are
+pure ``mapInArrow`` with zero shuffle. Edge blocks with odd extents are
 TRIMMED to an even multiple of the factor before the windowed reshape —
 the crop semantics of the reference's pinned ``xarray_multiscale==1.1.0``
 (its ``downscale`` slices each dim to ``(s // f) * f`` because the
@@ -20,22 +20,21 @@ Because block offsets are multiples of the base chunk (divisible by the
 factor), per-block trimming of the final edge block equals the global
 trim — no halo exchange needed.
 
-Arrow-native finding (r4 VERDICT task 8): both stages now run on
-``mapInArrow`` / ``applyInArrow`` (payloads read zero-copy from Arrow
-buffers, no pandas bytes-object materialization) and the windowed mean
-accumulates in float64 without an 8×-sized upcast temporary.  Measured
-A/B on 2×512³ uint16 stacks (min of 10, two sessions each): pandas path
-1.07–1.10 s, Arrow path 1.03–1.05 s — i.e. the conversion copy was NOT
-the bottleneck at this scale; the stage is bound by the JVM↔Python
-payload transfer itself.  The Arrow forms are kept because they are
-never slower, cut peak per-task memory (no float64 block temp, no bytes
-objects), and hold the per-batch output under a 128 MiB flush budget
-(Arrow binary columns carry a 2 GiB offset cap).
+Arrow-native levels: :func:`downsample_blocks` and every level of the
+conversion pyramid (``pipeline._convert_pyramid``) are ONE ``mapInArrow``
+each — payloads read zero-copy from Arrow buffers, pooled tiles leave as
+record batches under a 128 MiB flush budget (Arrow binary columns carry
+a 2 GiB offset cap).  Re-tiling onto the base chunk grid starts no
+Python runner of its own (:func:`chunk_sorted` exchanges and sorts in the
+JVM, :func:`assemble_chunks` stitches inside the consuming task): each
+runner costs ~0.2 s of CPU to start (SCALING.md, "Known bounded worst
+cases").
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import itertools
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -44,8 +43,16 @@ from pyspark.sql import functions as F
 
 from ..sources.czi import BLOCK_SCHEMA, _block_arrow_schema
 
-#: Arrow twin of BLOCK_SCHEMA for the mapInArrow / applyInArrow paths.
+#: Arrow twin of BLOCK_SCHEMA for the mapInArrow paths.
 _BLOCK_ARROW = _block_arrow_schema()
+
+#: one block: ``(stack_name, t, c, (z0, y0, x0), ndarray)``
+Tile = tuple[str, int, int, tuple[int, int, int], np.ndarray]
+
+#: output batches flush at this payload size: Arrow binary columns use
+#: 32-bit offsets (2 GiB hard cap per array) and bounded batches keep
+#: peak memory flat however many blocks one task sees
+FLUSH_BYTES = 128 * 2**20
 
 
 def windowed_mean_nd(
@@ -63,18 +70,33 @@ def windowed_mean_nd(
     such empty outputs (the pyramid has bottomed out on that dim)."""
     if arr.ndim != len(factors):
         raise ValueError(f"rank mismatch: {arr.shape} vs factors {factors}")
-    trimmed = arr[tuple(slice(0, (s // f) * f) for s, f in zip(arr.shape, factors))]
-    newshape = []
-    for s, f in zip(trimmed.shape, factors):
-        newshape.extend([s // f, f])
-    mean_axes = tuple(range(1, 2 * arr.ndim, 2))
-    # accumulate in float64 WITHOUT materializing a float64 copy of the
-    # whole block first (dtype= casts per element during the reduction —
-    # arithmetic identical to astype(float64).mean(), minus an 8x-sized
-    # temporary per 4 MiB block in the conversion hot path)
-    mean = np.ascontiguousarray(trimmed).reshape(newshape).mean(
-        axis=mean_axes, dtype=np.float64
-    )
+    out_shape = tuple(s // f for s, f in zip(arr.shape, factors))
+    n = int(np.prod(factors))
+    if arr.dtype.kind in "iu" and arr.dtype.itemsize <= 4 and n <= 2**21:
+        # integer window sums of strided slices, exact in int64: the
+        # float64 sum the reshape path below computes is exact too for
+        # these inputs (|sum| < 2**53), so dividing gives the very same
+        # mean ~8x faster (no reshape copy, no per-element float cast)
+        acc = np.zeros(out_shape, dtype=np.int64)
+        for off in itertools.product(*(range(f) for f in factors)):
+            acc += arr[
+                tuple(
+                    slice(o, o + m * f, f)
+                    for o, m, f in zip(off, out_shape, factors)
+                )
+            ]
+        mean = acc / n
+    else:
+        trimmed = arr[tuple(slice(0, m * f) for m, f in zip(out_shape, factors))]
+        newshape = []
+        for m, f in zip(out_shape, factors):
+            newshape.extend([m, f])
+        # accumulate in float64 WITHOUT materializing a float64 copy of
+        # the whole block first (dtype= casts per element during the
+        # reduction — arithmetic identical to astype(float64).mean())
+        mean = np.ascontiguousarray(trimmed).reshape(newshape).mean(
+            axis=tuple(range(1, 2 * arr.ndim, 2)), dtype=np.float64
+        )
     if preserve_dtype:
         return mean.astype(arr.dtype)
     return mean
@@ -96,138 +118,109 @@ def downsample_blocks(
                 f"block {ax} extent {b} must be divisible by factor {f} so "
                 "blocks downsample independently (SURVEY §7 hard-part 4)"
             )
-    fz, fy, fx = scale_factor
 
-    # output batches flush at this payload size: Arrow binary columns use
-    # 32-bit offsets (2 GiB hard cap per array) and bounded batches keep
-    # peak memory flat however many blocks one task sees
-    flush_bytes = 128 * 2**20
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Arrow-native (mapInArrow, not mapInPandas): the input payload is
-        # read zero-copy from the Arrow binary buffer (``as_buffer`` →
-        # ``np.frombuffer``), skipping the Arrow→pandas materialization of
-        # every block as a Python bytes object — the one avoidable copy
-        # per batch in the path that moves dense voxel payloads.
-        for batch in batches:
-            block_col = batch.column("block")
-            shapes = batch.column("shape").to_pylist()
-            dtypes = batch.column("dtype").to_pylist()
-            meta = {
-                k: batch.column(k).to_pylist()
-                for k in ("stack_name", "t", "c", "z0", "y0", "x0")
-            }
-            out: dict[str, list] = {
-                "stack_name": [], "t": [], "c": [],
-                "z0": [], "z1": [], "y0": [], "y1": [], "x0": [], "x1": [],
-                "shape": [], "dtype": [], "block": [],
-            }
-            pending = 0
-            for i in range(batch.num_rows):
-                arr = np.frombuffer(
-                    block_col[i].as_buffer(), dtype=np.dtype(dtypes[i])
-                ).reshape(tuple(shapes[i]))
-                tczyx = arr.reshape(arr.shape[-3:])  # t=c=1 fixture geometry
-                red = windowed_mean_nd(tczyx, scale_factor, preserve_dtype=True)
-                if red.size == 0:
-                    # an edge block thinner than the factor crops away
-                    # entirely (global floor(shape/f) excludes it)
-                    continue
-                out["stack_name"].append(meta["stack_name"][i])
-                out["t"].append(meta["t"][i])
-                out["c"].append(meta["c"][i])
-                out["z0"].append(meta["z0"][i] // fz)
-                out["z1"].append(meta["z0"][i] // fz + red.shape[0])
-                out["y0"].append(meta["y0"][i] // fy)
-                out["y1"].append(meta["y0"][i] // fy + red.shape[1])
-                out["x0"].append(meta["x0"][i] // fx)
-                out["x1"].append(meta["x0"][i] // fx + red.shape[2])
-                out["shape"].append([1, 1, *red.shape])
-                out["dtype"].append(dtypes[i])
-                out["block"].append(red.tobytes())
-                pending += red.nbytes
-                if pending >= flush_bytes:
-                    yield pa.RecordBatch.from_pydict(out, schema=_BLOCK_ARROW)
-                    out = {k: [] for k in out}
-                    pending = 0
-            if out["block"]:
-                yield pa.RecordBatch.from_pydict(out, schema=_BLOCK_ARROW)
-
-    return blocks.mapInArrow(gen, BLOCK_SCHEMA)
-
-
-def coalesce_blocks(
-    blocks: DataFrame,
-    chunk: tuple[int, int, int],
-) -> DataFrame:
-    """Re-tile block rows onto a ``chunk``-aligned grid: every output row
-    covers one target chunk, assembled from the sub-blocks that fall
-    inside it.
-
-    Why: a 2×-downsampled 128³ block is 64³, but the reference writes
-    EVERY pyramid level with the constant base chunk (``create_dataset(
-    chunks=final_chunksize)``, ``czi_to_zarr.py:630-640``) — without
-    re-tiling, chunk shape would halve per level (16³, 8³ at deep
-    levels: a small-file explosion at production scale). One groupBy on
-    target chunk coordinates per level restores the base layout; the
-    shuffle moves only the downsampled level (≤ 1/8 of its parent).
-
-    Requires input offsets aligned to a divisor of ``chunk`` (true for
-    factor-downsampled chunk-aligned blocks), so each sub-block lands in
-    exactly one target chunk.
-    """
-    cz, cy, cx = chunk
-
-    keyed = blocks.withColumns(
-        {
-            "tz": (F.col("z0") - (F.col("z0") % cz)).cast("int"),
-            "ty": (F.col("y0") - (F.col("y0") % cy)).cast("int"),
-            "tx": (F.col("x0") - (F.col("x0") % cx)).cast("int"),
-        }
+    return blocks.mapInArrow(
+        lambda batches: pool_batches(block_tiles(batches), scale_factor),
+        BLOCK_SCHEMA,
     )
 
-    def assemble(tbl: pa.Table) -> pa.Table:
-        # Arrow-native grouped map (applyInArrow): sub-block payloads are
-        # sliced zero-copy out of the Arrow buffers; one assembled chunk
-        # out per group, no pandas frame on either side.
+
+def block_tiles(batches: Iterable[pa.RecordBatch]) -> Iterator[Tile]:
+    """Block rows (``BLOCK_SCHEMA``) as tiles, each ``block`` read
+    zero-copy from the Arrow binary buffer (no pandas bytes object per
+    payload); a view keeps its batch's buffer alive."""
+    for batch in batches:
         cols = {
-            k: tbl.column(k).to_pylist()
-            for k in ("z0", "z1", "y0", "y1", "x0", "x1", "shape", "tz", "ty", "tx")
+            k: batch.column(k).to_pylist()
+            for k in ("stack_name", "t", "c", "z0", "y0", "x0", "shape", "dtype")
         }
-        z_base, y_base, x_base = cols["tz"][0], cols["ty"][0], cols["tx"][0]
-        ez = max(cols["z1"]) - z_base
-        ey = max(cols["y1"]) - y_base
-        ex = max(cols["x1"]) - x_base
-        dtype = np.dtype(tbl.column("dtype")[0].as_py())
-        block_col = tbl.column("block").combine_chunks()
-        out = np.zeros((ez, ey, ex), dtype=dtype)
-        for i in range(tbl.num_rows):
-            sub = np.frombuffer(block_col[i].as_buffer(), dtype=dtype).reshape(
-                tuple(cols["shape"][i])[-3:]
-            )
-            out[
-                cols["z0"][i] - z_base : cols["z1"][i] - z_base,
-                cols["y0"][i] - y_base : cols["y1"][i] - y_base,
-                cols["x0"][i] - x_base : cols["x1"][i] - x_base,
-            ] = sub
-        return pa.Table.from_pydict(
-            {
-                "stack_name": [tbl.column("stack_name")[0].as_py()],
-                "t": [tbl.column("t")[0].as_py()],
-                "c": [tbl.column("c")[0].as_py()],
-                "z0": [z_base],
-                "z1": [z_base + ez],
-                "y0": [y_base],
-                "y1": [y_base + ey],
-                "x0": [x_base],
-                "x1": [x_base + ex],
-                "shape": [[1, 1, ez, ey, ex]],
-                "dtype": [str(dtype)],
-                "block": [out.tobytes()],
-            },
-            schema=_BLOCK_ARROW,
-        )
+        block_col = batch.column("block")
+        for i in range(batch.num_rows):
+            arr = np.frombuffer(
+                block_col[i].as_buffer(), dtype=np.dtype(cols["dtype"][i])
+            ).reshape(cols["shape"][i])
+            origin = (cols["z0"][i], cols["y0"][i], cols["x0"][i])
+            yield cols["stack_name"][i], cols["t"][i], cols["c"][i], origin, arr
 
-    return keyed.groupBy("stack_name", "t", "c", "tz", "ty", "tx").applyInArrow(
-        assemble, BLOCK_SCHEMA
-    )
+
+def pool_batches(
+    tiles: Iterable[Tile], factors: tuple[int, int, int]
+) -> Iterator[pa.RecordBatch]:
+    """Windowed-mean pool each tile (see :func:`block_tiles`) and emit
+    the pooled tiles as ``BLOCK_SCHEMA`` record batches, flushed at
+    :data:`FLUSH_BYTES`.  A tile thinner than its factor on some axis
+    crops away entirely (global ``floor(shape/f)`` excludes it)."""
+    out: dict[str, list] = {k: [] for k in _BLOCK_ARROW.names}
+    pending = 0
+    for name, t, c, origin, arr in tiles:
+        red = windowed_mean_nd(arr.reshape(arr.shape[-3:]), factors)
+        if red.size == 0:
+            continue
+        z0, y0, x0 = (o // f for o, f in zip(origin, factors))
+        row = {
+            "stack_name": name, "t": t, "c": c,
+            "z0": z0, "z1": z0 + red.shape[0],
+            "y0": y0, "y1": y0 + red.shape[1],
+            "x0": x0, "x1": x0 + red.shape[2],
+            "shape": [1, 1, *red.shape],
+            "dtype": str(red.dtype),
+            "block": red.tobytes(),
+        }
+        for k, v in row.items():
+            out[k].append(v)
+        pending += red.nbytes
+        if pending >= FLUSH_BYTES:
+            yield pa.RecordBatch.from_pydict(out, schema=_BLOCK_ARROW)
+            out = {k: [] for k in out}
+            pending = 0
+    if out["block"]:
+        yield pa.RecordBatch.from_pydict(out, schema=_BLOCK_ARROW)
+
+
+def _chunk_origin(origin: tuple[int, ...], chunk: tuple[int, ...]) -> tuple:
+    return tuple(o - o % n for o, n in zip(origin, chunk))
+
+
+def chunk_sorted(blocks: DataFrame, chunk: tuple[int, int, int]) -> DataFrame:
+    """Lay block rows out for re-tiling onto a ``chunk``-aligned grid:
+    hash-partition and sort them (in the JVM) by (stack, t, c, target
+    chunk origin), so each target chunk's sub-blocks reach one task
+    consecutively, for :func:`assemble_chunks`.  The reference writes
+    EVERY level with the constant base chunk (``czi_to_zarr.py:630-640``);
+    without re-tiling, chunk shape would halve per level (a small-file
+    explosion at production scale).  The exchange moves only the
+    downsampled level.  Input offsets must align to a divisor of
+    ``chunk`` (true for factor-downsampled chunk-aligned blocks)."""
+    keys = [
+        "stack_name", "t", "c",
+        *_chunk_origin((F.col("z0"), F.col("y0"), F.col("x0")), chunk),
+    ]
+    return blocks.repartition(*keys).sortWithinPartitions(*keys)
+
+
+def assemble_chunks(
+    tiles: Iterable[Tile], chunk: tuple[int, int, int]
+) -> Iterator[Tile]:
+    """Task side of :func:`chunk_sorted`: fold each run of consecutive
+    tiles of one (stack, t, c, target chunk) into one chunk tile shaped
+    ``(1, 1, z, y, x)``.  A run may span Arrow batches — the open
+    chunk's sub-blocks stay views into their batches until it closes."""
+    key, parts = None, []
+
+    def close():
+        base = key[3]
+        ext = [max(o[d] + a.shape[d] for o, a in parts) - base[d] for d in range(3)]
+        out = np.zeros((1, 1, *ext), dtype=parts[0][1].dtype)
+        for o, a in parts:
+            out[(0, 0, *(slice(p - b, p - b + n) for p, b, n in zip(o, base, a.shape)))] = a
+        return (*key, out)
+
+    for name, t, c, origin, arr in tiles:
+        k = (name, t, c, _chunk_origin(origin, chunk))
+        if k != key:
+            if parts:
+                yield close()
+            key, parts = k, []
+        parts.append((origin, arr.reshape(arr.shape[-3:])))
+    if parts:
+        yield close()

@@ -3,15 +3,16 @@
 (``zeiss_job.py:207-226``, ``czi_to_zarr.py:457-653``), orchestrated as
 Spark stages instead of SLURM partitions:
 
-stage 0   block-index DataFrame (all stacks at once — the scheduler
-          replaces ``num_of_partitions``/``partition_to_process``);
-          only INDEX rows (bounds, no payload) enter the exchange
-stage 1   one ``mapInPandas`` that BIRTHS each level-0 tile (synthetic
-          ramp, or the codec read on a czifile deployment), writes its
-          zarr region, and EMITS the windowed-mean-pooled next level —
-          gen+write+pool in a single Python invocation
-stage k   shuffle-coalesce pooled tiles onto the base chunk grid →
-          write level k, emit pooled level k+1
+stage 0   block-index relation (all stacks at once — the scheduler
+          replaces ``num_of_partitions``/``partition_to_process``),
+          exploded in the JVM from an Arrow-built ``LocalTableScan``
+          catalog; only INDEX rows (bounds, no payload) enter the exchange
+stage 1   one ``mapInArrow`` that BIRTHS each level-0 tile (codec slab
+          read or synthetic ramp), writes its zarr region, and EMITS the
+          windowed-mean-pooled tile — one Python runner per task
+stage k   pooled tiles exchange and sort by target base chunk in the JVM
+          (``blockwise.chunk_sorted``); one ``mapInArrow`` per task
+          stitches each chunk, writes level k and emits level k+1
 finally   OME-NGFF group metadata (omero + multiscales, driver-side)
 
 The whole pyramid is ONE Spark job driven by one action: shuffle
@@ -23,7 +24,9 @@ Arrow boundary (measured ~55 MiB/s per direction for multi-MB binary
 rows; a separate read stage feeding the write stage paid it twice and
 capped the 2 GiB local benchmark at ~30 MiB/s — fusing gen into the
 write stage lifted it to ~115 MiB/s), and at 100 TB level 0 never
-shuffles at all: only the 8×-smaller pooled tiles do.
+shuffles at all: only the 8×-smaller pooled tiles do.  Each Python
+runner costs ~0.2 s of CPU to start (SCALING.md, "Known bounded worst
+cases"), so no stage starts one it could leave to the JVM.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ from pyspark.sql import SparkSession
 
 from .config import ZarrConversionSettings
 from .ome import build_multiscales, build_omero, validate_multiscales
-from .operators.blockwise import coalesce_blocks
+from .session import local_frame
 from .sinks.store import sync_dir
 from .sinks.zarr_sink import init_group, write_attrs
 
@@ -133,8 +136,13 @@ def _convert_pyramid(
     exactly once — without it, a y×x tile grid over per-plane subblocks
     re-decodes every plane once per tile (ruinous on mosaic-scale
     planes)."""
-    from .operators.blockwise import windowed_mean_nd
-    from .sinks.zarr_sink import init_array, write_region
+    from .operators.blockwise import (
+        assemble_chunks,
+        block_tiles,
+        chunk_sorted,
+        pool_batches,
+    )
+    from .sinks.zarr_sink import init_array, write_checksum_shard, write_region
     from .sources.czi import (
         BLOCK_SCHEMA,
         _read_slab_czifile,
@@ -153,7 +161,8 @@ def _convert_pyramid(
     }
     shapes = {n: [1, 1, z, y, x] for n, (z, y, x) in stacks.items()}
 
-    catalog = spark.createDataFrame(
+    catalog = local_frame(
+        spark,
         [(n, z, y, x) for n, (z, y, x) in stacks.items()],
         "stack_name string, z_extent int, y_extent int, x_extent int",
     )
@@ -175,6 +184,30 @@ def _convert_pyramid(
     else:
         blocks = block_index(catalog, base_chunk).repartition(n_part)
 
+    czi_paths = paths or {}
+
+    def births(batches):
+        """Level 0: BIRTH each tile (synthetic ramp / codec read) in the
+        task that writes it — no Arrow crossing for full-res voxels."""
+        slab_cache: list = [None, None]  # [(path, z0), decoded slab]
+        for batch in batches:
+            for row in batch.to_pylist():
+                name = row["stack_name"]
+                z0, y0, x0 = row["z0"], row["y0"], row["x0"]
+                if name in czi_paths:
+                    key = (czi_paths[name], z0)
+                    if slab_cache[0] != key:
+                        slab_cache[0] = key
+                        slab_cache[1] = _read_slab_czifile(key[0], z0, row["z1"])
+                    core = slab_cache[1][
+                        :, y0 : row["y1"], x0 : row["x1"]
+                    ].astype(dtype, copy=False)
+                else:
+                    core = synthetic_ramp_block(
+                        z0, row["z1"], y0, row["y1"], x0, row["x1"], dtype
+                    )
+                yield name, 0, 0, (z0, y0, x0), core[None, None]
+
     for lvl in range(max(depths.values())):
         alive = {n: s for n, s in shapes.items() if lvl < depths[n]}
         metas = {
@@ -189,106 +222,52 @@ def _convert_pyramid(
             for n, s in alive.items()
         }
         pool = frozenset(n for n in alive if lvl + 1 < depths[n])
-        lvl_str = str(lvl)
 
         def write_and_pool(
             batches,
             _out=out_dir,
-            _lvl=lvl_str,
+            _lvl=str(lvl),
             _metas=metas,
             _pool=pool,
-            _gen=(lvl == 0),
-            _dtype=dtype,
-            _paths=paths or {},
+            _first=(lvl == 0),
             _fault=fault,
         ):
-            import pandas as pd
-
-            cols = [f.name for f in BLOCK_SCHEMA.fields]
-            slab_cache: list = [None, None]  # [(path, z0), decoded slab]
             # per-array chunk digests, flushed as ONE manifest shard per
             # (task, array) after all of this task's chunks are durable
             digests: dict[str, dict[str, str]] = {}
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    if _gen:
-                        # level 0: the tile is BORN here (synthetic ramp /
-                        # codec read), written in the same invocation —
-                        # no Arrow crossing for full-res voxels
-                        if row.stack_name in _paths:
-                            key = (_paths[row.stack_name], row.z0)
-                            if slab_cache[0] != key:
-                                slab_cache[0] = key
-                                slab_cache[1] = _read_slab_czifile(
-                                    key[0], row.z0, row.z1
-                                )
-                            core = slab_cache[1][
-                                :, row.y0 : row.y1, row.x0 : row.x1
-                            ].astype(_dtype, copy=False)
-                        else:
-                            core = synthetic_ramp_block(
-                                row.z0, row.z1, row.y0, row.y1, row.x0,
-                                row.x1, _dtype,
-                            )
-                        arr = core[None, None]
-                        t = c = 0
-                        dt_tag = _dtype
-                    else:
-                        arr = np.frombuffer(
-                            row.block, dtype=np.dtype(row.dtype)
-                        ).reshape(tuple(row.shape))
-                        t, c, dt_tag = row.t, row.c, row.dtype
+
+            def written(tiles):
+                for name, t, c, origin, arr in tiles:
                     write_region(
-                        os.path.join(_out, f"{row.stack_name}.zarr", _lvl),
-                        (t, c, row.z0, row.y0, row.x0),
+                        os.path.join(_out, f"{name}.zarr", _lvl),
+                        (t, c, *origin),
                         arr,
-                        meta=_metas[row.stack_name],
-                        record=digests.setdefault(row.stack_name, {}),
+                        meta=_metas[name],
+                        record=digests.setdefault(name, {}),
                     )
                     if _fault is not None:
-                        _fault(_lvl, row.stack_name)
-                    if row.stack_name not in _pool:
-                        continue
-                    red = windowed_mean_nd(
-                        arr.reshape(arr.shape[-3:]), (fz, fy, fx)
-                    )
-                    if red.size == 0:
-                        continue  # edge tile thinner than the factor
-                    yield pd.DataFrame(
-                        [
-                            {
-                                "stack_name": row.stack_name,
-                                "t": t,
-                                "c": c,
-                                "z0": row.z0 // fz,
-                                "z1": row.z0 // fz + red.shape[0],
-                                "y0": row.y0 // fy,
-                                "y1": row.y0 // fy + red.shape[1],
-                                "x0": row.x0 // fx,
-                                "x1": row.x0 // fx + red.shape[2],
-                                "shape": [1, 1, *red.shape],
-                                "dtype": dt_tag,
-                                "block": red.tobytes(),
-                            }
-                        ],
-                        columns=cols,
-                    )
-            from .sinks.zarr_sink import write_checksum_shard
+                        _fault(_lvl, name)
+                    if name in _pool:
+                        yield name, t, c, origin, arr
 
+            tiles = (
+                births(batches)
+                if _first
+                else assemble_chunks(block_tiles(batches), base_chunk)
+            )
+            yield from pool_batches(written(tiles), (fz, fy, fx))
             for name, rec in digests.items():
-                write_checksum_shard(
-                    os.path.join(_out, f"{name}.zarr", _lvl), rec
-                )
+                write_checksum_shard(os.path.join(_out, f"{name}.zarr", _lvl), rec)
 
-        pooled = blocks.mapInPandas(write_and_pool, BLOCK_SCHEMA)
+        pooled = blocks.mapInArrow(write_and_pool, BLOCK_SCHEMA)
         if not pool:
             # last level for every stack: ONE action executes the whole
             # fused chain (all levels' writes)
             pooled.count()
             break
-        # shuffle-coalesce the (8x smaller) pooled tiles back onto the
-        # base chunk grid for the next level's chunk-aligned writes
-        blocks = coalesce_blocks(pooled, base_chunk)
+        # the (8x smaller) pooled tiles exchange onto the base chunk grid;
+        # the next level's task assembles each chunk, writes and pools it
+        blocks = chunk_sorted(pooled, base_chunk)
         shapes = {
             n: [1, 1, s[2] // fz, s[3] // fy, s[4] // fx]
             for n, s in shapes.items()

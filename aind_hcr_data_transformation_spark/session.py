@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Defaults chosen for the local[32] test harness; on a real cluster the same
 # settings hold except parallelism-derived ones, which scale with cores.
@@ -206,3 +207,16 @@ def apply_session_confs(spark: SparkSession) -> SparkSession:
         except Exception:  # static conf on a live session — keep going
             pass
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for a small in-process
+    list, sent as one Arrow table so it plans as a JVM-only
+    ``LocalTableScan`` — a Python list plans as a Python-deserialised RDD
+    whose every task starts a Python worker (~0.2 s of CPU each)."""
+    import pyarrow as pa
+
+    struct = T.StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.table({n: list(c) for n, c in zip(struct.names, cols)})
+    return spark.createDataFrame(table, struct)

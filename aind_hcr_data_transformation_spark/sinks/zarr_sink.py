@@ -31,6 +31,7 @@ from typing import Any, Iterable
 import numpy as np
 
 from ..plans.blocks import gen_slices
+from ..session import local_frame
 from .codecs import compress, decompress, make_compressor_meta
 from .store import resolve
 
@@ -292,7 +293,7 @@ def scrub_groups_spark(
                 ),
             )
 
-    df = spark.createDataFrame(rows, "url string, key string, want string")
+    df = local_frame(spark, rows, "url string, key string, want string")
     if parallelism:
         df = df.repartition(parallelism)
     out = df.mapInArrow(

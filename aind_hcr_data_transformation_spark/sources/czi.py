@@ -1,5 +1,5 @@
 """CZI stack source: catalog scan → block-index DataFrame → distributed
-slab reads via ``mapInPandas`` (SURVEY §2.1 S1-S7, §3.2 restatement).
+slab reads via ``mapInArrow`` (SURVEY §2.1 S1-S7, §3.2 restatement).
 
 The reference reads a CZI stack as sequential z-slabs on one node
 (``czi_block_generator`` ``utils/utils.py:462-526``; threaded subblock
@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 #: one row per z-slab block; payload is raw C-order bytes + shape/dtype tag
 #: (BinaryType + tag instead of ArrayType: Spark SQL has no unsigned types,
 #: SURVEY §1.3 / §7 hard-part 1)
@@ -51,7 +53,7 @@ BLOCK_SCHEMA = T.StructType(
 
 
 def _block_arrow_schema():
-    """Arrow twin of BLOCK_SCHEMA for the mapInArrow / applyInArrow stages
+    """Arrow twin of BLOCK_SCHEMA for the mapInArrow stages
     (Spark IntegerType ↔ int32, ArrayType(int) ↔ list<int32>)."""
     import pyarrow as pa
 
@@ -91,7 +93,7 @@ def stack_catalog(spark: SparkSession, input_dir: str, suffix: str = ".czi") -> 
             if name.endswith(suffix) and os.path.isfile(p):
                 entries.append((p, os.path.splitext(name)[0], os.path.getsize(p)))
     schema = "path string, stack_name string, size_bytes long"
-    return spark.createDataFrame(entries, schema).orderBy("path")
+    return local_frame(spark, entries, schema).orderBy("path")
 
 
 def block_index(

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from hypothesis.extra import numpy as hnp
 
 from aind_hcr_data_transformation_spark.operators.blockwise import windowed_mean_nd
 
@@ -81,6 +82,47 @@ def test_matches_bruteforce_oracle(shape, factors):
     np.testing.assert_array_equal(
         windowed_mean_nd(arr, factors), reference_windowed_mean(arr, factors)
     )
+
+
+@st.composite
+def _int_blocks(draw):
+    """Integer blocks of every dtype the integer-exact kernel takes, with
+    odd edge extents and values pinned at 0 and the dtype's extremes."""
+    dtype = np.dtype(
+        draw(st.sampled_from(["uint8", "uint16", "int16", "int32", "uint32"]))
+    )
+    info = np.iinfo(dtype)
+    shape = draw(st.tuples(*[st.integers(1, 7)] * 3))
+    values = st.one_of(
+        st.sampled_from(sorted({0, int(info.min), int(info.max)})),
+        st.integers(int(info.min), int(info.max)),
+    )
+    return draw(hnp.arrays(dtype, shape, elements=values))
+
+
+@settings(max_examples=200, deadline=None)
+@given(_int_blocks(), st.sampled_from([(2, 2, 2), (3, 1, 2), (1, 1, 2)]))
+def test_integer_kernel_matches_bruteforce_oracle(arr, factors):
+    """The integer-exact kernel (int64 window sums, truncating division)
+    is bit-identical to the float64 mean-then-truncate oracle: signed
+    sums truncate toward zero, partial edge windows crop away."""
+    got = windowed_mean_nd(arr, factors)
+    assert got.dtype == arr.dtype
+    np.testing.assert_array_equal(got, reference_windowed_mean(arr, factors))
+
+
+def test_integer_kernel_extremes_and_unpreserved_dtype():
+    """All-maximum and all-minimum windows stay at the extreme (no
+    overflow in the accumulator), a negative non-integer mean truncates
+    toward zero, and ``preserve_dtype=False`` returns the float mean."""
+    for dt in ("uint8", "uint16", "int16", "int32", "uint32"):
+        info = np.iinfo(dt)
+        for v in (info.min, info.max):
+            out = windowed_mean_nd(np.full((4, 4, 4), v, dtype=dt), (2, 2, 2))
+            assert (out == v).all()
+    arr = np.array([[[-3, -4]]], dtype=np.int16)  # mean -3.5
+    assert windowed_mean_nd(arr, (1, 1, 2))[0, 0, 0] == -3
+    assert windowed_mean_nd(arr, (1, 1, 2), preserve_dtype=False)[0, 0, 0] == -3.5
 
 
 def test_ramp_fixture_golden():
