@@ -1253,12 +1253,12 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seen = (
         hist.join(
-            F.broadcast(new.select("fingerprint").distinct()), "fingerprint"
+            new.select("fingerprint").distinct(), "fingerprint"
         )
         .select("fingerprint")
         .distinct()
     )
-    unseen = new.join(F.broadcast(seen), "fingerprint", "left_anti")
+    unseen = new.join(seen, "fingerprint", "left_anti")
     return unseen.groupBy("fingerprint").agg(
         F.min("doc_id").alias("keeper_id"),
         F.count(F.lit(1)).alias("n_in_batch"),
@@ -1305,7 +1305,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     histb = bands.filter(F.col("doc_id") % _BATCH_MOD != 0).alias("b")
     candidates = (
         histb.join(
-            F.broadcast(newb),
+            newb,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_key") == F.col("b.band_key")),
         )

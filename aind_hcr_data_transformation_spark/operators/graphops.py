@@ -75,7 +75,7 @@ def _collect_trade_graph(spark: SparkSession, sf_dir: str):
     edges = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .groupBy(
             F.col("c_nationkey").alias("src"),
             F.col("s_nationkey").alias("dst"),
@@ -246,8 +246,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+    # bounded: one row per brand node (vocabulary-sized degree table)
     du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u")))
-    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v")))
+    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
     # orient each undirected edge from lower (deg, id) to higher (deg, id);
     # keep the destination's degree so wedge endpoints rank by the same key
     lower_first = F.struct(F.col("deg_u"), F.col("u")) < F.struct(

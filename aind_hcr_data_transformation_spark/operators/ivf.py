@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked, shared
 from ..functions.compat import dround
+from ..session import interpreted_eval, local_frame
 from ..functions.vectors import (
     EMB_DIM,
     arr_lit,
@@ -83,7 +84,7 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
         "cemb",
         spark_dot(F.col("cemb"), F.col("cemb")).alias("c2"),
     )
-    pairs = emb.crossJoin(F.broadcast(cents)).select(
+    pairs = emb.crossJoin(cents).select(
         "vec_id",
         "embedding",
         "cluster",
@@ -142,8 +143,6 @@ def _train_values(emb: DataFrame) -> list:
     values = sorted(
         (int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in init
     )
-    from ..session import interpreted_eval
-
     # interpreted eval for the Lloyd collects (r13): each iteration's
     # literal-inlined assignment is a brand-new expression tree, so
     # codegen pays a fresh Janino compile per iteration for a job over
@@ -186,9 +185,7 @@ def _train(emb: DataFrame) -> DataFrame:
     """K-means codebook after ``_ITERS`` Lloyd iterations (DataFrame
     wrapper over :func:`_train_values` for the save/load/search API)."""
     values = _train_values(emb)
-    return emb.sparkSession.createDataFrame(
-        values, "cluster bigint, cemb array<double>"
-    )
+    return local_frame(emb.sparkSession, values, "cluster bigint, cemb array<double>")
 
 
 def _train_codebook_values(spark: SparkSession, sf_dir: str) -> list:
@@ -209,10 +206,8 @@ def _trained_codebook_values(spark: SparkSession, sf_dir: str) -> list:
 
 
 def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.createDataFrame(
-        _trained_codebook_values(spark, sf_dir),
-        "cluster bigint, cemb array<double>",
-    )
+    values = _trained_codebook_values(spark, sf_dir)
+    return local_frame(spark, values, "cluster bigint, cemb array<double>")
 
 
 def ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +335,7 @@ def _search(emb: DataFrame, codebook: DataFrame) -> DataFrame:
         .select("qid", "qe", "qn2", F.col("pc.cluster").alias("cluster"))
     )
     scored = (
-        corpus.join(F.broadcast(queries), "cluster")
+        corpus.join(queries, "cluster")
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -747,6 +742,7 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
+    # bounded: _N_QUERIES x _NPROBE probe rows
     cand = cand_src.join(F.broadcast(probe), "cluster").filter(
         F.col("vec_id") != F.col("qid")
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.compat import dround
+from ..session import local_frame
 from ..tables import load_table
 from .downsample import downsample_relational
 
@@ -38,8 +39,8 @@ def pipe_stack_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("SPIM/"), F.col("source"), F.lit("_"), F.col("doc_id").cast("string"), F.lit(".czi")).alias("path"),
         F.lit(True).alias("is_file"),
     )
-    dir_row = spark.createDataFrame(
-        [("SPIM/derivatives", False)], "path string, is_file boolean"
+    dir_row = local_frame(
+        spark, [("SPIM/derivatives", False)], "path string, is_file boolean"
     )
     return (
         catalog.unionByName(dir_row)
@@ -361,7 +362,7 @@ def pipe_voxel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_extendedprice").alias("_vmax"),
     )
     width = (F.col("_vmax") - F.col("_vmin")) / F.lit(float(n_buckets))
-    dist = dist.crossJoin(F.broadcast(bounds)).withColumn(
+    dist = dist.crossJoin(bounds).withColumn(
         "bkt",
         F.when(F.col("_vmax") <= F.col("_vmin"), F.lit(0))
         .otherwise(
@@ -385,6 +386,7 @@ def pipe_voxel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("bcnt").over(w_bkt) - F.col("bcnt")).alias("off"),
         F.sum("bcnt").over(w_flag).alias("n"),
     )
+    # bounded: one row per (flag, bucket): 3 x n_buckets
     ranked = local.join(F.broadcast(offsets), ["l_returnflag", "bkt"]).select(
         "l_returnflag",
         "v",

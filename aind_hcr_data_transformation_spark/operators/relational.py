@@ -3,10 +3,11 @@ sorts, set operations, scalar-function families (SURVEY.md §2.3-§2.5, §2.7-§
 
 The reference has no relational operators (it is a CZI→Zarr ETL pipeline);
 its closest analogs are cited per query. Everything here is stock DataFrame
-API so Catalyst gets full pushdown/pruning/reordering freedom; the only
-physical hints are ``broadcast()`` on dimension tables — the Spark
-restatement of the reference's driver-side metadata broadcast pattern
-(``zeiss_job.py:123-130,145-157``).
+API so Catalyst gets full pushdown/pruning/reordering freedom, including
+which dimension joins to broadcast — the Spark restatement of the
+reference's driver-side metadata broadcast pattern
+(``zeiss_job.py:123-130,145-157``); a ``broadcast()`` hint stays only where
+it changes the plan.
 
 Scale notes (100 TB): every query below shuffles only on its aggregation or
 join keys; dimension joins are broadcast so the fact table never shuffles
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.compat import dround, dsum, dsum_round, sql_round, sql_sum_round
+from ..session import local_frame
 from ..tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -325,7 +327,7 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("rf", "q").agg(F.count(F.lit(1)).alias("c"))
     )
     n = vc.groupBy("rf").agg(F.sum("c").alias("n"))
-    r2 = ranked.join(F.broadcast(n), "rf")
+    r2 = ranked.join(n, "rf")
 
     def pos(p):
         return (F.col("n") - 1).cast("double") * F.lit(p)
@@ -353,7 +355,7 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ap")[1].alias("ap95"),
     )
     ranks = (
-        vc.join(F.broadcast(g.select("rf", "ap50", "ap95")), "rf")
+        vc.join(g.select("rf", "ap50", "ap95"), "rf")
         .groupBy("rf")
         .agg(
             F.sum(
@@ -385,7 +387,7 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     bound = F.lit(0.05) + F.col("mt").cast("double") / F.col("n")
-    out = g.join(ranks, "rf").join(F.broadcast(ties), "rf").select(
+    out = g.join(ranks, "rf").join(ties, "rf").select(
         F.col("rf").alias("l_returnflag"),
         "n",
         exact("p50", 0.5).alias("exact_p50"),
@@ -552,10 +554,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.filter(F.col("l_shipdate") > cutoff)
         .join(orders.filter(F.col("o_orderdate") < cutoff), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            F.broadcast(cust.filter(F.col("c_mktsegment") == "BUILDING")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
+        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             dsum_round(
@@ -599,12 +598,13 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     dim = (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region.filter(F.col("r_name") == "ASIA")), nation.n_regionkey == region.r_regionkey)
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region.filter(F.col("r_name") == "ASIA"), nation.n_regionkey == region.r_regionkey)
         .select("c_custkey", "c_nationkey", "n_name")
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
+        # bounded: ASIA customers, a fifth of customer: grows with SF (SCALING.md)
         .join(F.broadcast(dim), orders.o_custkey == dim.c_custkey)
         .join(
             sup,
@@ -648,8 +648,8 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
@@ -795,7 +795,7 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         qty_agg.withColumn("qty_bucket", F.col("qty").cast("int"))
-        .join(F.broadcast(buckets), "qty_bucket")
+        .join(buckets, "qty_bucket")
         # bucket is integer-exact only for whole quantities; re-apply the
         # precise predicate for fractional quantities.
         .filter(
@@ -1724,8 +1724,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
         )
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
             dsum_round(
@@ -2229,7 +2229,7 @@ def join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         probed = (
             probed.withColumn(f"pos{s}", pos(s, "l_orderkey"))
             .join(
-                F.broadcast(w_s),
+                w_s,
                 (F.col(f"pos{s}") / 32).cast("long") == F.col(f"wi{s}"),
                 "left",
             )
@@ -2535,7 +2535,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     binned = (
-        docs.join(F.broadcast(totals), "source")
+        docs.join(totals, "source")
         .withColumn(
             "target",
             F.expr(f"GREATEST(part_bytes DIV {_COMPACT_BINS}, 1)"),
@@ -3076,7 +3076,7 @@ def join_dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q2 = calendar.filter(F.col("quarter") == 2)
     return (
-        li.join(F.broadcast(q2), li.ship_month == q2.m)
+        li.join(q2, li.ship_month == q2.m)
         .groupBy("ship_month")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
@@ -3206,7 +3206,8 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")).alias("prio_key"),
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("1-URGENT", "expedite"),
             ("2-HIGH", "expedite"),
@@ -3217,7 +3218,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prio_key string, tier string",
     )
     return (
-        o.join(F.broadcast(dim), o.prio_key.eqNullSafe(dim.prio_key))
+        o.join(dim, o.prio_key.eqNullSafe(dim.prio_key))
         .groupBy("tier")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -3340,7 +3341,7 @@ def agg_string_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n_cust"))
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
     )
     rows = per_nation.groupBy("r_name").agg(
         F.concat_ws(
@@ -3810,7 +3811,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = cand.orderBy("frac").limit(_KMV_K)
     union_row = (
         hashed.agg(F.count_distinct("user_id").alias("n_exact"))
-        .crossJoin(F.broadcast(topk.agg(F.max("frac").alias("u_k"))))
+        .crossJoin(topk.agg(F.max("frac").alias("u_k")))
         .select(F.lit("ALL").alias("event_type"), "n_exact", "u_k")
     )
     both = per_group.unionByName(union_row)

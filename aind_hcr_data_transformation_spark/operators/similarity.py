@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..cache import persist_tracked
 from ..functions.compat import dround
 from ..functions.vectors import spark_cosine_prenorm, spark_dot, sql_cosine
+from ..session import local_frame
 from ..tables import load_table, table_count
 
 _N_QUERIES = 5
@@ -99,7 +100,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n2").alias("qn2"),
     )
     scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+        emb.join(queries, F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
             "vec_id",
@@ -185,7 +186,7 @@ def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = (
-        corpus.join(F.broadcast(queries), "bucket")
+        corpus.join(queries, "bucket")
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -397,7 +398,7 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("vec_id"))
     cands = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+        emb.join(queries, F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
             "vec_id",
@@ -527,8 +528,8 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 chosen[qid].append(best[1])
                 out_rows.append((qid, best[1], step, best[2]))
 
-    return spark.createDataFrame(
-        out_rows, "qid bigint, vec_id bigint, sel_rank int, mmr_score double"
+    return local_frame(
+        spark, out_rows, "qid bigint, vec_id bigint, sel_rank int, mmr_score double"
     )
 
 

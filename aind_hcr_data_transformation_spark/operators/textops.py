@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import dround, sql_round
 from ..cache import persist_tracked
+from ..session import local_frame
 from ..tables import load_table, table_count
 
 # tiny per-language stopword lexicons (language ID by stopword voting)
@@ -28,7 +29,7 @@ _LEXICON: dict[str, tuple[str, ...]] = {
 
 def _lexicon_df(spark: SparkSession) -> DataFrame:
     rows = [(lang, w) for lang, words in _LEXICON.items() for w in words]
-    return spark.createDataFrame(rows, "cand_lang string, word string")
+    return local_frame(spark, rows, "cand_lang string, word string")
 
 
 _LEXICON_SQL = "VALUES " + ", ".join(
@@ -46,7 +47,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
     )
     votes = (
-        toks.join(F.broadcast(_lexicon_df(spark)), "word")
+        toks.join(_lexicon_df(spark), "word")
         .groupBy("doc_id", "cand_lang")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
@@ -421,7 +422,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = tf.join(dfreq, "token").crossJoin(F.broadcast(n))
+    scored = tf.join(dfreq, "token").crossJoin(n)
     score = (F.col("tf") * F.col("n_docs")).cast("double") / F.col("df")
     w = Window.partitionBy("doc_id").orderBy(score.desc(), F.asc("token"))
     return (
@@ -925,10 +926,11 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     total = toks.groupBy().agg(F.count(F.lit(1)).alias("n"))
-    surp = tf.crossJoin(F.broadcast(total)).select(
+    surp = tf.crossJoin(total).select(
         "tok", F.expr("(n * 1000) DIV freq").alias("surprise")
     )
     doc_score = (
+        # bounded: one row per distinct token (vocabulary-sized)
         toks.join(F.broadcast(surp), "tok")
         .groupBy("doc_id")
         .agg(F.expr("CAST(sum(surprise) DIV count(*) AS LONG)").alias("mean_surprise"))
@@ -942,7 +944,7 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     buckets = (
         dist.withColumn("cum", F.sum("c").over(wcum))
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "mean_surprise",
             F.when(F.col("cum") * 3 <= F.col("n_docs"), F.lit("head"))
@@ -951,6 +953,7 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bucket"),
         )
     )
+    # bounded: one row per distinct integer mean surprise (the score range)
     return doc_score.join(F.broadcast(buckets), "mean_surprise").select(
         "doc_id", "mean_surprise", "bucket"
     )
@@ -1047,13 +1050,13 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = (
         tf.select("tok", "n", js)
         .withColumn("cell", _cms_cell(F.col("j"), F.col("tok")))
-        .join(F.broadcast(cells), ["j", "cell"])
+        .join(cells, ["j", "cell"])
         .groupBy("tok", "n")
         .agg(F.min("c").alias("cms_est"))
     )
     total = tf.agg(F.sum("n").alias("total"))
     return (
-        est.crossJoin(F.broadcast(total))
+        est.crossJoin(total)
         .filter(F.col("cms_est") >= F.expr("total DIV 200"))
         .select("tok", F.col("n").alias("exact_n"), "cms_est")
     )
@@ -1242,7 +1245,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lm = (
         c12.join(c1, "w1")
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .select(
             "w1",
             "w2",

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked, shared
 from ..functions.compat import dround, sql_round
+from ..session import local_frame
 from ..tables import load_table, table_count
 
 # ---------------------------------------------------------------------------
@@ -190,7 +191,7 @@ def contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = F.col("n_hits") / F.col("n_grams")
     return (
         corpus_sh.join(
-            F.broadcast(bench.withColumn("_hit", F.lit(1))), "shingle", "left"
+            bench.withColumn("_hit", F.lit(1)), "shingle", "left"
         )
         .groupBy("doc_id")
         .agg(
@@ -332,7 +333,7 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     per_shingle = (
-        probes.join(F.broadcast(words), "word_idx", "left")
+        probes.join(words, "word_idx", "left")
         .select(
             "doc_id",
             "shingle",
@@ -587,15 +588,13 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept counts, and the realized rate.
     """
     docs = load_table(spark, sf_dir, "documents")
-    rates = spark.createDataFrame(
-        list(_STRATA_THR.items()), "lang string, thr int"
-    )
+    rates = local_frame(spark, list(_STRATA_THR.items()), "lang string, thr int")
     h16 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
     ).cast("int")
     kept = F.when(h16 < F.col("thr"), 1).otherwise(0)
     return (
-        docs.join(F.broadcast(rates), "lang", "left")
+        docs.join(rates, "lang", "left")
         .withColumn("thr", F.coalesce("thr", F.lit(0)))
         .groupBy("lang")
         .agg(
@@ -682,7 +681,7 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("src_toks").alias("tot_toks"), F.sum("w").alias("tot_w")
     )
     rates = (
-        stats.crossJoin(F.broadcast(totals))
+        stats.crossJoin(totals)
         .withColumn(
             "thr",
             F.least(
@@ -699,7 +698,7 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
     ).cast("int")
     kept = (
-        docs.join(F.broadcast(rates.select("source", "thr")), "source")
+        docs.join(rates.select("source", "thr"), "source")
         .withColumn("kept", F.when(h16 < F.col("thr"), 1).otherwise(0))
         .groupBy("source")
         .agg(
@@ -707,7 +706,7 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("kept") * F.col("toks")).cast("long").alias("toks_kept"),
         )
     )
-    return kept.join(F.broadcast(rates), "source").select(
+    return kept.join(rates, "source").select(
         "source", "w", "n_docs", "src_toks", "thr", "n_kept", "toks_kept"
     )
 
@@ -831,7 +830,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = stats.agg(
         F.sum("tn").alias("tt"), F.sum("rn").alias("rt")
     )
-    scores = stats.crossJoin(F.broadcast(totals)).select(
+    scores = stats.crossJoin(totals).select(
         "b",
         F.expr(f"({_DSIR_SCALE} * tn * rt) div (rn * tt)").alias("s"),
     )
@@ -842,6 +841,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic stand-in for the paper's Gumbel resampling
     per_doc = (
         counts.select("doc_id", "b", "c")
+        # bounded: one row per hashed n-gram bucket (_DSIR_BUCKETS)
         .join(F.broadcast(scores), "b")
         .groupBy("doc_id")
         .agg(
@@ -1017,7 +1017,7 @@ def corpus_prep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the >= threshold exactly as the old inner join dropped them)
     flagged = (
         surv_sh.join(
-            F.broadcast(bench.withColumn("_hit", F.lit(1))), "shingle", "left"
+            bench.withColumn("_hit", F.lit(1)), "shingle", "left"
         )
         .groupBy("doc_id")
         .agg(
@@ -1041,7 +1041,7 @@ def corpus_prep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         b(F.col("dedup_keep")).alias("n_dedup"),
     )
     n_flagged = flagged.agg(F.count(F.lit(1)).alias("n_flagged"))
-    return totals.crossJoin(F.broadcast(n_flagged)).select(
+    return totals.crossJoin(n_flagged).select(
         "n_total",
         "n_quality",
         "n_nonbench",
@@ -1194,7 +1194,7 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc covered positions (1-based): ONLY matched occurrences
     # enter this shuffle — the token stream itself never does
     covered = (
-        grams.join(F.broadcast(boiler), "gram")
+        grams.join(boiler, "gram")
         .select(
             "doc_id",
             F.explode(F.array(F.col("gpos"), F.col("gpos") + 1)).alias("p"),
@@ -1357,7 +1357,7 @@ def mix_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     epochs = spark.range(_EPOCHS).select(F.col("id").cast("int").alias("epoch"))
-    keyed = docs.crossJoin(F.broadcast(epochs)).select(
+    keyed = docs.crossJoin(epochs).select(
         "epoch",
         "doc_id",
         F.conv(
@@ -1458,7 +1458,7 @@ def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = w.agg(F.sum("w").cast("decimal(30,10)").alias("w_total"))
     return (
-        w.crossJoin(F.broadcast(tot))
+        w.crossJoin(tot)
         .select(
             "source",
             "n_docs",
@@ -1626,7 +1626,7 @@ def _apply_merge(words: DataFrame, merge: DataFrame) -> DataFrame:
     ``try_element_at`` on the lookahead: ANSI ``AND`` does not
     short-circuit, so the ``i = size(s)`` row would error on plain
     ``element_at``."""
-    wm = words.crossJoin(F.broadcast(merge.select("a", "b")))
+    wm = words.crossJoin(merge.select("a", "b"))
     fold = F.expr(
         """
         aggregate(
@@ -1775,7 +1775,7 @@ def mix_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one vocabulary-sized join instead of a token-stream join
     diffs = (
         inst.join(ctf, "w")
-        .crossJoin(F.broadcast(n_tot))
+        .crossJoin(n_tot)
         .groupBy("source")
         .agg(
             F.sum("n_sw").alias("n_tokens"),
@@ -1791,7 +1791,7 @@ def mix_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("difficulty").alias("lo"), F.max("difficulty").alias("hi")
     )
     S, ETA = _DOREMI_SCALE, _DOREMI_ETA_Q
-    cur = diffs.crossJoin(F.broadcast(lo_hi)).select(
+    cur = diffs.crossJoin(lo_hi).select(
         "source",
         "n_tokens",
         "difficulty",
@@ -1807,7 +1807,7 @@ def mix_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     tot = cur.agg(F.sum("wgt").alias("wgt_total"))
     return (
-        cur.crossJoin(F.broadcast(tot))
+        cur.crossJoin(tot)
         .select(
             "source",
             "n_tokens",
@@ -1893,7 +1893,8 @@ def bpe_learn_merges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES rebuilt as a local relation afterwards — the codebook-cache
     precedent (`ivf_kmeans_ann`): train once, every later consumer reads
     the trained artifact bit-identically."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _learned_merges(spark, sf_dir),
         "rank int, left_sym string, right_sym string, n_pairs bigint",
     )
@@ -1950,7 +1951,7 @@ def bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fill (nothing ever reads a middle round twice)
     for _rank, a, b, _n_pairs in merges:
         vocab = _apply_merge(
-            vocab, spark.createDataFrame([(a, b)], "a string, b string")
+            vocab, local_frame(spark, [(a, b)], "a string, b string")
         )
     tok = vocab.select("w", F.size("s").cast("long").alias("n_tok")).unionByName(
         inst.select("w").filter(F.length("w") == 1).distinct().select(
@@ -2072,7 +2073,7 @@ def mix_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ranked.filter(F.col("rn") <= _PRI_N)
-        .crossJoin(F.broadcast(tau))
+        .crossJoin(tau)
         .select(
             "doc_id",
             "source",

@@ -708,7 +708,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
-    dev = e.join(F.broadcast(med), "event_type").select(
+    dev = e.join(med, "event_type").select(
         "event_type",
         "med",
         F.abs(F.col("value") - F.col("med")).alias("adev"),
@@ -718,7 +718,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("med").alias("med"),
     )
     flagged = dev.select("event_type", "adev").join(
-        F.broadcast(mad), "event_type"
+        mad, "event_type"
     )
     return (
         flagged.groupBy("event_type")
@@ -793,7 +793,7 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("slot_n"),
     )
     return (
-        ev.join(F.broadcast(prof), ["event_type", "hod"])
+        ev.join(prof, ["event_type", "hod"])
         .select(
             "event_id",
             "event_type",

@@ -8,8 +8,9 @@ synthetic corpus' schema subset (no ``partsupp`` table, no
 
 The reference (a CZI→Zarr ETL job) has no relational surface; its closest
 analog remains the driver-side metadata broadcast
-(``zeiss_job.py:123-130,145-157``), restated here as ``broadcast()`` hints
-on dimension tables.
+(``zeiss_job.py:123-130,145-157``), restated here as the planner's
+broadcast joins on dimension tables (a ``broadcast()`` hint stays only
+where it changes the plan).
 
 Scale notes (100 TB): every query shuffles only on its aggregation or
 join keys. Fact-fact joins (orders⋈lineitem) are shuffle hash/sort-merge
@@ -149,11 +150,11 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("1997-12-31").cast("timestamp"),
             )
         )
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
+        .join(n1, F.col("s_nationkey") == F.col("s_nkey"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nkey"))
         .filter(
             (
                 (F.col("supp_nation") == "NATION_1")
@@ -229,7 +230,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     joined = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .filter(
             F.col("o_orderdate").between(
@@ -238,10 +239,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n_c), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(r), F.col("cr_key") == F.col("r_regionkey"))
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n_s), F.col("s_nationkey") == F.col("sn_key"))
+        .join(n_c, F.col("c_nationkey") == F.col("cn_key"))
+        .join(r, F.col("cr_key") == F.col("r_regionkey"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n_s, F.col("s_nationkey") == F.col("sn_key"))
     )
     return (
         joined.groupBy(F.year("o_orderdate").alias("o_year"))
@@ -300,10 +301,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("gear"))
     n = load_table(spark, sf_dir, "nation")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -393,7 +394,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             dsum(
                 F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0))
@@ -450,10 +451,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
-        revenue.join(
-            F.broadcast(max_rev),
-            F.col("total_revenue") == F.col("max_revenue"),
-        )
+        revenue.join(max_rev, F.col("total_revenue") == F.col("max_revenue"))
         .join(s, F.col("supplier_no") == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
@@ -496,16 +494,15 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    li_p = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    li_p = li.join(p, li.l_partkey == p.p_partkey)
     avg_qty = li_p.groupBy(F.col("l_partkey").alias("ap_key")).agg(
         F.avg("l_quantity").alias("avg_qty")
     )
     return (
-        # broadcast the per-part mean (r14, guide §3.1): it is
-        # dimension-sized (one row per Brand#1 part), and the planner's
-        # estimate picked a SortMergeJoin that shuffled the filtered
-        # fact side on l_partkey — the hint removes that fact exchange
-        li_p.join(F.broadcast(avg_qty), F.col("l_partkey") == F.col("ap_key"))
+        # no hints: the Brand#1 parts and their per-part means both grow
+        # with SF; AQE turns the static SortMergeJoin into a broadcast
+        # join at run time while the per-part mean is small
+        li_p.join(avg_qty, F.col("l_partkey") == F.col("ap_key"))
         .filter(F.col("l_quantity") * 5 < F.col("avg_qty"))
         .agg(
             dround(dsum("l_extendedprice") / 7, 2).alias("avg_yearly"),
@@ -601,7 +598,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#3", "Brand#5")
     )
-    joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    joined = li.join(p, li.l_partkey == p.p_partkey)
     branch = (
         (
             (F.col("p_brand") == "Brand#1")
@@ -662,9 +659,10 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_name") == "EUROPE"
     )
     nation = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+        region, F.col("n_regionkey") == F.col("r_regionkey")
     )
     supp = load_table(spark, sf_dir, "supplier").join(
+        # bounded: the five EUROPE nations
         F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
     )
     part = load_table(spark, sf_dir, "part").filter(
@@ -672,7 +670,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem")
     costs = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(
             supp.select("s_suppkey", "s_name", "s_acctbal", "n_name"),
             li.l_suppkey == F.col("s_suppkey"),
@@ -754,10 +752,11 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name") == "NATION_7"
     )
     supp = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
+        nation, F.col("s_nationkey") == F.col("n_nationkey")
     )
     li = load_table(spark, sf_dir, "lineitem")
     li_n = li.join(
+        # bounded: NATION_7's suppliers, 1/25 of supplier: grows with SF (SCALING.md)
         F.broadcast(supp.select("s_suppkey")),
         li.l_suppkey == F.col("s_suppkey"),
     )
@@ -765,7 +764,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = li_n.groupBy("l_partkey").agg(dsum(value_expr).alias("value"))
     total = li_n.agg(dsum(value_expr).alias("total"))
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(F.col("value") * 10000 > F.col("total"))
         .select(
             F.col("l_partkey").alias("p_partkey"),
@@ -871,14 +870,10 @@ def q16_parts_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.select("l_partkey", "l_suppkey")
         .distinct()
-        .join(
-            F.broadcast(bad_supp.select("s_suppkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
+        .join(bad_supp.select("s_suppkey"), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
     )
     return (
-        pairs.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        pairs.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
@@ -926,11 +921,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     movers = (
-        li.join(
-            F.broadcast(part.select("p_partkey")),
-            li.l_partkey == F.col("p_partkey"),
-            "left_semi",
-        )
+        li.join(part.select("p_partkey"), li.l_partkey == F.col("p_partkey"), "left_semi")
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .filter(F.col("qty") > 50)
@@ -1018,9 +1009,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        waiting.join(
-            F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey")
-        )
+        waiting.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.desc("numwait"), "s_name")
@@ -1078,7 +1067,7 @@ def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
     return (
-        cust.crossJoin(F.broadcast(stats))
+        cust.crossJoin(stats)
         .filter(
             F.col("c_acctbal").cast("decimal(30,10)") * F.col("n_pos")
             > F.col("total_bal")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked, shared
 from ..functions.compat import dround, dsum, sql_round
+from ..session import interpreted_eval, local_frame
 from ..functions.vectors import (
     EMB_DIM,
     arr_lit,
@@ -337,8 +338,6 @@ def _pq_train_values(spark: SparkSession, sf_dir: str) -> list:
         )
         for m in range(_PQ_M)
     }
-    from ..session import interpreted_eval
-
     # interpreted eval for the Lloyd collects (r13): each iteration's
     # literal-inlined assignment is a brand-new expression tree, so
     # codegen pays a fresh Janino compile per iteration for a job over
@@ -405,9 +404,7 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     (score, cluster) tie-break, same ``_sq_l2`` error fold on the
     winning codeword)."""
     values = _pq_codebook_values(spark, sf_dir)
-    cb = spark.createDataFrame(
-        values, "m int, cluster bigint, cemb array<double>"
-    )
+    cb = local_frame(spark, values, "m int, cluster bigint, cemb array<double>")
     by_m: dict[int, list] = {}
     for m, cluster, cemb in values:
         by_m.setdefault(int(m), []).append((int(cluster), list(cemb)))
@@ -615,7 +612,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("qid", F.col("s.m").alias("m"), F.col("s.qemb").alias("qemb"))
     )
-    lut = qsub.join(F.broadcast(cb), "m").select(
+    lut = qsub.join(cb, "m").select(
         "qid", "m", "cluster", _sq_l2(F.col("qemb"), F.col("cemb")).alias("d")
     )
     lut_rows = lut.collect()  # O(M*k*|Q|) = 80 rows, corpus-independent
@@ -809,9 +806,7 @@ def embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             * ((abs(w[d]) * _PI_SCALE) // m)
             for d in range(EMB_DIM)
         ]
-    return spark.createDataFrame(
-        [(d, v[d]) for d in range(EMB_DIM)], "dim int, v_e4 long"
-    )
+    return local_frame(spark, [(d, v[d]) for d in range(EMB_DIM)], "dim int, v_e4 long")
 
 
 def _power_iteration_sql() -> str:
@@ -902,7 +897,7 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import spark_cosine_prenorm
 
     scored = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("qid")
+        queries, F.col("vec_id") != F.col("qid")
     ).select(
         "qid",
         "vec_id",

@@ -72,7 +72,7 @@ def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .select("l_orderkey", F.col("p_brand").alias("brand"))
         .distinct()
     )
@@ -138,10 +138,12 @@ def assoc_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         co.filter(F.col("co") >= F.lit(n_baskets // _MINSUP_DIV))
         .join(
+            # bounded: one row per brand
             F.broadcast(marg.select(F.col("brand").alias("brand_a"), F.col("n_brand").alias("na"))),
             "brand_a",
         )
         .join(
+            # bounded: one row per brand
             F.broadcast(marg.select(F.col("brand").alias("brand_b"), F.col("n_brand").alias("nb"))),
             "brand_b",
         )
@@ -476,7 +478,7 @@ def rec_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     raw = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .join(p, li.l_partkey == p.p_partkey)
         .groupBy(F.col("o_custkey").alias("cust"), F.col("p_brand").alias("brand"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -595,7 +597,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket index in PURE integer arithmetic (DIV, not /): float binning
     # disagrees between engines exactly at bucket boundaries
     binned = (
-        ev.crossJoin(F.broadcast(rng))
+        ev.crossJoin(rng)
         .select(
             F.expr(
                 f"(c - lo_c) * {_HIST_K} DIV (hi_c - lo_c + 1)"

@@ -500,7 +500,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cohort_size")
     )
     return (
-        ret.join(F.broadcast(sizes), "cohort")
+        ret.join(sizes, "cohort")
         .select(
             "cohort",
             "week_offset",
@@ -1062,7 +1062,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = pu.agg(F.max("r_rank").alias("n_users"))
     q = lambda rank: F.expr(f"(({rank} - 1) * 5) div n_users + 1")  # noqa: E731
     return (
-        pu.crossJoin(F.broadcast(n))
+        pu.crossJoin(n)
         .select(
             "user_id",
             q("r_rank").cast("int").alias("r_q"),
@@ -1218,7 +1218,7 @@ def feature_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = ev.agg(
         (F.max(F.unix_micros("ts")) - F.lit(7 * 86_400_000_000)).alias("cut")
     )
-    e = ev.crossJoin(F.broadcast(cutoff)).select(
+    e = ev.crossJoin(cutoff).select(
         "user_id",
         "event_type",
         "value",

@@ -16,6 +16,8 @@ from typing import Sequence, TypeVar
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 T = TypeVar("T")
 
 
@@ -93,9 +95,9 @@ def assign_round_robin(
         offsets.append((pid, acc))
         acc += n
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+    off_df = local_frame(spark, offsets or [(0, 0)], "_pid int, _off long")
     return (
-        local.join(F.broadcast(off_df), "_pid")
+        local.join(off_df, "_pid")
         .withColumn(
             "partition_id",
             ((F.col("_off") + F.col("_rn") - 1) % n_partitions).cast("int"),
@@ -163,11 +165,11 @@ def grouped_row_number(
             T.StructField("_off", T.LongType(), False),
         ]
     )
-    off_df = spark.createDataFrame(
-        [(int(pid), g, int(off)) for pid, g, off in offsets], off_schema
+    off_df = local_frame(
+        spark, [(int(pid), g, int(off)) for pid, g, off in offsets], off_schema
     )
     joined = local.join(
-        F.broadcast(off_df),
+        off_df,
         (F.col("_pid") == F.col("_opid"))
         & F.col(group_col).eqNullSafe(F.col("_og")),
     )

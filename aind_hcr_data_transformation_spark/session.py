@@ -24,9 +24,10 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Broadcast threshold: dims like region/nation/supplier stay broadcast
-    # even at sf 100; AQE upgrades sort-merge → broadcast when a side turns
-    # out small at runtime.
+    # Broadcast threshold: size estimates choose every broadcast (small
+    # local relations come from local_frame, which carries its size); AQE
+    # upgrades sort-merge → broadcast when a side turns out small at run
+    # time. A hint stays only where it changes the plan (`# bounded:`).
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Arrow for every pandas_udf / mapInPandas / toPandas crossing.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -209,14 +210,14 @@ def apply_session_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str | T.StructType) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for a small in-process
-    list, sent as one Arrow table so it plans as a JVM-only
+    list, sent as one Arrow table so it plans as a JVM-only sized
     ``LocalTableScan`` — a Python list plans as a Python-deserialised RDD
-    whose every task starts a Python worker (~0.2 s of CPU each)."""
+    with no size statistic whose every task starts a Python worker."""
     import pyarrow as pa
 
-    struct = T.StructType.fromDDL(schema)
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
     cols = list(zip(*rows)) or [()] * len(struct.fields)
     table = pa.table({n: list(c) for n, c in zip(struct.names, cols)})
     return spark.createDataFrame(table, struct)

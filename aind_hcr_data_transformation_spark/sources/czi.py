@@ -261,7 +261,8 @@ def synthetic_stack_blocks(
 ) -> DataFrame:
     """End-to-end synthetic source: catalog → 3-D block index →
     distributed ramp reads. The test/bench twin of a real CZI directory."""
-    stacks = spark.createDataFrame(
+    stacks = local_frame(
+        spark,
         [(s, z_extent, y, x) for s in stack_names],
         "stack_name string, z_extent int, y_extent int, x_extent int",
     )

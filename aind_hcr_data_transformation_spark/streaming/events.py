@@ -383,7 +383,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_mktsegment"
     )
     joined = events.join(
-        F.broadcast(cust), events.user_id == cust.c_custkey, "inner"
+        cust, events.user_id == cust.c_custkey, "inner"
     )
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -696,7 +696,7 @@ def stream_static_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
     )
     orphans = events.join(
-        F.broadcast(cust), events.user_id == cust.c_custkey, "left_anti"
+        cust, events.user_id == cust.c_custkey, "left_anti"
     ).select("event_id", "user_id", "event_type")
     table = _run_to_memory_sink(orphans, "stream_anti", "append")
     return (

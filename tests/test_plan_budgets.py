@@ -14,6 +14,9 @@ operator counts.
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -241,3 +244,44 @@ def test_shuffle_budget(spark, name):
     census = count_exchanges(registry[name](spark, "/root/testdata/sf0.001"))
     assert census["shuffles"] <= max_shuffles, census
     assert census["broadcasts"] >= min_broadcasts, census
+
+
+PKG = Path(entrymod.__file__).resolve().parent / "aind_hcr_data_transformation_spark"
+
+
+def test_every_broadcast_hint_states_its_bound():
+    """The planner's size estimates choose broadcasts; a hint stays only
+    where it changes a plan, with a ``# bounded:`` comment on its line
+    or the line above saying why its side stays small."""
+    bare = []
+    for path in sorted(PKG.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "F.broadcast(" in line and not any(
+                "# bounded:" in near for near in lines[max(i - 1, 0) : i + 1]
+            ):
+                bare.append(f"{path.relative_to(PKG)}:{i + 1}")
+    assert not bare, bare
+
+
+def test_local_relations_come_from_local_frame():
+    """``session.local_frame`` is the one ``createDataFrame`` caller: a
+    list-built frame plans as ``Scan ExistingRDD``, which has no size
+    statistic (so the planner never broadcasts it) and starts a Python
+    worker per task."""
+    callers = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner: dict[int, str] = {}
+        for node in ast.walk(tree):  # breadth first: outermost def wins
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for sub in ast.walk(node):
+                    owner.setdefault(id(sub), node.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                callers.append(f"{path.relative_to(PKG)}:{owner.get(id(node))}")
+    assert callers == ["session.py:local_frame"], callers

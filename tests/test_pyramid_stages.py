@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import re
 from contextlib import contextmanager
+from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
@@ -32,6 +33,7 @@ from aind_hcr_data_transformation_spark.sinks.zarr_sink import (
 )
 from aind_hcr_data_transformation_spark.sources.czi import synthetic_ramp_block
 from aind_hcr_data_transformation_spark.sources.zisraw import write_czi
+from tools.plan_audit import executions
 
 #: 2 stacks, 3 levels, odd edge extents on every axis
 STACKS = {"a": (40, 48, 36), "b": (33, 32, 50)}
@@ -70,22 +72,15 @@ def _tree(root: str) -> dict[str, bytes]:
     }
 
 
-def _executions(spark) -> list:
-    """SQL executions in the session's status store, listener bus drained."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return [execs.apply(i) for i in range(execs.size())]
-
-
 def _plans_of(spark, run) -> list[str]:
     """Final physical plan trees of the SQL executions ``run()`` starts."""
-    seen = {e.executionId() for e in _executions(spark)}
+    seen = {e.executionId() for e in executions(spark)}
     run()
     return [
         # the tree ends at the first blank line; the final (adaptive)
         # plan comes before the initial one
         e.physicalPlanDescription().split("\n\n")[0].split("== Initial Plan ==")[0]
-        for e in _executions(spark)
+        for e in executions(spark)
         if e.executionId() not in seen
     ]
 
@@ -202,3 +197,27 @@ def test_local_frame_types_rows_and_empty(spark):
     assert _scans(tree) == {"LocalTableScan"}
     empty = local_frame(spark, [], ddl)
     assert empty.schema == df.schema and empty.count() == 0
+
+    # a run-time StructType (grouped offsets), a NULL key in a string
+    # column (a label dim with a NULL member) and an array<double>
+    # column (a codebook) keep the list form's schema and rows too
+    from pyspark.sql import types as T
+
+    struct = T.StructType(
+        [
+            T.StructField("_opid", T.IntegerType(), False),
+            T.StructField("_og", T.DecimalType(12, 2), True),
+        ]
+    )
+    cases = [
+        ([(0, Decimal("1.50")), (1, None)], struct),
+        ([("1-URGENT", "expedite"), (None, "unclassified")], "k string, tier string"),
+        ([(0, [0.25, -1.5]), (1, [])], "cluster bigint, cemb array<double>"),
+    ]
+    for rows, schema in cases:
+        df = local_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert df.schema == want.schema
+        assert [tuple(r) for r in df.collect()] == rows
+        (tree,) = _plans_of(spark, df.collect)
+        assert _scans(tree) == {"LocalTableScan"}

@@ -50,13 +50,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.skew_probe import run_registry_differential  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events embeddings"
@@ -157,96 +158,9 @@ def main() -> int:
             else:
                 nulled = build_fixture(src, dst, mutation)
             print(f"[{mutation}] fixture: {dst} ({nulled} mutated rows)", flush=True)
-            # chunked fresh processes, the strict_sweep lesson: a single
-            # 220-query process can die on one transient DuckDB
-            # bad_alloc (observed here too — rc -11 with no record
-            # written) and lose the whole stage
-            import __spark_entry__ as entrymod
-
-            names = list(entrymod.queries())
-            recs: dict = {}
-            rc_crashed: list[int] = []  # every crashed chunk's rc
-            chunk = 40
-            for ci in range(0, len(names), chunk):
-                record = os.path.join(dst, f"record_{ci}.json")
-                proc = subprocess.run(
-                    [
-                        sys.executable,
-                        "tools/oracle_check.py",
-                        dst,
-                        "--json",
-                        record,
-                        *names[ci : ci + chunk],
-                    ],
-                    cwd=REPO,
-                    capture_output=True,
-                    text=True,
-                )
-                sys.stdout.write(
-                    "\n".join(
-                        l
-                        for l in proc.stdout.splitlines()
-                        if l.startswith(("FAIL", "ERR"))
-                    )
-                )
-                if proc.returncode not in (0, 1):
-                    # crashed chunk: record EVERY crash rc (r8 advisor:
-                    # keeping only the last misreported multi-chunk crash
-                    # patterns); per-query failures in the chunk's
-                    # partial record still merge below
-                    rc_crashed.append(proc.returncode)
-                    print(
-                        f"[{mutation}] chunk {ci//chunk}: rc {proc.returncode}",
-                        flush=True,
-                    )
-                if os.path.exists(record):
-                    part = json.load(open(record))
-                    recs.update(
-                        {k: v for k, v in part.items() if not k.startswith("_")}
-                    )
-            def _failed(recset):
-                return [
-                    k
-                    for k, v in recset.items()
-                    if not k.startswith("_")
-                    and isinstance(v, dict)
-                    and not (
-                        v.get("rows_match")
-                        and v.get("schema_match")
-                        and v.get("hash_match") is not False
-                    )
-                ]
-
-            # retry failures AND missing names individually in fresh
-            # processes: DuckDB's buffer pool degrades over a 40-query
-            # chunk and throws transient bad_allocs (ivfpq_search hit
-            # this three times in r8, green alone every time), and a
-            # crashed chunk (rc -11) writes no record at all — its
-            # queries land in "missing" and deserve the same retry; a
-            # genuine mismatch fails again
-            missing0 = [n for n in names if n not in recs]
-            for name in _failed(recs) + missing0:
-                record = os.path.join(dst, f"retry_{name}.json")
-                subprocess.run(
-                    [
-                        sys.executable,
-                        "tools/oracle_check.py",
-                        dst,
-                        "--json",
-                        record,
-                        name,
-                    ],
-                    cwd=REPO,
-                    capture_output=True,
-                    text=True,
-                )
-                if os.path.exists(record):
-                    part = json.load(open(record))
-                    if name in part:
-                        print(f"[{mutation}] retried {name}", flush=True)
-                        recs[name] = part[name]
-            failures = _failed(recs)
-            missing = [n for n in names if n not in recs]
+            recs, failures, missing, rc_crashed = run_registry_differential(
+                dst, mutation
+            )
             any_fail = (
                 any_fail or bool(failures) or bool(rc_crashed) or bool(missing)
             )
