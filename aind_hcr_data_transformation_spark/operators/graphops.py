@@ -374,16 +374,18 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum(w) / count(*): long/long → one IEEE double division, and
     # w >= mw compares w cast to double — replicated exactly (ints
     # < 2^53 convert exactly)
-    mw = float(sum(w for _s, _d, w in weights)) / float(len(weights))
+    mw = float(sum(w for _s, _d, w in weights)) / max(len(weights), 1)
     edges = [(s, d) for s, d, w in weights if float(w) >= mw]
     # min_by(src, struct(-out_w, src)): max total out-weight, ties →
-    # smallest src
+    # smallest src; with no edges between nations (a truncated slice)
+    # there is no seed and every nation is unreached, as the oracle's
+    # NULL seed leaves it
     outs: dict = {}
     for s, _d, w in weights:
         outs[s] = outs.get(s, 0) + w
-    seed = min(outs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+    seed = min(outs.items(), key=lambda kv: (-kv[1], kv[0]), default=(None, 0))[0]
     # frontier relaxation: d'(v) = min(d(v), min over u→v of d(u)+1)
-    dist = {seed: 0}
+    dist = {} if seed is None else {seed: 0}
     for _ in range(_BFS_ITERS):
         nxt = dict(dist)
         for u, v in edges:

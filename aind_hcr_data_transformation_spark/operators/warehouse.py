@@ -510,9 +510,10 @@ def rec_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
+    # typed: with no interactions the empty literal would be map<void,void>
     norm_map = F.create_map(
         *[x for r in norm_rows for x in (F.lit(r["brand"]), F.lit(r["sn"]))]
-    )
+    ).cast("map<string,double>")
     a = inter.select("cust", F.col("brand").alias("brand_a"), F.col("cnt").alias("ca"))
     b = inter.select("cust", F.col("brand").alias("brand_b"), F.col("cnt").alias("cb"))
     dots = (

@@ -58,6 +58,12 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.ui.retainedJobs": "50",
     "spark.ui.retainedStages": "50",
     "spark.ui.retainedTasks": "500",
+    # Python workers fork from this daemon: PySpark's stock one, except that
+    # the per-task importlib.invalidate_caches() skips re-reading zip
+    # archives that have not changed (pyspark.zip, the spark-core jar: a
+    # re-read costs 0.12-0.25 s of CPU per task). Static: a driver-provided
+    # session keeps the stock daemon.
+    "spark.python.daemon.module": "aind_hcr_data_transformation_spark.pydaemon",
 }
 
 
@@ -117,6 +123,20 @@ def _merged_java_options(role: str, extra_conf: dict[str, str] | None) -> str:
     return " ".join([_CODE_CACHE_FLAGS, *existing])
 
 
+# Directory holding this package. Workers start in the driver's cwd, so
+# without it on their path neither the daemon module nor a ``mapInArrow``
+# of a package function imports when the driver runs outside the checkout.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _merged_worker_pythonpath(extra_conf: dict[str, str] | None) -> str:
+    """Deployment-supplied ``spark.executorEnv.PYTHONPATH`` (spark-defaults.conf,
+    then the caller's ``extra_conf``) followed by the package root."""
+    key = "spark.executorEnv.PYTHONPATH"
+    parts = [_defaults_conf_value(key), (extra_conf or {}).get(key), _PACKAGE_ROOT]
+    return os.pathsep.join(p for p in parts if p)
+
+
 def get_spark(
     app_name: str = "aind-hcr-spark",
     master: str | None = None,
@@ -144,6 +164,9 @@ def get_spark(
         "spark.executor.extraJavaOptions",
         _merged_java_options("executor", extra_conf),
     )
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", _merged_worker_pythonpath(extra_conf)
+    )
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER_URL"):
@@ -152,8 +175,8 @@ def get_spark(
     if extra_conf:
         confs.update(extra_conf)
     for k, v in confs.items():
-        if k.endswith(".extraJavaOptions"):
-            continue  # already merged with the code-cache flags above
+        if k.endswith(".extraJavaOptions") or k == "spark.executorEnv.PYTHONPATH":
+            continue  # already merged above
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return spark

@@ -222,3 +222,36 @@ def test_kmv_distinct_keeps_the_null_group(spark, tmp_path):
         .count()
     )
     assert len(rows) == n_types + 1  # + the merged 'ALL' union sketch
+
+
+def test_tiny_slice_queries_match_their_oracles(spark, queries, tmp_path):
+    """NULL probe ``tiny`` stage: on the truncated slice no line item
+    joins a kept order, so there are no trade edges and no customer×brand
+    counts. The oracle then reports every nation unreached (hops -1) and
+    no brand pairs; the Spark twins divided by a zero edge count and
+    typed an empty norm map as ``map<void,void>``."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+    from conftest import SF_DIR
+
+    import __spark_entry__ as entrymod
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from null_probe import build_tiny_fixture
+
+    build_tiny_fixture(SF_DIR, str(tmp_path))
+    con = duckdb.connect()
+    for t in ("nation", "customer", "supplier", "part", "orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    for name in ("graph_bfs_hops", "rec_item_cosine"):
+        df = queries[name](spark, str(tmp_path))
+        got = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+        rel = con.sql(entrymod.oracle_sql()[name])
+        want = sorted(con.sql(
+            f"SELECT {', '.join(sorted(rel.columns))} FROM rel"
+        ).fetchall())
+        assert got == want, name

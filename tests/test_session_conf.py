@@ -11,6 +11,8 @@ from aind_hcr_data_transformation_spark.session import (
     _CODE_CACHE_FLAGS,
     _defaults_conf_value,
     _merged_java_options,
+    _merged_worker_pythonpath,
+    _PACKAGE_ROOT,
 )
 
 
@@ -59,3 +61,13 @@ def test_merge_combines_defaults_and_caller(tmp_path, monkeypatch):
         "driver", {"spark.driver.extraJavaOptions": "-Db=2"}
     )
     assert merged == f"{_CODE_CACHE_FLAGS} -Da=1 -Db=2"
+
+
+def test_worker_pythonpath_appends_package_root(tmp_path, monkeypatch):
+    conf = tmp_path / "spark-defaults.conf"
+    conf.write_text("spark.executorEnv.PYTHONPATH /deploy/site\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    merged = _merged_worker_pythonpath(
+        {"spark.executorEnv.PYTHONPATH": "/srv/libs"}
+    )
+    assert merged.split(os.pathsep) == ["/deploy/site", "/srv/libs", _PACKAGE_ROOT]
