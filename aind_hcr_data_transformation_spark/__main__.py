@@ -65,12 +65,9 @@ def main(argv: list[str] | None = None) -> int:
         import os
 
         from .pipeline import convert_czi_stacks, stack_is_complete
-        from .sources.czi import stack_catalog
+        from .sources.czi import list_stacks
 
-        stacks = [
-            (r["path"], r["stack_name"])
-            for r in stack_catalog(spark, settings.input_source).collect()
-        ]
+        stacks = list_stacks(settings.input_source)
         if not stacks:
             print(
                 json.dumps(
@@ -86,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
         # across cores — no per-stack straggler)
         todo = {
             name: path
-            for path, name in stacks
+            for name, path in stacks.items()
             if not stack_is_complete(
                 os.path.join(settings.output_directory, f"{name}.zarr")
             )

@@ -20,11 +20,13 @@ Because block offsets are multiples of the base chunk (divisible by the
 factor), per-block trimming of the final edge block equals the global
 trim — no halo exchange needed.
 
-Arrow-native levels: :func:`downsample_blocks` and every level of the
-conversion pyramid (``pipeline._convert_pyramid``) are ONE ``mapInArrow``
-each — payloads read zero-copy from Arrow buffers, pooled tiles leave as
-record batches under a 128 MiB flush budget (Arrow binary columns carry
-a 2 GiB offset cap).  Re-tiling onto the base chunk grid starts no
+Arrow-native levels: every level of the conversion pyramid
+(``pipeline._convert_pyramid``, the one caller of these kernels) is ONE
+``mapInArrow`` that writes its tiles and pools them with
+:func:`pool_batches` — payloads read zero-copy from Arrow buffers
+(:func:`block_tiles`), pooled tiles leave as record batches under a
+128 MiB flush budget (Arrow binary columns carry a 2 GiB offset cap).
+Re-tiling onto the base chunk grid starts no
 Python runner of its own (:func:`chunk_sorted` exchanges and sorts in the
 JVM, :func:`assemble_chunks` stitches inside the consuming task): each
 runner costs ~0.2 s of CPU to start (SCALING.md, "Known bounded worst
@@ -41,7 +43,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.czi import BLOCK_SCHEMA, _block_arrow_schema
+from ..sources.czi import _block_arrow_schema
 
 #: Arrow twin of BLOCK_SCHEMA for the mapInArrow paths.
 _BLOCK_ARROW = _block_arrow_schema()
@@ -100,29 +102,6 @@ def windowed_mean_nd(
     if preserve_dtype:
         return mean.astype(arr.dtype)
     return mean
-
-
-def downsample_blocks(
-    blocks: DataFrame,
-    scale_factor: tuple[int, int, int] = (2, 2, 2),
-    block_shape: tuple[int, int, int] = (128, 128, 128),
-) -> DataFrame:
-    """One pyramid level over block rows (schema
-    ``sources.czi.BLOCK_SCHEMA``): each block reduces independently and
-    its offsets divide by the factor. No shuffle — wall-clock is one
-    scan of the level (the property that makes the cascade cheap at
-    100 TB)."""
-    for b, f, ax in zip(block_shape, scale_factor, "zyx"):
-        if b % f != 0:
-            raise ValueError(
-                f"block {ax} extent {b} must be divisible by factor {f} so "
-                "blocks downsample independently (SURVEY §7 hard-part 4)"
-            )
-
-    return blocks.mapInArrow(
-        lambda batches: pool_batches(block_tiles(batches), scale_factor),
-        BLOCK_SCHEMA,
-    )
 
 
 def block_tiles(batches: Iterable[pa.RecordBatch]) -> Iterator[Tile]:

@@ -17,8 +17,10 @@ Two Spark forms, both provided:
 * :func:`downsample_relational` — ``groupBy(floor(z/s), …).avg()`` — the
   correctness reference; a plain partial+final hash aggregate, shuffles one
   row per output voxel, no halo constraints, works for any factor/extent.
-* :func:`downsample_blocks` (in ``operators/blockwise.py``) — Arrow-batched
-  numpy reduce per block for the dense-array fast path.
+* the dense-array fast path — ``blockwise.pool_batches``, a numpy reduce
+  per tile inside each fused level task of ``pipeline._convert_pyramid``
+  (``tests/test_downsample.py`` pins the converter's level 1 to the
+  relational form).
 
 The multi-level cascade (level k+1 from level k, never from level 0 —
 ``czi_to_zarr.py:623-653``) is :func:`pyramid_relational`, a driver loop

@@ -508,7 +508,9 @@ def grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf.groupby("user_id")["value"]
+        # dropna=False: the NULL users form one group, as under the
+        # oracle's PARTITION BY user_id
+        g = pdf.groupby("user_id", dropna=False)["value"]
         m = g.transform("mean")
         s = g.transform("std")  # ddof=1 == stddev_samp
         # SQL semantics for degenerate groups (r8 tiny-fixture probe): a

@@ -32,6 +32,7 @@ cases"), so no stage starts one it could leave to the JVM.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -108,16 +109,18 @@ def _convert_pyramid(
     paths: dict[str, str] | None = None,
     fault=None,
 ) -> dict[str, str]:
-    """Fused leveled pyramid write (the engine core shared by both
-    converters): one Spark job, one action; each stage writes level k
+    """Fused leveled pyramid write (the engine core behind every
+    converter): one Spark job, one action; each stage writes level k
     for every still-alive stack AND emits the pooled level k+1 tiles.
 
     ``fault`` (None in production) is the chaos hook behind
-    ``tools/chaos_probe.py``: called as ``fault(level, stack_name)``
-    after every region write inside the task, so the probe can kill
-    first task attempts mid-write and assert the retried job's arrays
-    are byte-equal to a clean run's (the idempotence contract the
-    paragraph below claims).
+    ``tools/chaos_probe.py``: called as ``fault(n)`` after each region
+    write inside a task (``n`` = the task's region writes so far) and
+    as ``fault("pre_shard", n)`` after its last chunk write, before its
+    checksum shards — so the probe can kill first task attempts
+    mid-write or in the chunks-durable / manifest-absent window and
+    assert the retried job's trees are byte-equal to a clean run's (the
+    idempotence contract the paragraph below claims).
 
     Group nodes and ``.zattrs`` must already exist; level arrays are
     initialized here (driver) and their metas ship to tasks via the
@@ -235,8 +238,10 @@ def _convert_pyramid(
             # per-array chunk digests, flushed as ONE manifest shard per
             # (task, array) after all of this task's chunks are durable
             digests: dict[str, dict[str, str]] = {}
+            n_written = 0
 
             def written(tiles):
+                nonlocal n_written
                 for name, t, c, origin, arr in tiles:
                     write_region(
                         os.path.join(_out, f"{name}.zarr", _lvl),
@@ -245,8 +250,9 @@ def _convert_pyramid(
                         meta=_metas[name],
                         record=digests.setdefault(name, {}),
                     )
+                    n_written += 1
                     if _fault is not None:
-                        _fault(_lvl, name)
+                        _fault(n_written)
                     if name in _pool:
                         yield name, t, c, origin, arr
 
@@ -256,6 +262,8 @@ def _convert_pyramid(
                 else assemble_chunks(block_tiles(batches), base_chunk)
             )
             yield from pool_batches(written(tiles), (fz, fy, fx))
+            if _fault is not None:
+                _fault("pre_shard", n_written)
             for name, rec in digests.items():
                 write_checksum_shard(os.path.join(_out, f"{name}.zarr", _lvl), rec)
 
@@ -292,11 +300,11 @@ def convert_czi_stack(
     from .sources.zisraw import stack_info
 
     name = stack_name or os.path.splitext(os.path.basename(path))[0]
-    (z, y, x), dtype = stack_info(path)
-    return convert_synthetic_stack(
-        spark, settings, name, z, y, x,
-        voxel_size=voxel_size, origin=origin, dtype=dtype, source_path=path,
-    )
+    shape, dtype = stack_info(path)
+    return _convert_stacks(
+        spark, settings, {name: shape}, dtype, voxel_size, False,
+        paths={name: path}, origin=origin,
+    )[name]
 
 
 def convert_synthetic_stack(
@@ -309,58 +317,13 @@ def convert_synthetic_stack(
     voxel_size: tuple[float, float, float] = (1.0, 1.0, 1.0),
     origin: tuple[float, float, float] | None = None,
     dtype: str = "uint16",
-    source_path: str | None = None,
 ) -> str:
-    """Convert one stack to a multiscale OME-Zarr group and return the
-    group path. Level-0 voxels come from the deterministic ramp, or —
-    when ``source_path`` points at a CZI file (see
-    :func:`convert_czi_stack`) — from the codec slab read."""
-    cz, cy, cx = settings.chunk_size
-    fz, fy, fx = settings.scale_factor
-    # clamp BEFORE metadata: .zattrs must list only levels that get written
-    n_lvls = pyramid_depth(
-        (z_extent, y, x), (fz, fy, fx), settings.downsample_levels
-    )
-
-    group_path = os.path.join(settings.output_directory, f"{stack_name}.zarr")
-    init_group(group_path)
-
-    # ome/ngff metadata first (same order as czi_to_zarr.py:562-576)
-    shape5 = (1, 1, z_extent, y, x)
-    chunk5 = (1, 1, cz, cy, cx)
-    minmax = dtype_minmax(dtype)
-    attrs = {
-        "omero": build_omero(
-            shape5,
-            stack_name,
-            channel_names=[stack_name],
-            channel_minmax=[minmax],
-            # fixed display window, czi_to_zarr.py:553-555
-            channel_startend=[(0.0, 550.0)],
-        ),
-        **build_multiscales(
-            shape5,
-            chunk5,
-            stack_name,
-            n_lvls,
-            (fz, fy, fx),
-            voxel_size,
-            origin=origin,
-        ),
-    }
-    validate_multiscales(attrs)
-    write_attrs(group_path, attrs)
-
-    # constant base chunk at EVERY level (clamped to the level shape),
-    # matching the reference's create_dataset(chunks=final_chunksize)
-    # at czi_to_zarr.py:630-640 — chunks never shrink with the pyramid;
-    # the fused one-job pyramid writer does the rest
-    _convert_pyramid(
-        spark, settings, {stack_name: (z_extent, y, x)}, dtype,
-        paths={stack_name: source_path} if source_path else None,
-    )
-    _mark_complete(group_path)
-    return group_path
+    """Convert one deterministic-ramp stack to a multiscale OME-Zarr
+    group and return the group path."""
+    return _convert_stacks(
+        spark, settings, {stack_name: (z_extent, y, x)}, dtype, voxel_size,
+        False, paths=None, origin=origin,
+    )[stack_name]
 
 
 #: stack-completion sentinel (the Hadoop ``_SUCCESS`` convention): written
@@ -462,11 +425,24 @@ def _convert_stacks(
     voxel_size: tuple[float, float, float],
     resume: bool,
     paths: dict[str, str] | None,
+    origin: tuple[float, float, float] | None = None,
 ) -> dict[str, str]:
+    """The one conversion path behind the four public converters:
+    ``.zattrs`` for every stack still to do, then the fused pyramid
+    (:func:`_convert_pyramid`), then each stack's ``_SUCCESS``.
+    ``origin`` (single-stack converters only) shifts the multiscales
+    translations."""
     cz, cy, cx = settings.chunk_size
     fz, fy, fx = settings.scale_factor
     n_lvls = settings.downsample_levels
     out_dir = settings.output_directory
+    if urlparse(out_dir).scheme == "memory":
+        # MemoryStore is process-local: chunks written inside Spark
+        # python workers would land in worker dicts and silently vanish
+        raise ValueError(
+            "memory:// stores are driver-side test doubles and cannot back "
+            "a distributed write; use a file:// or object-store URL"
+        )
 
     group_paths: dict[str, str] = {}
     todo: dict[str, tuple[int, int, int]] = {}
@@ -477,14 +453,13 @@ def _convert_stacks(
             continue
         todo[name] = (z, y, x)
 
-    shapes: dict[str, list[int]] = {}
+    minmax = dtype_minmax(dtype)
     for name, (z, y, x) in todo.items():
         group = group_paths[name]
-        shapes[name] = [1, 1, z, y, x]
         init_group(group)
-        minmax = dtype_minmax(dtype)
-        # per-stack clamp: a small stack's .zattrs lists only the levels
-        # its own floor pyramid reaches (matches the write loop's filter)
+        # ome/ngff metadata first (same order as czi_to_zarr.py:562-576);
+        # per-stack clamp BEFORE it: a small stack's .zattrs lists only
+        # the levels its own floor pyramid reaches (the write loop's filter)
         stack_lvls = pyramid_depth((z, y, x), (fz, fy, fx), n_lvls)
         attrs = {
             "omero": build_omero(
@@ -492,18 +467,22 @@ def _convert_stacks(
                 name,
                 channel_names=[name],
                 channel_minmax=[minmax],
+                # fixed display window, czi_to_zarr.py:553-555
                 channel_startend=[(0.0, 550.0)],
             ),
             **build_multiscales(
                 (1, 1, z, y, x), (1, 1, cz, cy, cx), name, stack_lvls,
-                (fz, fy, fx), voxel_size,
+                (fz, fy, fx), voxel_size, origin=origin,
             ),
         }
         validate_multiscales(attrs)
         write_attrs(group, attrs)
 
     if todo:
-        # the fused one-job pyramid writer (per-stack depth clamp included)
+        # the fused one-job pyramid writer (per-stack depth clamp
+        # included); chunks never shrink with the pyramid — the constant
+        # base chunk at every level, like the reference's
+        # create_dataset(chunks=final_chunksize), czi_to_zarr.py:630-640
         _convert_pyramid(
             spark,
             settings,

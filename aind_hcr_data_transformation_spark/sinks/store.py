@@ -67,8 +67,8 @@ class MemoryStore:
 
     Not visible across Spark python workers — use it for driver-side unit
     tests of the sink's store discipline, not distributed writes (the
-    distributed writer rejects ``memory://`` outright, see
-    ``zarr_sink.write_blocks_to_zarr``).
+    converters reject a ``memory://`` output directory before writing
+    anything, see ``pipeline._convert_stacks``).
 
     ``read_counts`` tallies ``read_bytes`` calls per key so tests can
     assert I/O discipline (e.g. the ``.zarray`` metadata cache).

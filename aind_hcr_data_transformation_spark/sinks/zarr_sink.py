@@ -499,93 +499,3 @@ def read_array(url: str, verify: bool | str = "auto") -> np.ndarray:
         tile = np.frombuffer(raw, dtype=dtype).reshape(tuple(chunks))
         out[sl] = tile[tuple(slice(0, s.stop - s.start) for s in sl)]
     return out
-
-
-def write_blocks_to_zarr(
-    blocks,  # DataFrame of sources.czi.BLOCK_SCHEMA rows
-    array_url: str,
-    shape: tuple[int, ...],
-    chunks: tuple[int, ...],
-    dtype: str,
-    compressor: str = "zlib",
-    compressor_kwargs: dict[str, Any] | None = None,
-    fault=None,
-) -> int:
-    """Distributed write: every block row lands in its region; one Spark
-    action replaces the reference's sequential block loop
-    (``zarr_writer.py:188-213``), the scheduler bounding concurrency
-    instead of hand-serialization. Returns the number of blocks written.
-
-    Retry idempotence: a retried task re-derives the same chunk keys
-    from the same block rows and re-writes byte-identical compressed
-    chunks (chunk-aligned regions never shared across rows), so a task
-    killed mid-region leaves only chunks its retry overwrites —
-    exactly-once OUTPUT without any coordination. ``fault`` (None in
-    production) is the chaos hook: called as ``fault(rows_written)``
-    after every region write inside the task, it lets
-    ``tools/chaos_probe.py`` kill first attempts mid-flight and assert
-    the retried job's array is byte-equal to a clean run's.
-
-    Implemented as an Arrow ``mapInArrow`` side-effect writer, NOT
-    ``foreachPartition``: the latter funnels rows through the RDD pickle
-    path, where the JVM pickler buffers every multi-MB block payload and
-    OOMs on large stacks (observed at 512³). Arrow streams the binary
-    column, and each payload is read zero-copy straight from the Arrow
-    buffer (``as_buffer`` → ``np.frombuffer``) — no per-block Python
-    bytes object, no pandas frame. The array metadata just built on the
-    driver ships to every task via the closure, so workers never GET
-    ``.zarray``."""
-    if array_url.startswith("memory://"):
-        # MemoryStore is process-local: chunks written inside Spark
-        # python workers would land in worker dicts and silently vanish.
-        raise ValueError(
-            "memory:// stores are driver-side test doubles and cannot back "
-            "a distributed write; use a file:// or object-store URL"
-        )
-    meta = init_array(array_url, shape, chunks, dtype, compressor, compressor_kwargs)
-
-    def write_batches(batches: Iterable[Any]) -> Any:
-        import pyarrow as pa
-
-        n = 0
-        digests: dict[str, str] = {}
-        for batch in batches:
-            block_col = batch.column("block")
-            shapes = batch.column("shape").to_pylist()
-            dtypes = batch.column("dtype").to_pylist()
-            t_col = batch.column("t").to_pylist()
-            c_col = batch.column("c").to_pylist()
-            z0 = batch.column("z0").to_pylist()
-            y0 = batch.column("y0").to_pylist()
-            x0 = batch.column("x0").to_pylist()
-            for i in range(batch.num_rows):
-                arr = np.frombuffer(
-                    block_col[i].as_buffer(), dtype=np.dtype(dtypes[i])
-                ).reshape(tuple(shapes[i]))
-                write_region(
-                    array_url,
-                    (t_col[i], c_col[i], z0[i], y0[i], x0[i]),
-                    arr,
-                    meta=meta,
-                    record=digests,
-                )
-                n += 1
-                if fault is not None:
-                    fault(n)
-        # one manifest shard per task, AFTER all its chunks are durable
-        # (a task killed mid-write leaves no shard; its retry re-writes
-        # identical chunks and a complete shard). A death in the
-        # chunks-present / shard-absent window below is likewise
-        # repaired by task retry — proven by the chaos probe's
-        # ``worker_death_manifest_gap`` stage, which injects exactly
-        # that kill through the ``pre_shard`` hook point here.
-        if fault is not None:
-            fault("pre_shard", n)
-        write_checksum_shard(array_url, digests)
-        yield pa.RecordBatch.from_pydict(
-            {"n_written": [n]},
-            schema=pa.schema([("n_written", pa.int64())]),
-        )
-
-    counts = blocks.mapInArrow(write_batches, "n_written long").collect()
-    return int(sum(r.n_written for r in counts))

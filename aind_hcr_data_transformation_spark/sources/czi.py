@@ -1,35 +1,33 @@
-"""CZI stack source: catalog scan → block-index DataFrame → distributed
-slab reads via ``mapInArrow`` (SURVEY §2.1 S1-S7, §3.2 restatement).
+"""CZI stack source: stack listing → block-index DataFrame → slab
+decodes inside the tasks that consume them (SURVEY §2.1 S1-S7, §3.2
+restatement).
 
 The reference reads a CZI stack as sequential z-slabs on one node
 (``czi_block_generator`` ``utils/utils.py:462-526``; threaded subblock
 assembly ``read_slices_czi`` ``utils/utils.py:284-395``). Here the *block
-index* is data (one row per slab), Spark schedules slabs across
+index* is data (one row per tile), Spark schedules tiles across
 executors, and each task keeps the reference's in-task thread pool for
 I/O-bound subblock reads (SURVEY §4 X5 — threads inside the task are not
 Spark's job).
 
-``reader="czifile"`` is the production path: the ``czifile`` package when
-installed (full codec support), else the vendored pure-Python ZISRAW
-reader (:mod:`.zisraw`, uncompressed + zstd subblocks) — real CZI binaries
-decode either way. ``reader="synthetic"`` generates the deterministic
-voxel ramp of FIXTURES.md B2 through the SAME schema/batching path, for
-fixture-free tests and benches of the distributed mechanisms (index,
-shuffle, Arrow batches, sink).
+Tiles are born where they are used: ``pipeline._convert_pyramid`` decodes
+each level-0 tile (:func:`_read_slab_czifile` — the ``czifile`` package
+when installed, else the vendored pure-Python ZISRAW reader
+:mod:`.zisraw`) or generates the deterministic voxel ramp of FIXTURES.md
+B2 (:func:`synthetic_ramp_block`) in the task that writes it. A
+block-row DataFrame of ``BLOCK_SCHEMA`` comes from
+``spark.read.format("stack_blocks")`` (:mod:`.datasource`).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..session import local_frame
 
 #: one row per z-slab block; payload is raw C-order bytes + shape/dtype tag
 #: (BinaryType + tag instead of ArrayType: Spark SQL has no unsigned types,
@@ -75,25 +73,23 @@ def _block_arrow_schema():
     )
 
 
-def stack_catalog(spark: SparkSession, input_dir: str, suffix: str = ".czi") -> DataFrame:
-    """Deterministic stack catalog (``_get_partitioned_list_of_stack_paths``
-    glob+filter+sort, ``zeiss_job.py:42-60``): regular files under
-    ``input_dir`` ending in ``suffix``, lexicographically sorted.
+def list_stacks(input_dir: str, suffix: str = ".czi") -> dict[str, str]:
+    """Stack name → path for the regular files under ``input_dir``
+    ending in ``suffix``, in lexicographic path order — the reference's
+    ``_get_partitioned_list_of_stack_paths`` glob+filter+sort
+    (``zeiss_job.py:42-60``), which prefers the acquisition's ``SPIM/``
+    subdirectory when it exists.
 
-    Driver-side listing mirrors the reference (one directory, thousands of
-    stacks); for object-store scale swap in
-    ``spark.read.format("binaryFile")`` listing with the same output
-    schema."""
-    entries = []
+    A driver-side listing (one directory, thousands of stacks): the CLI
+    and ``StackBlockDataSource`` both use it, so they find identical
+    stacks for one root."""
     root = os.path.join(input_dir, "SPIM")
-    search_dirs = [root if os.path.isdir(root) else input_dir]
-    for d in search_dirs:
-        for name in os.listdir(d):
-            p = os.path.join(d, name)
-            if name.endswith(suffix) and os.path.isfile(p):
-                entries.append((p, os.path.splitext(name)[0], os.path.getsize(p)))
-    schema = "path string, stack_name string, size_bytes long"
-    return local_frame(spark, entries, schema).orderBy("path")
+    search_dir = root if os.path.isdir(root) else input_dir
+    return {
+        os.path.splitext(name)[0]: os.path.join(search_dir, name)
+        for name in sorted(os.listdir(search_dir))
+        if name.endswith(suffix) and os.path.isfile(os.path.join(search_dir, name))
+    }
 
 
 def block_index(
@@ -122,14 +118,11 @@ def block_index(
 
 
 def synthetic_ramp_block(
-    z0: int, z1: int, y0: int | None = None, y1: int | None = None,
-    x0: int | None = None, x1: int | None = None, dtype: str = "uint16"
+    z0: int, z1: int, y0: int, y1: int, x0: int, x1: int, dtype: str = "uint16"
 ) -> np.ndarray:
     """Deterministic voxel ramp v(z,y,x) = (z*1000 + y*10 + x) % 65536
-    (FIXTURES.md B2) for a (z,y,x) tile — closed-form goldens for every
-    test. Two-arg legacy form ``(z0, z1, Y, X)`` means full planes."""
-    if x0 is None:  # legacy (z0, z1, Y, X)
-        y0, y1, x0, x1 = 0, y0, 0, y1
+    (FIXTURES.md B2) for the ``[z0, z1) × [y0, y1) × [x0, x1)`` tile —
+    closed-form goldens for every test."""
     # broadcasting, not meshgrid: meshgrid materializes three full-size
     # int64 grids (24 bytes/voxel of throwaway) and dominated read time
     z = (np.arange(z0, z1, dtype=np.int64) * 1000)[:, None, None]
@@ -192,80 +185,3 @@ def _read_slab_czifile(path: str, z0: int, z1: int) -> np.ndarray:
         for (z, ys, xs), t in tiles.items():
             out[z - z0, ys : ys + t.shape[-2], xs : xs + t.shape[-1]] = t
         return out
-
-
-def read_blocks(
-    index: DataFrame,
-    reader: str = "synthetic",
-    dtype: str = "uint16",
-) -> DataFrame:
-    """Distributed tile read: ``mapInArrow`` over the 3-D block index —
-    each (stack, z0..x1) row becomes a block row with a binary payload.
-
-    One task reads many tiles; payloads never pass through the driver and
-    flow straight to the sink stage (SURVEY §3.2 Spark restatement).
-    Arrow-native like the blockwise/sink stages: one RecordBatch per
-    block (bounds each Arrow batch at one payload so tile size never
-    multiplies into batch memory), no pandas frame in between.
-    """
-    if reader not in ("synthetic", "czifile"):
-        raise ValueError(f"unknown reader {reader!r}")
-
-    import pyarrow as pa
-
-    _BLOCK_ARROW = _block_arrow_schema()
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = batch.to_pylist()  # index rows: tiny scalar columns
-            for row in rows:
-                if reader == "synthetic":
-                    arr = synthetic_ramp_block(
-                        row["z0"], row["z1"], row["y0"], row["y1"],
-                        row["x0"], row["x1"], dtype,
-                    )
-                else:
-                    slab = _read_slab_czifile(row["path"], row["z0"], row["z1"])
-                    arr = slab[
-                        :, row["y0"] : row["y1"], row["x0"] : row["x1"]
-                    ].astype(dtype)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "stack_name": [row["stack_name"]],
-                        "t": [0],
-                        "c": [0],
-                        "z0": [int(row["z0"])],
-                        "z1": [int(row["z1"])],
-                        "y0": [int(row["y0"])],
-                        "y1": [int(row["y1"])],
-                        "x0": [int(row["x0"])],
-                        "x1": [int(row["x1"])],
-                        "shape": [[1, 1, *arr.shape]],
-                        "dtype": [str(arr.dtype)],
-                        "block": [arr.tobytes()],
-                    },
-                    schema=_BLOCK_ARROW,
-                )
-
-    return index.mapInArrow(gen, BLOCK_SCHEMA)
-
-
-def synthetic_stack_blocks(
-    spark: SparkSession,
-    stack_names: list[str],
-    z_extent: int,
-    y: int,
-    x: int,
-    block_shape: tuple[int, int, int] = (128, 128, 128),
-    n_read_partitions: int | None = None,
-) -> DataFrame:
-    """End-to-end synthetic source: catalog → 3-D block index →
-    distributed ramp reads. The test/bench twin of a real CZI directory."""
-    stacks = local_frame(
-        spark,
-        [(s, z_extent, y, x) for s in stack_names],
-        "stack_name string, z_extent int, y_extent int, x_extent int",
-    )
-    idx = block_index(stacks, block_shape)
-    n = n_read_partitions or min(64, max(4, idx.sparkSession.sparkContext.defaultParallelism))
-    return read_blocks(idx.repartition(n))

@@ -36,7 +36,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from .czi import BLOCK_SCHEMA, synthetic_ramp_block
+from .czi import BLOCK_SCHEMA, list_stacks, synthetic_ramp_block
 
 
 @dataclass
@@ -86,25 +86,12 @@ class StackBlockReader(DataSourceReader):
             self.paths: dict[str, str] = {}
             self.extents = {s: (self.z, self.y, self.x) for s in self.stacks}
         elif self.reader == "czi":
-            # driver-side catalog: the SAME listing rules as
-            # stack_catalog (reference zeiss_job.py:42-60 — prefers the
-            # acquisition's SPIM/ subdirectory), so the CLI and this
-            # DataSource find identical stacks for one root
-            import os
-
             from .zisraw import stack_extents
 
             input_dir = options.get("input_dir", "")
             if not input_dir:
                 raise ValueError("reader='czi' requires the input_dir option")
-            root = os.path.join(input_dir, "SPIM")
-            search_dir = root if os.path.isdir(root) else input_dir
-            self.paths = {
-                os.path.splitext(name)[0]: os.path.join(search_dir, name)
-                for name in sorted(os.listdir(search_dir))
-                if name.endswith(".czi")
-                and os.path.isfile(os.path.join(search_dir, name))
-            }
+            self.paths = list_stacks(input_dir)
             if not self.paths:
                 raise ValueError(f"no *.czi stacks under {input_dir}")
             self.extents = {n: stack_extents(p) for n, p in self.paths.items()}

@@ -33,7 +33,7 @@ def test_datasource_reads_tiles(spark):
             continue
         arr = np.frombuffer(r.block, dtype=np.dtype(r.dtype)).reshape(r.shape[-3:])
         got[r.z0 : r.z1, r.y0 : r.y1, r.x0 : r.x1] = arr
-    np.testing.assert_array_equal(got, synthetic_ramp_block(0, 40, 32, 32))
+    np.testing.assert_array_equal(got, synthetic_ramp_block(0, 40, 0, 32, 0, 32))
 
 
 def test_datasource_filter_pushes_to_spark(spark):

@@ -5,7 +5,6 @@ relational-vs-blockwise agreement — pinning SURVEY §7 hard parts 2-4
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra import numpy as hnp
@@ -129,7 +128,7 @@ def test_ramp_fixture_golden():
     """FIXTURES.md B2 geometry: Z=40,Y=X=32, chunk 16, v=(z*1000+y*10+x)%65536."""
     from aind_hcr_data_transformation_spark.sources.czi import synthetic_ramp_block
 
-    arr = synthetic_ramp_block(0, 40, 32, 32)
+    arr = synthetic_ramp_block(0, 40, 0, 32, 0, 32)
     lvl1 = windowed_mean_nd(arr, (2, 2, 2))
     assert lvl1.shape == (20, 16, 16)
     # closed form away from the modulo wrap: mean of the 8 corner values
@@ -139,31 +138,30 @@ def test_ramp_fixture_golden():
     assert lvl2.shape == (10, 8, 8)
 
 
-@pytest.mark.usefixtures("spark")
-def test_relational_matches_blockwise(spark):
-    """The groupBy form (correctness reference) and the mapInPandas block
-    form agree on the ramp fixture, including cascade truncation."""
+def test_relational_matches_blockwise(spark, tmp_path):
+    """The groupBy form (correctness reference) and the converter's
+    blockwise level 1 agree on the ramp fixture, including cascade
+    truncation."""
     import pandas as pd
 
-    from aind_hcr_data_transformation_spark.operators.blockwise import (
-        downsample_blocks,
-    )
+    from aind_hcr_data_transformation_spark.config import ZarrConversionSettings
     from aind_hcr_data_transformation_spark.operators.downsample import (
         downsample_relational,
     )
-    from aind_hcr_data_transformation_spark.sources.czi import (
-        synthetic_stack_blocks,
+    from aind_hcr_data_transformation_spark.pipeline import (
+        convert_synthetic_stacks,
     )
+    from aind_hcr_data_transformation_spark.sinks.zarr_sink import read_array
 
-    blocks = synthetic_stack_blocks(
-        spark, ["s"], z_extent=40, y=32, x=32, block_shape=(16, 16, 16)
+    conv = ZarrConversionSettings(
+        output_directory=str(tmp_path),
+        chunk_size=(16, 16, 16),
+        scale_factor=(2, 2, 2),
+        downsample_levels=2,
     )
-    lvl1_blocks = downsample_blocks(blocks, (2, 2, 2), block_shape=(16, 16, 16))
-    rows = lvl1_blocks.collect()
-    got = np.zeros((20, 16, 16), dtype=np.int64)
-    for r in rows:
-        arr = np.frombuffer(r.block, dtype=np.dtype(r.dtype)).reshape(r.shape[-3:])
-        got[r.z0 : r.z1, r.y0 : r.y1, r.x0 : r.x1] = arr
+    group = convert_synthetic_stacks(spark, conv, {"s": (40, 32, 32)})["s"]
+    got = read_array(f"{group}/1")[0, 0]
+    assert got.shape == (20, 16, 16)
 
     # relational twin over the long-form voxels
     zz, yy, xx = np.meshgrid(

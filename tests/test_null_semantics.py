@@ -255,3 +255,35 @@ def test_tiny_slice_queries_match_their_oracles(spark, queries, tmp_path):
             f"SELECT {', '.join(sorted(rel.columns))} FROM rel"
         ).fetchall())
         assert got == want, name
+
+
+def test_grouped_zscore_keeps_the_null_user_group(spark, queries, tmp_path):
+    """NULL probe ``user_id`` stage: the oracle's ``PARTITION BY
+    user_id`` z-scores all NULL users as one group; the grouped-map
+    body must not drop them (pandas ``groupby`` defaults to
+    ``dropna=True``, which left their zscore NULL)."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+    from conftest import SF_DIR
+
+    import __spark_entry__ as entrymod
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from null_probe import build_fixture
+
+    assert build_fixture(SF_DIR, str(tmp_path), "user_id") > 1
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    want = sorted(con.sql(entrymod.oracle_sql()["grouped_zscore"]).fetchall())
+    null_users = {
+        r[0]
+        for r in con.sql("SELECT event_id FROM events WHERE user_id IS NULL").fetchall()
+    }
+    assert any(z is not None for e, z in want if e in null_users)
+    df = queries["grouped_zscore"](spark, str(tmp_path))
+    got = sorted(tuple(r) for r in df.select("event_id", "zscore").collect())
+    assert got == want

@@ -65,7 +65,7 @@ def test_full_conversion(spark, tmp_path):
     assert lvl1_scale == [1.0, 1.0, 2.0, 1.496, 1.496]
 
     # level 0 bytes: exact ramp
-    golden0 = synthetic_ramp_block(0, 40, 32, 32)
+    golden0 = synthetic_ramp_block(0, 40, 0, 32, 0, 32)
     out0 = read_array(f"{group}/0")
     assert out0.shape == (1, 1, 40, 32, 32)
     np.testing.assert_array_equal(out0[0, 0], golden0)
@@ -97,7 +97,7 @@ def test_conversion_partial_last_slab(spark, tmp_path):
     group = convert_synthetic_stack(
         spark, settings, "odd", z_extent=23, y=16, x=16
     )
-    golden0 = synthetic_ramp_block(0, 23, 16, 16)
+    golden0 = synthetic_ramp_block(0, 23, 0, 16, 0, 16)
     np.testing.assert_array_equal(read_array(f"{group}/0")[0, 0], golden0)
     golden1 = windowed_mean_nd(golden0, (2, 2, 2))
     out1 = read_array(f"{group}/1")
@@ -128,7 +128,7 @@ def test_multi_stack_single_job(spark, tmp_path):
         spark, settings, {"sA": (40, 32, 32), "sB": (23, 16, 16)}
     )
     for name, (z, y, x) in {"sA": (40, 32, 32), "sB": (23, 16, 16)}.items():
-        golden0 = synthetic_ramp_block(0, z, y, x)
+        golden0 = synthetic_ramp_block(0, z, 0, y, 0, x)
         np.testing.assert_array_equal(
             read_array(f"{groups[name]}/0")[0, 0], golden0
         )
@@ -175,7 +175,7 @@ def test_resume_skips_complete_stacks_and_reconverts_partial(
     assert groups2 == groups
     assert os.path.getmtime(untouched_chunk) == mtime_before  # sA skipped
     assert stack_is_complete(groups["sB"])
-    golden = synthetic_ramp_block(0, 32, 16, 16)
+    golden = synthetic_ramp_block(0, 32, 0, 16, 0, 16)
     np.testing.assert_array_equal(
         read_array(f"{groups['sB']}/0")[0, 0], golden
     )

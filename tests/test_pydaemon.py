@@ -112,31 +112,38 @@ def test_task_invalidate_caches_keeps_zip_directories(spark):
 _FOREIGN_CWD_SCRIPT = """
 import sys
 sys.path.insert(0, {repo!r})
+from aind_hcr_data_transformation_spark.config import ZarrConversionSettings
+from aind_hcr_data_transformation_spark.pipeline import convert_synthetic_stacks
 from aind_hcr_data_transformation_spark.session import get_spark
-from aind_hcr_data_transformation_spark.sources.czi import synthetic_stack_blocks
+from aind_hcr_data_transformation_spark.sinks.zarr_sink import read_array
+from aind_hcr_data_transformation_spark.sources.czi import synthetic_ramp_block
 
 spark = get_spark("foreign-cwd", master="local[1]")
-blocks = synthetic_stack_blocks(
-    spark, ["s"], z_extent=8, y=16, x=16, block_shape=(8, 8, 8), n_read_partitions=1
+settings = ZarrConversionSettings(
+    output_directory={out!r}, chunk_size=(8, 8, 8), downsample_levels=2
 )
-print("BLOCKS", blocks.count())
+group = convert_synthetic_stacks(spark, settings, {{"s": (8, 16, 16)}})["s"]
+level0 = read_array(group + "/0")[0, 0]
+print("RAMP", (level0 == synthetic_ramp_block(0, 8, 0, 16, 0, 16)).all())
 spark.stop()
 """
 
 
 def test_workers_import_the_package_from_any_cwd(tmp_path):
     """A driver started outside the checkout (package on the driver's
-    ``sys.path`` only) still runs a ``mapInArrow`` of a package function:
-    the workers find the package through the session's worker path."""
+    ``sys.path`` only) still runs a conversion, whose ``mapInArrow``
+    tasks call package functions: the workers find the package through
+    the session's worker path."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     env["SPARK_LOCAL_DIRS"] = str(tmp_path)
+    script = _FOREIGN_CWD_SCRIPT.format(repo=str(REPO), out=str(tmp_path / "out"))
     proc = subprocess.run(
-        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT.format(repo=str(REPO))],
+        [sys.executable, "-c", script],
         cwd=tmp_path,
         env=env,
         capture_output=True,
         text=True,
         timeout=300,
     )
-    assert "BLOCKS 4" in proc.stdout, proc.stderr[-3000:]
+    assert "RAMP True" in proc.stdout, proc.stderr[-3000:]

@@ -115,15 +115,26 @@ def test_recreated_array_never_served_stale_geometry():
     np.testing.assert_array_equal(read_array(url), data)
 
 
-def test_distributed_writer_rejects_memory_url():
-    from aind_hcr_data_transformation_spark.sinks.zarr_sink import (
-        write_blocks_to_zarr,
+def test_distributed_writer_rejects_memory_url(spark):
+    """A ``memory://`` output directory would send each chunk into the
+    private ``MemoryStore`` of the Python worker that wrote it: the
+    converter must refuse it before writing any group, not finish with
+    a ``_SUCCESS`` over an all-zero level 0."""
+    from aind_hcr_data_transformation_spark.config import ZarrConversionSettings
+    from aind_hcr_data_transformation_spark.pipeline import (
+        convert_synthetic_stacks,
     )
 
+    settings = ZarrConversionSettings(
+        output_directory="memory://bkt/out",
+        chunk_size=(8, 16, 16),
+        downsample_levels=2,
+    )
     with pytest.raises(ValueError, match="memory://"):
-        write_blocks_to_zarr(
-            None, "memory://bucket/arr", (4, 4), (2, 2), "uint16"
-        )
+        convert_synthetic_stacks(spark, settings, {"m": (16, 32, 32)})
+    store, _ = resolve("memory://_")
+    assert not store.exists("bkt/out/m.zarr/.zgroup")
+    assert not store.exists("bkt/out/m.zarr/.zattrs")
 
 
 def test_upload_derivatives_through_memory_store(tmp_path):
@@ -168,7 +179,7 @@ def test_e2e_conversion_through_file_url(spark, tmp_path):
         downsample_levels=2,
     )
     group = convert_synthetic_stack(spark, settings, "urlstack", 16, 16, 16)
-    golden0 = synthetic_ramp_block(0, 16, 16, 16)
+    golden0 = synthetic_ramp_block(0, 16, 0, 16, 0, 16)
     np.testing.assert_array_equal(read_array(f"{group}/0")[0, 0], golden0)
     np.testing.assert_array_equal(
         read_array(f"{group}/1")[0, 0], windowed_mean_nd(golden0, (2, 2, 2))

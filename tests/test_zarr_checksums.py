@@ -168,28 +168,57 @@ def test_digest_is_of_stored_bytes():
 
 
 def test_distributed_writer_emits_manifest(spark, tmp_path):
-    """write_blocks_to_zarr writes one shard per task and the read-back
-    verifies; pipeline conversion covers every pyramid level."""
-    from aind_hcr_data_transformation_spark.sinks.zarr_sink import (
-        write_blocks_to_zarr,
+    """The fused pyramid writer leaves one manifest shard per (level
+    task, array): the shards of a level cover each of its chunks exactly
+    once, their count equals the tasks that wrote chunks (counted by the
+    ``pre_shard`` hook), and every level reads back verified."""
+    from aind_hcr_data_transformation_spark.config import (
+        ZarrConversionSettings,
     )
+    from aind_hcr_data_transformation_spark.pipeline import _convert_pyramid
     from aind_hcr_data_transformation_spark.sources.czi import (
-        block_index,
-        read_blocks,
+        synthetic_ramp_block,
+    )
+    from aind_hcr_data_transformation_spark.operators.blockwise import (
+        windowed_mean_nd,
     )
 
-    catalog = spark.createDataFrame(
-        [("s", 8, 16, 16)],
-        "stack_name string, z_extent int, y_extent int, x_extent int",
+    marks = tmp_path / "tasks"
+    marks.mkdir()
+    marks_dir = str(marks)
+
+    def count_writing_tasks(*args):
+        from pyspark import TaskContext
+
+        if args[0] == "pre_shard" and args[1] > 0:
+            tc = TaskContext.get()
+            name = f"{tc.stageId()}_{tc.partitionId()}_{tc.attemptNumber()}"
+            Path(marks_dir, name).write_text(str(args[1]))
+
+    settings = ZarrConversionSettings(
+        output_directory=str(tmp_path / "out"),
+        chunk_size=(4, 8, 8),
+        scale_factor=(2, 2, 2),
+        downsample_levels=2,
     )
-    blocks = read_blocks(block_index(catalog, (4, 8, 8)))
-    url = str(tmp_path / "dist")
-    n = write_blocks_to_zarr(
-        blocks, url, (1, 1, 8, 16, 16), (1, 1, 4, 8, 8), "uint16"
-    )
-    assert n == 8
-    assert verify_array_checksums(url) == 8
-    read_array(url, verify=True)
+    group = _convert_pyramid(
+        spark, settings, {"s": (16, 32, 32)}, "uint16",
+        fault=count_writing_tasks,
+    )["s"]
+    level0 = synthetic_ramp_block(0, 16, 0, 32, 0, 32)
+    level1 = windowed_mean_nd(level0, (2, 2, 2))
+    n_shards = 0
+    for lvl, n_chunks, want in ((0, 64, level0), (1, 8, level1)):
+        url = os.path.join(group, str(lvl))
+        shards = list(Path(url, CHECKSUM_DIR).glob("*.json"))
+        keys = [k for sh in shards for k in json.loads(sh.read_text())]
+        assert len(keys) == len(set(keys)) == n_chunks
+        assert verify_array_checksums(url) == n_chunks
+        np.testing.assert_array_equal(read_array(url, verify=True)[0, 0], want)
+        n_shards += len(shards)
+    written = [int(p.read_text()) for p in marks.iterdir()]
+    assert n_shards == len(written)
+    assert sum(written) == 64 + 8
 
 
 def test_scrub_group_covers_every_level(spark, tmp_path):

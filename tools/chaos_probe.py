@@ -20,14 +20,21 @@ Until r10 both were tested only under clean conditions
 advisor/verdict named and diffs the recovered output against a clean
 run:
 
-1. ``zarr_task_retry`` — ``write_blocks_to_zarr`` tasks throw on their
-   first attempt AFTER writing a region (partial chunk-file output on
+The four zarr stages run ``pipeline._convert_pyramid`` — the fused
+writer behind every converter — through its ``fault`` hook. Each
+records its injected failures (one marker file per killed first
+attempt) and passes only when at least one fired AND the recovered
+tree is byte-identical to a clean run's (chunks, ``.zarray``, manifest
+shards).
+
+1. ``zarr_task_retry`` — level-0 writer tasks throw on their first
+   attempt AFTER writing a region (partial chunk-file output on
    disk); the job must succeed via Spark task retry (``local[8,3]``)
    and the final chunk TREE must be byte-identical to a clean run's.
-2. ``pyramid_task_retry`` — same kill inside ``_convert_pyramid``'s
-   fused multi-level chain (the engine core): first attempts die
-   mid-level on even partitions at EVERY pyramid level; retried output
-   tree must hash-equal the clean run.
+2. ``pyramid_task_retry`` — same kill across the fused multi-level
+   chain with two stacks: first attempts of even partitions die after
+   a region write at every level whose stage gives them one; retried
+   output tree must hash-equal the clean run.
 3. ``feed_read_retry`` — the broker-shaped feed's ``read()`` dies
    mid-iteration on its first attempt for partition 0 of every
    micro-batch; the parquet sink must end with every event exactly
@@ -66,18 +73,25 @@ run:
    metadata-blind glob a naive consumer would use.
 
 9. ``worker_death_retry`` (r12) — a python WORKER PROCESS hard-dies
-   (``os._exit(137)``) mid-Arrow-batch inside the ``mapInArrow`` write
-   kernel after partial chunk writes — the no-exception, no-cleanup
-   failure the task-kill stages can't produce. Spark task retry must
-   repair to a byte-equal tree; kill marker files prove the deaths
-   actually happened.
+   (``os._exit(137)``) mid-Arrow-batch inside the fused write kernel
+   after partial chunk writes — the no-exception, no-cleanup failure
+   the task-kill stages can't produce. Spark task retry must repair to
+   a byte-equal tree.
+10. ``worker_death_manifest_gap`` (r13) — the worker dies at the
+    ``pre_shard`` hook: chunks durable, checksum shard not yet written.
+    Retry must complete the manifest (byte-equal tree, green scrub);
+    a forged copy with one shard deleted must fail the scrub.
 
 Each stage records ok/fail + detail; the probe exits 1 on any failure.
 
 Usage::
 
     python tools/chaos_probe.py [sf_dir] [--json CHAOS_PROBE.json]
+    python tools/chaos_probe.py [sf_dir] --only STAGE[,STAGE...]
     python tools/chaos_probe.py --child MODE BASE SF_DIR   # internal
+
+``--only`` runs the named stages and merges their results into the
+existing JSON, keeping the other stages' records.
 """
 
 from __future__ import annotations
@@ -105,100 +119,91 @@ from pyspark.sql.datasource import DataSource  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
+def _first_attempt_of_even_partition(args):
+    """The task context when the hook call ``args`` (see
+    ``pipeline._convert_pyramid``: ``(n_written,)`` after each region
+    write) should fire: a FIRST attempt of an even-numbered partition
+    (mixing killed and clean tasks in one stage) with at least one
+    region write done. Named hook points (``"pre_shard"``) never fire
+    here."""
+    from pyspark import TaskContext
+
+    if not args or isinstance(args[0], str) or args[0] < 1:
+        return None
+    tc = TaskContext.get()
+    if tc is None or tc.attemptNumber() != 0 or tc.partitionId() % 2:
+        return None
+    return tc
+
+
+def _mark(marker_dir: str, prefix: str, tc, text: str) -> None:
+    """One marker file per injected failure, named by stage and
+    partition: the failure leaves no in-process trace to assert on."""
+    name = f"{prefix}_s{tc.stageId()}_p{tc.partitionId()}"
+    with open(os.path.join(marker_dir, name), "w") as f:
+        f.write(text)
+
+
 class KillFirstTaskAttempt:
-    """Raise on a task's FIRST attempt after ``after`` side-effect
-    writes, for even-numbered partitions (mixing killed and clean tasks
-    in one stage). Subsequent attempts run clean — pure
-    ``TaskContext.attemptNumber()`` logic, no shared state."""
-
-    def __init__(self, after: int = 1):
-        self.after = after
-
-    def __call__(self, *args) -> None:
-        from pyspark import TaskContext
-
-        if args and isinstance(args[0], str):
-            return  # named hook points are for point-specific injectors
-        tc = TaskContext.get()
-        if tc is None:
-            return
-        n = args[0] if args and isinstance(args[0], int) else self.after
-        if (
-            tc.attemptNumber() == 0
-            and tc.partitionId() % 2 == 0
-            and n >= self.after
-        ):
-            raise RuntimeError(
-                f"chaos: killing attempt 0 of partition "
-                f"{tc.partitionId()} after {n} region writes"
-            )
-
-
-class HardKillWorkerFirstAttempt:
-    """``os._exit(137)`` the PYTHON WORKER PROCESS on a task's first
-    attempt after ``after`` side-effect writes, for even-numbered
-    partitions — the failure class task-kill exceptions can't reach: no
-    exception propagates, no finally blocks run, the Arrow stream just
-    severs mid-batch (what an OOM-killed or preempted worker looks
-    like to the JVM). A marker file per kill proves the path actually
-    fired (os._exit leaves no in-process trace to assert on)."""
-
-    def __init__(self, marker_dir: str, after: int = 1):
-        self.marker_dir = marker_dir
-        self.after = after
-
-    def __call__(self, *args) -> None:
-        from pyspark import TaskContext
-
-        if args and isinstance(args[0], str):
-            return  # named hook points are for point-specific injectors
-        tc = TaskContext.get()
-        if tc is None:
-            return
-        n = args[0] if args and isinstance(args[0], int) else self.after
-        if (
-            tc.attemptNumber() == 0
-            and tc.partitionId() % 2 == 0
-            and n >= self.after
-        ):
-            with open(
-                os.path.join(
-                    self.marker_dir, f"killed_p{tc.partitionId()}"
-                ),
-                "w",
-            ) as f:
-                f.write(str(os.getpid()))
-            os._exit(137)
-
-
-class HardKillWorkerAtManifestGap:
-    """``os._exit(137)`` the python worker at the ``pre_shard`` hook —
-    AFTER a task's last chunk write, BEFORE its checksum-shard PUT (the
-    one window where chunks exist durably with no manifest coverage;
-    r13, VERDICT r12 task 3). Fires only on first attempts of
-    even-numbered partitions. The marker file records how many region
-    writes the task completed, proving the kill's TIMING: a positive
-    count means chunks were already durable when the process died."""
+    """Raise on a task's FIRST attempt after its first region write,
+    for even-numbered partitions; subsequent attempts run clean — pure
+    ``TaskContext.attemptNumber()`` logic, no shared state. A marker
+    file records each kill."""
 
     def __init__(self, marker_dir: str):
         self.marker_dir = marker_dir
 
     def __call__(self, *args) -> None:
-        from pyspark import TaskContext
+        tc = _first_attempt_of_even_partition(args)
+        if tc is None:
+            return
+        _mark(self.marker_dir, "killed", tc, str(args[0]))
+        raise RuntimeError(
+            f"chaos: killing attempt 0 of partition "
+            f"{tc.partitionId()} after {args[0]} region writes"
+        )
 
+
+class HardKillWorkerFirstAttempt:
+    """``os._exit(137)`` the PYTHON WORKER PROCESS on a task's first
+    attempt after its first region write, for even-numbered
+    partitions — the failure class task-kill exceptions can't reach: no
+    exception propagates, no finally blocks run, the Arrow stream just
+    severs mid-batch (what an OOM-killed or preempted worker looks
+    like to the JVM). A marker file per kill proves the path actually
+    fired."""
+
+    def __init__(self, marker_dir: str):
+        self.marker_dir = marker_dir
+
+    def __call__(self, *args) -> None:
+        tc = _first_attempt_of_even_partition(args)
+        if tc is None:
+            return
+        _mark(self.marker_dir, "killed", tc, str(os.getpid()))
+        os._exit(137)
+
+
+class HardKillWorkerAtManifestGap:
+    """``os._exit(137)`` the python worker at the ``pre_shard`` hook —
+    AFTER a task's last chunk write, BEFORE its checksum-shard PUT (the
+    one window where chunks exist durably with no manifest coverage).
+    Fires only on first attempts of even-numbered partitions that wrote
+    at least one chunk (a task with no writes has no gap). The marker
+    file records how many region writes the task completed, proving
+    the kill's TIMING: chunks were already durable when the process
+    died."""
+
+    def __init__(self, marker_dir: str):
+        self.marker_dir = marker_dir
+
+    def __call__(self, *args) -> None:
         if not args or args[0] != "pre_shard":
             return
-        tc = TaskContext.get()
-        if tc is None or tc.attemptNumber() != 0 or tc.partitionId() % 2:
+        tc = _first_attempt_of_even_partition(args[1:])
+        if tc is None:
             return
-        n_written = args[1] if len(args) > 1 else -1
-        with open(
-            os.path.join(
-                self.marker_dir, f"gapkill_p{tc.partitionId()}"
-            ),
-            "w",
-        ) as f:
-            f.write(str(n_written))
+        _mark(self.marker_dir, "gapkill", tc, str(args[1]))
         os._exit(137)
 
 
@@ -386,203 +391,164 @@ def _exactly_once_check(spark, sink: str, events_path: str) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def stage_zarr_task_retry(spark, sf_dir: str) -> dict:
-    from aind_hcr_data_transformation_spark.sinks.zarr_sink import (
-        write_blocks_to_zarr,
+def _convert_clean_and_chaos(
+    spark, base: str, stacks: dict, levels: int, fault
+) -> dict:
+    """Run ``pipeline._convert_pyramid`` — the writer every converter
+    runs — twice over ``stacks`` (base chunk 16×32×32): once clean, once
+    with ``fault`` hooked in; returns each run's output directory, its
+    tree hash and the chunks its manifests verify (all levels)."""
+    from aind_hcr_data_transformation_spark.config import (
+        ZarrConversionSettings,
     )
-    from aind_hcr_data_transformation_spark.sources.czi import (
-        block_index,
-        read_blocks,
-    )
+    from aind_hcr_data_transformation_spark.pipeline import _convert_pyramid
+    from aind_hcr_data_transformation_spark.sinks.zarr_sink import scrub_group
 
-    catalog = spark.createDataFrame(
-        [("chaos_stack", 48, 64, 64)],
-        "stack_name string, z_extent int, y_extent int, x_extent int",
-    )
-    blocks = read_blocks(
-        block_index(catalog, (16, 32, 32)).repartition(6), "synthetic"
-    )
-    shape, chunks = (1, 1, 48, 64, 64), (1, 1, 16, 32, 32)
-    base = tempfile.mkdtemp(prefix="chaos_zarr_")
-    clean_url = os.path.join(base, "clean")
-    chaos_url = os.path.join(base, "chaos")
-    try:
-        n_clean = write_blocks_to_zarr(
-            blocks, clean_url, shape, chunks, "uint16"
+    out = {}
+    for mode, f in (("clean", None), ("chaos", fault)):
+        settings = ZarrConversionSettings(
+            output_directory=os.path.join(base, mode),
+            chunk_size=(16, 32, 32),
+            scale_factor=(2, 2, 2),
+            downsample_levels=levels,
         )
-        n_chaos = write_blocks_to_zarr(
-            blocks, chaos_url, shape, chunks, "uint16",
-            fault=KillFirstTaskAttempt(after=1),
-        )
-        return {
-            "blocks_written": [n_clean, n_chaos],
-            "hash_clean": tree_hash(clean_url),
-            "hash_chaos": tree_hash(chaos_url),
-            "ok": n_clean == n_chaos
-            and tree_hash(clean_url) == tree_hash(chaos_url),
+        groups = _convert_pyramid(spark, settings, stacks, "uint16", fault=f)
+        out[mode] = {
+            "dir": settings.output_directory,
+            "hash": tree_hash(settings.output_directory),
+            "chunks": sum(
+                sum(scrub_group(g).values()) for g in groups.values()
+            ),
         }
+    return out
+
+
+def _retry_result(run: dict, markers: str) -> dict:
+    """Shared verdict of the retry stages: the chaos tree must be
+    byte-equal to the clean one, its manifests must verify every chunk,
+    and at least one first attempt must really have died (a byte-equal
+    result with no kill proves nothing)."""
+    kills = sorted(os.listdir(markers))
+    return {
+        "chunks_verified": [run["clean"]["chunks"], run["chaos"]["chunks"]],
+        "killed_attempts": kills,
+        "hash_clean": run["clean"]["hash"],
+        "hash_chaos": run["chaos"]["hash"],
+        "ok": len(kills) >= 1
+        and run["clean"]["chunks"] == run["chaos"]["chunks"] > 0
+        and run["clean"]["hash"] == run["chaos"]["hash"],
+    }
+
+
+def _markers(base: str) -> str:
+    markers = os.path.join(base, "markers")
+    os.makedirs(markers)
+    return markers
+
+
+def stage_zarr_task_retry(spark, sf_dir: str) -> dict:
+    """Level-0 writer tasks (one pyramid level) throw on their first
+    attempt after a region write — partial chunk-file output on disk;
+    Spark task retry must repair to a byte-equal tree."""
+    base = tempfile.mkdtemp(prefix="chaos_zarr_")
+    try:
+        markers = _markers(base)
+        run = _convert_clean_and_chaos(
+            spark, base, {"chaos_stack": (48, 64, 64)}, 1,
+            KillFirstTaskAttempt(markers),
+        )
+        return _retry_result(run, markers)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
 def stage_worker_death_retry(spark, sf_dir: str) -> dict:
-    """r12 (VERDICT r11 task 7): the remaining untested failure class —
-    a python worker PROCESS dying mid-Arrow-batch (``os._exit(137)``
-    inside the ``mapInArrow`` write kernel after partial chunk writes:
-    no exception, no cleanup, the worker socket just drops, which is
-    what an OOM-kill or node preemption looks like). Spark must fail
-    the task, fork a fresh worker, and the retried output tree must be
+    """A python worker PROCESS dying mid-Arrow-batch (``os._exit(137)``
+    inside the fused write kernel after partial chunk writes: no
+    exception, no cleanup, the worker socket just drops, which is what
+    an OOM-kill or node preemption looks like). Spark must fail the
+    task, fork a fresh worker, and the retried output tree must be
     BYTE-EQUAL to a clean run's. Control: kill marker files prove the
     first attempts actually died (otherwise a byte-equal result could
     mean the kill path never fired)."""
-    from aind_hcr_data_transformation_spark.sinks.zarr_sink import (
-        write_blocks_to_zarr,
-    )
-    from aind_hcr_data_transformation_spark.sources.czi import (
-        block_index,
-        read_blocks,
-    )
-
-    catalog = spark.createDataFrame(
-        [("chaos_wd", 48, 64, 64)],
-        "stack_name string, z_extent int, y_extent int, x_extent int",
-    )
-    blocks = read_blocks(
-        block_index(catalog, (16, 32, 32)).repartition(6), "synthetic"
-    )
-    shape, chunks = (1, 1, 48, 64, 64), (1, 1, 16, 32, 32)
     base = tempfile.mkdtemp(prefix="chaos_wdeath_")
-    clean_url = os.path.join(base, "clean")
-    chaos_url = os.path.join(base, "chaos")
-    markers = os.path.join(base, "markers")
-    os.makedirs(markers)
     try:
-        n_clean = write_blocks_to_zarr(
-            blocks, clean_url, shape, chunks, "uint16"
+        markers = _markers(base)
+        run = _convert_clean_and_chaos(
+            spark, base, {"chaos_wd": (48, 64, 64)}, 2,
+            HardKillWorkerFirstAttempt(markers),
         )
-        n_chaos = write_blocks_to_zarr(
-            blocks, chaos_url, shape, chunks, "uint16",
-            fault=HardKillWorkerFirstAttempt(markers, after=1),
-        )
-        kills = sorted(os.listdir(markers))
-        return {
-            "blocks_written": [n_clean, n_chaos],
-            "workers_killed": kills,
-            "hash_clean": tree_hash(clean_url),
-            "hash_chaos": tree_hash(chaos_url),
-            "ok": n_clean == n_chaos
-            and len(kills) >= 1
-            and tree_hash(clean_url) == tree_hash(chaos_url),
-        }
+        return _retry_result(run, markers)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
 def stage_worker_death_manifest_gap(spark, sf_dir: str) -> dict:
-    """r13 (VERDICT r12 task 3): the checksum manifest is written one
-    shard per task AFTER that task's chunk writes — a worker death in
-    the window between the last chunk write and the shard PUT leaves
-    durable chunks with NO manifest coverage. Spark task retry must
-    re-run the whole task (chunks re-written byte-identical, shard
-    completed), leaving the tree byte-equal to a clean run's and the
-    scrub green. Controls: (1) kill markers record the per-task write
-    count at death — a positive count proves the kill fired after
-    chunks were durable, i.e. the gap state really existed; (2) the
-    scrub must FIRE on the un-repaired gap state, forged by deleting a
-    manifest shard from a copy of the clean tree."""
+    """The checksum manifest is written one shard per (task, array)
+    AFTER that task's chunk writes — a worker death in the window
+    between the last chunk write and the shard PUT leaves durable
+    chunks with NO manifest coverage. Spark task retry must re-run the
+    whole task (chunks re-written byte-identical, shard completed),
+    leaving the tree byte-equal to a clean run's and the scrub green.
+    Controls: (1) kill markers record the per-task write count at
+    death — a positive count proves the kill fired after chunks were
+    durable, i.e. the gap state really existed; (2) the scrub must FIRE
+    on the un-repaired gap state, forged by deleting a level-0 manifest
+    shard from a copy of the clean tree."""
     from aind_hcr_data_transformation_spark.sinks.zarr_sink import (
         CHECKSUM_DIR,
         verify_array_checksums,
-        write_blocks_to_zarr,
-    )
-    from aind_hcr_data_transformation_spark.sources.czi import (
-        block_index,
-        read_blocks,
     )
 
-    catalog = spark.createDataFrame(
-        [("chaos_gap", 48, 64, 64)],
-        "stack_name string, z_extent int, y_extent int, x_extent int",
-    )
-    blocks = read_blocks(
-        block_index(catalog, (16, 32, 32)).repartition(6), "synthetic"
-    )
-    shape, chunks = (1, 1, 48, 64, 64), (1, 1, 16, 32, 32)
     base = tempfile.mkdtemp(prefix="chaos_gap_")
-    clean_url = os.path.join(base, "clean")
-    chaos_url = os.path.join(base, "chaos")
-    markers = os.path.join(base, "markers")
-    os.makedirs(markers)
     try:
-        n_clean = write_blocks_to_zarr(
-            blocks, clean_url, shape, chunks, "uint16"
+        markers = _markers(base)
+        run = _convert_clean_and_chaos(
+            spark, base, {"chaos_gap": (48, 64, 64)}, 2,
+            HardKillWorkerAtManifestGap(markers),
         )
-        n_chaos = write_blocks_to_zarr(
-            blocks, chaos_url, shape, chunks, "uint16",
-            fault=HardKillWorkerAtManifestGap(markers),
-        )
-        kills = sorted(os.listdir(markers))
+        res = _retry_result(run, markers)
         writes_at_death = [
-            int(Path(markers, k).read_text()) for k in kills
+            int(Path(markers, k).read_text()) for k in res["killed_attempts"]
         ]
-        verified = verify_array_checksums(chaos_url)
         # control: forge the un-repaired gap state (chunks present,
         # one shard missing) and prove the scrub catches it
         forged = os.path.join(base, "forged")
-        shutil.copytree(clean_url, forged)
-        shard = next(Path(forged, CHECKSUM_DIR).glob("*.json"))
-        shard.unlink()
+        shutil.copytree(run["clean"]["dir"], forged)
+        level0 = os.path.join(forged, "chaos_gap.zarr", "0")
+        next(Path(level0, CHECKSUM_DIR).glob("*.json")).unlink()
         try:
-            verify_array_checksums(forged)
+            verify_array_checksums(level0)
             control_fired = False
         except ValueError:
             control_fired = True
-        return {
-            "blocks_written": [n_clean, n_chaos],
-            "workers_killed": kills,
-            "writes_at_death": writes_at_death,
-            "chunks_verified": verified,
-            "hash_clean": tree_hash(clean_url),
-            "hash_chaos": tree_hash(chaos_url),
-            "control_scrub_fires_on_gap": control_fired,
-            "ok": n_clean == n_chaos
-            and len(kills) >= 1
-            and all(w >= 1 for w in writes_at_death)
-            and verified > 0
-            and tree_hash(clean_url) == tree_hash(chaos_url)
-            and control_fired,
-        }
+        res["writes_at_death"] = writes_at_death
+        res["control_scrub_fires_on_gap"] = control_fired
+        res["ok"] = (
+            res["ok"] and all(w >= 1 for w in writes_at_death) and control_fired
+        )
+        return res
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
 def stage_pyramid_task_retry(spark, sf_dir: str) -> dict:
-    from aind_hcr_data_transformation_spark.config import (
-        ZarrConversionSettings,
-    )
-    from aind_hcr_data_transformation_spark.pipeline import _convert_pyramid
-
+    """The same task kill across ``_convert_pyramid``'s fused
+    multi-level chain with two stacks: first attempts of even
+    partitions die after a region write at every level whose stage
+    gives them one; the retried tree must hash-equal the clean run."""
     base = tempfile.mkdtemp(prefix="chaos_pyr_")
-    stacks = {"stack_a": (32, 64, 64), "stack_b": (16, 32, 32)}
-    out = {}
     try:
-        for mode, fault in (
-            ("clean", None),
-            ("chaos", KillFirstTaskAttempt(after=2)),
-        ):
-            settings = ZarrConversionSettings(
-                output_directory=os.path.join(base, mode),
-                chunk_size=(16, 32, 32),
-                scale_factor=(2, 2, 2),
-                downsample_levels=3,
-            )
-            _convert_pyramid(spark, settings, stacks, "uint16", fault=fault)
-            out[mode] = tree_hash(settings.output_directory)
-        return {
-            "hash_clean": out["clean"],
-            "hash_chaos": out["chaos"],
-            "ok": out["clean"] == out["chaos"],
-        }
+        markers = _markers(base)
+        run = _convert_clean_and_chaos(
+            spark, base, {"stack_a": (32, 64, 64), "stack_b": (16, 32, 32)}, 3,
+            KillFirstTaskAttempt(markers),
+        )
+        res = _retry_result(run, markers)
+        res["stages_with_kills"] = len(
+            {k.split("_")[1] for k in res["killed_attempts"]}
+        )
+        return res
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1198,13 +1164,16 @@ def main() -> int:
     tempfile.tempdir = None
     shutil.rmtree(tmp_root, ignore_errors=True)
 
+    path = REPO / json_out
+    if only and path.exists():
+        results = {**json.loads(path.read_text())["stages"], **results}
     out = {
         "sf_dir": sf_dir,
         "task_max_failures": 3,
         "stages": results,
-        "ok": not any_fail,
+        "ok": all(r["ok"] for r in results.values()),
     }
-    with open(REPO / json_out, "w") as fh:
+    with open(path, "w") as fh:
         json.dump(out, fh, indent=2, default=str)
     print(f"chaos probe: {'OK' if not any_fail else 'FAILURES'} -> {json_out}")
     return 1 if any_fail else 0

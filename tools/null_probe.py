@@ -43,6 +43,10 @@ caught a real latent divergence on its first run:
 Usage::
 
     python tools/null_probe.py [src_sf_dir] [--json NULL_PROBE.json]
+    python tools/null_probe.py [src_sf_dir] --only STAGE[,STAGE...]
+
+``--only`` runs the named stages and merges them into the existing
+JSON, keeping the other stages' records.
 """
 
 from __future__ import annotations
@@ -141,7 +145,11 @@ def main() -> int:
         argv = argv[:i] + argv[i + 2 :]
     src = argv[0] if argv else "/root/testdata/sf0.001"
 
-    stages = {}
+    stages = (
+        json.loads(Path(json_out).read_text())["stages"]
+        if only and Path(json_out).exists()
+        else {}
+    )
     any_fail = False
     descs = {
         m: f"{t}.{c} = {v!r} where {k} % {mod} = 0"
@@ -185,7 +193,7 @@ def main() -> int:
     flagged = {
         m: (s["failures"] or s["missing"] or f"rc {s['rc_crashed']}")
         for m, s in stages.items()
-        if s["failures"] or s["missing"] or s["rc_crashed"]
+        if m in descs and (s["failures"] or s["missing"] or s["rc_crashed"])
     }
     print(f"wrote {json_out}; failures: {flagged or 'none'}")
     return 1 if any_fail else 0
