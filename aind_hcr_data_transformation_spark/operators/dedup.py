@@ -1107,13 +1107,15 @@ def _build_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hangs the driver by round 3 even for 122 nodes (observed).
         # localCheckpoint swaps the lineage for a LogicalRDD so every
         # round analyzes a constant-size plan — the same per-iteration
-        # truncation GraphX/MLlib perform.  eager=False (r14): the
-        # truncation happens at CALL time either way (Dataset.checkpoint
-        # builds the RDD and returns LogicalRDD immediately; eager only
-        # adds a blocking count()), so the lazy form keeps the bounded
-        # plans while collapsing 2×_CC_ITERS sequential driver-blocking
-        # jobs into the consumer's single action — interleaved A/B 5/5
-        # pair wins, median 5.91→4.04 s, labels bit-identical.
+        # truncation GraphX/MLlib perform.  eager=False (r14) only drops
+        # the blocking count() (interleaved A/B 5/5 pair wins, median
+        # 5.91→4.04 s, labels bit-identical); it does NOT defer the
+        # rounds to the consumer's action.  Dataset.checkpoint executes
+        # the physical plan to build its RDD, and under AQE that runs
+        # every shuffle stage below the final one right here, at call
+        # time: a cold build at sf0.01 runs 34 jobs inside this builder
+        # and 1 in the consumer's action (~2 s of a ~5.4 s cold
+        # llm_prep pass).  ROADMAP lists the alternatives measured.
         # Executor-local blocks (no checkpoint dir needed); at cluster
         # scale use spark.sparkContext.setCheckpointDir + .checkpoint()
         # if executor loss during the few CC rounds must be survivable.

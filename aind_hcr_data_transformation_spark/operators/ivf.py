@@ -641,72 +641,36 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, and ranking inside those cells runs on 4-byte PQ codes via
     per-query lookup tables — vectors are touched only at train time.
     This composes the two trainers this module family already proves
-    (:func:`_train` here, ``vectorops._pq_train``) into one index.
+    (:func:`_train` here, ``vectorops._pq_train_values``) into one index.
 
     Plan: both codebooks are trained once per session (``cache.shared``
-    keys ``ivf_codebook``/``pq_codebook``, collected values) and INLINED
-    as literal expressions, so the corpus side — cell assignment AND all
-    four PQ codes — is one map-only projection over the embedding scan:
-    zero joins, zero aggregates, zero shuffles before the probe join.  The
-    probe list (5 queries × nprobe cells) and the four per-query lookup
-    tables are broadcast; the only exchange in the whole read path is
-    the final per-query top-k window.  At 100 TB: cells shard the
-    corpus (n/k vectors each), codes are 16× smaller than the
+    keys ``ivf_codebook``/``pq_codebook``, collected values), and the
+    corpus is encoded against them once per (session, input) into the
+    shared ``ivfpq_index`` relation (:func:`_ivfpq_index`: cell + four
+    PQ codes per vector).  A call builds only the 5-row probe frame —
+    each query's ``_NPROBE`` cells carrying its four lookup tables — and
+    broadcasts it onto a scan of the index; the only exchange in the
+    read path is the final per-query top-k window.  At 100 TB: cells
+    shard the corpus (n/k vectors each), codes are 16× smaller than the
     embeddings, and the probe list bounds read volume per query — the
     reason this is THE production ANN layout.
     """
-    from .vectorops import _PQ_M, _PQ_SUB, _pq_codebook_values
+    from .vectorops import _PQ_M, _pq_centroids_by_m, _pq_sub_sql
 
-    emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
-        "vec_id", "embedding"
-    )
-    # query-side frames (5 rows) scan WITHOUT the spread repartition so
-    # the vec_id predicate pushes into the parquet scan instead of
-    # filtering a full-table round-robin exchange
+    # the query side (5 rows) scans WITHOUT the spread repartition so
+    # the vec_id predicate pushes into the parquet scan
     emb_q = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     ivf_values = _trained_codebook_values(spark, sf_dir)
-    pq_values = _pq_codebook_values(spark, sf_dir)
-    by_m: dict[int, list] = {}
-    for m, cluster, cemb in pq_values:
-        by_m.setdefault(int(m), []).append((int(cluster), cemb))
-
-    def _sub_sql(m: int) -> str:
-        return f"slice(embedding, {m * _PQ_SUB + 1}, {_PQ_SUB})"
-
-    def _code_expr(m) -> F.Column:
-        # same score formula and (score, cluster) argmin as the PQ
-        # trainer's assign(): c·c − 2·x·c over the m-th sub-vector
-        # (one-F.expr SQL construction — see _cell_candidates)
-        cands = []
-        for cluster, cemb in by_m[m]:
-            c2 = 0.0
-            for v in cemb:
-                c2 = c2 + v * v
-            dot = sparksql_dot(_sub_sql(m), arr_lit(cemb))
-            cands.append(
-                f"named_struct('score', {dlit(c2)} - 2.0D * {dot}, "
-                f"'cluster', CAST({int(cluster)} AS INT))"
-            )
-        return F.expr(
-            "array_min(array(" + ", ".join(cands) + "))"
-        )["cluster"]
-
-    cand_src = emb.select(
-        "vec_id",
-        F.array_min(_cell_candidates("embedding", ivf_values))[
-            "cluster"
-        ].alias("cluster"),
-        *[_code_expr(m).alias(f"code{m}") for m in range(_PQ_M)],
-    )
+    by_m = _pq_centroids_by_m(spark, sf_dir)
 
     # probe + lookup tables in ONE broadcast frame: each of the 5 query
     # vectors expands to its _NPROBE probed cells, and the row CARRIES
     # the query's four per-subspace ADC lookup tables as literal-keyed
     # maps (cluster -> squared-L2 to that codeword, the same _sq_l2
     # fold the per-m LUT join computed).  The whole read path is then
-    # corpus-projection |><| broadcast(10 rows) -> window: ONE join
+    # index scan |><| broadcast(10 rows) -> window: ONE join
     # instead of five (probe + 4 LUT joins), which at fixture scale
     # removes four broadcast-build jobs and at cluster scale four
     # broadcast rounds over the executors.
@@ -714,7 +678,7 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys, vals = [], []
         for cluster, cemb in by_m[m]:
             keys.append(f"CAST({int(cluster)} AS INT)")
-            vals.append(sparksql_sq_l2(_sub_sql(m), arr_lit(cemb)))
+            vals.append(sparksql_sq_l2(_pq_sub_sql(m), arr_lit(cemb)))
         return F.expr(
             "map_from_arrays("
             f"array({', '.join(keys)}), array({', '.join(vals)}))"
@@ -742,9 +706,11 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # bounded: _N_QUERIES x _NPROBE probe rows
-    cand = cand_src.join(F.broadcast(probe), "cluster").filter(
-        F.col("vec_id") != F.col("qid")
+    cand = (
+        _ivfpq_index(spark, sf_dir)
+        # bounded: _N_QUERIES x _NPROBE probe rows
+        .join(F.broadcast(probe), "cluster")
+        .filter(F.col("vec_id") != F.col("qid"))
     )
     # ADC distance: four map lookups keyed by the vector's PQ codes,
     # summed as exact decimals in the same fixed order as before (each
@@ -767,6 +733,57 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("adc_dec", 6).cast("double").alias("adc"),
         )
     )
+
+
+def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF-PQ index: (vec_id, cluster, code0..code3), the corpus
+    encoded against both session codebooks, shared per (session, input)
+    under the ``cache.shared`` key ``ivfpq_index``.
+
+    A ``localCheckpoint(eager=False)`` relation like ``pq_codes``: the
+    first search's action encodes every vector once and leaves ~32 B per
+    vector (a bigint id and five int codes) on the executors, never
+    collected; later searches scan it instead of re-scanning the
+    embeddings and re-analyzing the literal-inlined encoding
+    expressions.  A changed input file rebuilds it."""
+    return shared("ivfpq_index", spark, sf_dir, _build_ivfpq_index)
+
+
+def _build_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .vectorops import _PQ_M, _pq_centroids_by_m, _pq_sub_sql
+
+    ivf_values = _trained_codebook_values(spark, sf_dir)
+    by_m = _pq_centroids_by_m(spark, sf_dir)
+
+    def _code_expr(m) -> F.Column:
+        # same score formula and (score, cluster) argmin as the PQ
+        # encoder (vectorops._pq_encode): c·c − 2·x·c over the m-th
+        # sub-vector (one-F.expr SQL construction — see _cell_candidates)
+        sub = _pq_sub_sql(m)
+        cands = []
+        for cluster, cemb in by_m[m]:
+            c2 = 0.0
+            for v in cemb:
+                c2 = c2 + v * v
+            dot = sparksql_dot(sub, arr_lit(cemb))
+            cands.append(
+                f"named_struct('score', {dlit(c2)} - 2.0D * {dot}, "
+                f"'cluster', CAST({int(cluster)} AS INT))"
+            )
+        return F.expr(
+            "array_min(array(" + ", ".join(cands) + "))"
+        )["cluster"]
+
+    emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
+        "vec_id", "embedding"
+    )
+    return emb.select(
+        "vec_id",
+        F.array_min(_cell_candidates("embedding", ivf_values))[
+            "cluster"
+        ].alias("cluster"),
+        *[_code_expr(m).alias(f"code{m}") for m in range(_PQ_M)],
+    ).localCheckpoint(eager=False)
 
 
 def _build_ivfpq_oracle() -> str:

@@ -242,6 +242,11 @@ _PQ_K = 4                    # codewords per subspace codebook
 _PQ_ITERS = 2                # fixed Lloyd iterations per subspace
 
 
+def _pq_sub_sql(m: int) -> str:
+    """SQL for the m-th PQ sub-vector of the ``embedding`` column."""
+    return f"slice(embedding, {m * _PQ_SUB + 1}, {_PQ_SUB})"
+
+
 def _sq_l2(x, c) -> F.Column:
     """Left-folded squared-L2 between two equal-length arrays, double."""
     return F.aggregate(
@@ -265,24 +270,17 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``ivf_kmeans_ann``) and a production IVF-PQ index, shrinking a
     64×float32 vector to 4 code bytes (64×) for in-memory search.
 
-    ALL FOUR codebooks train in ONE Lloyd chain: the subspace index is a
-    key column (each vector explodes into its 4 subvectors once — a ×4
-    row fan-out of 16-dim slices, the same bytes as the original
-    vector), centroids key on (m, cluster), assignment is a broadcast
-    equi-join on ``m`` with a per-(vec_id, m) windowed argmin, and the
-    update is one hash aggregate on (m, cluster, dim). One scan + 2
-    iterations total instead of 4 sequential per-subspace chains — 4×
-    fewer stages (measured 8.2 s → 2.9 s at sf0.1), and
-    the shape a 100 TB PQ training run needs: adding subspaces adds
-    per-row fan-out, never stages. Code assembly is a single
-    conditional-aggregation pivot on vec_id carrying codes, never
-    vectors. The whole pipeline (2 Lloyd rounds × 4 codebooks +
-    assignment + reconstruction error) is differentially tested via
-    unrolled CTEs, like the IVF oracle (the oracle states the identical
-    VALUES per subspace; plan shape is free)."""
-    _cb, flat = _pq_train(spark, sf_dir)
-    # map-only over the wide assignment (r13): no explode-then-regroup,
-    # zero exchanges — codes and the error sum read cl{m}/e{m} directly
+    ALL FOUR codebooks train in ONE driver-iterated Lloyd chain
+    (:func:`_pq_train_values`), and the corpus is encoded against them
+    once per (session, input): the session-shared ``pq_codes`` relation
+    (:func:`_pq_codes`).  This query is a map-only projection over those
+    codes — no embedding scan, no exchange — so a repeated call reads
+    codes instead of re-encoding every vector.  The whole pipeline
+    (2 Lloyd rounds × 4 codebooks + assignment + reconstruction error)
+    is differentially tested via unrolled CTEs, like the IVF oracle (the
+    oracle states the identical VALUES per subspace; plan shape is
+    free)."""
+    flat = _pq_codes(spark, sf_dir)
     err = F.col("e0")
     for m in range(1, _PQ_M):
         err = err + F.col(f"e{m}")
@@ -299,10 +297,18 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_codebook_values(spark: SparkSession, sf_dir: str) -> list:
     """Collected (m, cluster, cemb) PQ sub-codebook values for the
     session, training on first use: the m×k tiny rows rebuild exactly,
-    so every consumer after the first (embed_pq_quantize, pq_adc_topk,
-    ivfpq_search) skips the Lloyd rounds and only re-runs the final
-    assignment against the cached centroids."""
+    so the Lloyd rounds run once per (session, input) and both encoded
+    corpora (``pq_codes`` here, ``ivfpq_index`` in ``ivf``) are built
+    against the same centroids."""
     return shared("pq_codebook", spark, sf_dir, _pq_train_values)
+
+
+def _pq_centroids_by_m(spark: SparkSession, sf_dir: str) -> dict:
+    """{m: [(cluster, cemb), ...]} of the session PQ codebook."""
+    by_m: dict[int, list] = {}
+    for m, cluster, cemb in _pq_codebook_values(spark, sf_dir):
+        by_m.setdefault(int(m), []).append((int(cluster), list(cemb)))
+    return by_m
 
 
 def _pq_train_values(spark: SparkSession, sf_dir: str) -> list:
@@ -347,10 +353,7 @@ def _pq_train_values(spark: SparkSession, sf_dir: str) -> list:
             assigned = emb.select(
                 *[
                     F.array_min(
-                        _cell_candidates(
-                            f"slice(embedding, {m * _PQ_SUB + 1}, {_PQ_SUB})",
-                            by_m[m],
-                        )
+                        _cell_candidates(_pq_sub_sql(m), by_m[m])
                     )["cluster"].alias(f"c{m}")
                     for m in range(_PQ_M)
                 ],
@@ -389,25 +392,32 @@ def _pq_train_values(spark: SparkSession, sf_dir: str) -> list:
     return [(m, c, cemb) for m in range(_PQ_M) for c, cemb in by_m[m]]
 
 
-def _pq_train(spark: SparkSession, sf_dir: str):
-    """Shared PQ trainer: returns ``(cb, flat)`` — the (m, cluster,
-    cemb) codebook after ``_PQ_ITERS`` Lloyd rounds and the WIDE
-    per-vector assignment against it (vec_id, cl0..cl{M-1},
-    e0..e{M-1}).  Consumed by :func:`embed_pq_quantize` (codes +
-    reconstruction error) and :func:`pq_adc_topk` (ADC search lookup
-    tables).
+def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus encoded against the trained PQ codebook: the WIDE
+    per-vector assignment (vec_id, cl0..cl{M-1}, e0..e{M-1}), one row per
+    vector, shared per (session, input) under the ``cache.shared`` key
+    ``pq_codes``.  Read by :func:`embed_pq_quantize` (codes +
+    reconstruction error) and :func:`pq_adc_topk` (ADC search).
 
-    The final assignment inlines the trained sub-codebooks as literal
-    expressions, so it is a single map-only projection over the
-    embedding scan — no explode, no broadcast join, no argmin
-    aggregate (the values are identical: same score fold, same
+    It is a ``localCheckpoint(eager=False)`` relation, like the
+    shingle, band and CC-label checkpoints: the first consumer's action
+    encodes every vector once and leaves the rows on the executors
+    (72 B per vector: a bigint id, 4 bigint codes, 4 double errors —
+    never collected); later calls plan a scan of those rows instead of
+    re-scanning the embeddings and re-analyzing the encoding
+    expressions.  A changed input file rebuilds it (``cache.shared``
+    stamps the input dir)."""
+    return shared("pq_codes", spark, sf_dir, _pq_encode)
+
+
+def _pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build of :func:`_pq_codes`: the final assignment inlines the
+    trained sub-codebooks as literal expressions, so it is a single
+    map-only projection over the embedding scan — no explode, no
+    broadcast join, no argmin aggregate (same score fold, same
     (score, cluster) tie-break, same ``_sq_l2`` error fold on the
-    winning codeword)."""
-    values = _pq_codebook_values(spark, sf_dir)
-    cb = local_frame(spark, values, "m int, cluster bigint, cemb array<double>")
-    by_m: dict[int, list] = {}
-    for m, cluster, cemb in values:
-        by_m.setdefault(int(m), []).append((int(cluster), list(cemb)))
+    winning codeword as the oracle's ``pf{m}`` CTEs)."""
+    by_m = _pq_centroids_by_m(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
@@ -415,7 +425,7 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     def _win(m: int) -> F.Column:
         # one-F.expr SQL construction, same rationale and bit-identical
         # semantics as ivf._cell_candidates (py4j-per-literal cost)
-        sub = f"slice(embedding, {m * _PQ_SUB + 1}, {_PQ_SUB})"
+        sub = _pq_sub_sql(m)
         cands = []
         for cluster, cemb in by_m[m]:
             c2 = 0.0
@@ -430,20 +440,25 @@ def _pq_train(spark: SparkSession, sf_dir: str):
             )
         return F.expr("array_min(array(" + ", ".join(cands) + "))")
 
-    # r13 (guide §2.4): return the WIDE assignment (one row per vector,
+    # r13 (guide §2.4): the WIDE assignment (one row per vector,
     # cl0..cl3 / e0..e3 columns) instead of exploding it to
     # (vec_id, m, cluster, err) rows — both consumers used to re-pivot
     # the explode straight back with a groupBy(vec_id) hash aggregate,
     # paying a full exchange over 4x|vectors| rows to undo a generator.
-    # Values are identical: max(when(m == m, cluster)) over the 4
-    # exploded rows of a vector IS cl{m}, and the err sum is the same
-    # left fold over the same doubles.
-    flat = emb.select(
-        "vec_id",
-        *[_win(m)["cluster"].alias(f"cl{m}") for m in range(_PQ_M)],
-        *[_win(m)["err"].alias(f"e{m}") for m in range(_PQ_M)],
+    # Each winner struct is stated once and its two fields read in a
+    # second projection (CollapseProject keeps the two apart rather
+    # than duplicate the argmin), which halves the expression tree
+    # Catalyst analyzes and plans: measured 0.58 → 0.37 s per build
+    # at sf0.01, rows identical.
+    return (
+        emb.select("vec_id", *[_win(m).alias(f"w{m}") for m in range(_PQ_M)])
+        .select(
+            "vec_id",
+            *[F.col(f"w{m}.cluster").alias(f"cl{m}") for m in range(_PQ_M)],
+            *[F.col(f"w{m}.err").alias(f"e{m}") for m in range(_PQ_M)],
+        )
+        .localCheckpoint(eager=False)
     )
-    return cb, flat
 
 
 def _sql_pq_dot_off(a: str, b: str, off: int) -> str:
@@ -573,64 +588,28 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups keyed by its PQ code — the vectors themselves are never
     touched at search time.
 
-    Plan (r13, guide §3/§2.4): the LUT is (queries × M × k) = 80 rows —
-    corpus-independent, so it is computed by ONE tiny Spark job (the
-    exact ``_sq_l2`` fold, bit-identical to the oracle's), collected,
-    and INLINED as per-(query, subspace) literal arrays indexed by code
-    — exactly how FAISS holds the ADC tables in registers at search
-    time. The code table (one row per vector, 4 small ints) then pays
-    zero joins and zero scans beyond its own: a map-only
-    ``element_at`` projection per query, one exchange for the final
-    per-query top-k window. The previous shape ran 4 broadcast hash
-    joins whose build sides each re-scanned the query vectors
-    (8 BroadcastExchanges, 5 parquet scans). The collect is O(M·k·|Q|)
-    rows — bounded by the index shape, never the corpus, the same class
-    as the codebook collect above. At 100 TB the codes are 4
-    bytes/vector (64× smaller than raw), which is the entire point:
-    scan codes, not vectors. The 4-term distance sum is exact decimal
-    in the same fixed textual order, so both engines rank identically.
+    Plan: the codes are the session-shared ``pq_codes`` relation
+    (:func:`_pq_codes`, encoded once per session and input), and the
+    LUT is (queries × M × k) = 80 rows — corpus-independent, computed
+    by ONE tiny Spark job once per session and input (:func:`_adc_luts`)
+    and INLINED as per-(query, subspace) literal arrays indexed by code,
+    exactly how FAISS holds the ADC tables in registers at search time.
+    A call is then a map-only ``element_at`` projection over the codes
+    plus one exchange for the final per-query top-k window: no
+    embedding scan, no join, no job while building.  At 100 TB the codes
+    are 4 bytes/vector (64× smaller than raw), which is the entire
+    point: scan codes, not vectors. The 4-term distance sum is exact
+    decimal in the same fixed textual order, so both engines rank
+    identically.
     """
-    cb, flat = _pq_train(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qsub = (
-        emb.filter(F.col("vec_id") < _ADC_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.slice("embedding", m * _PQ_SUB + 1, _PQ_SUB).alias(
-                                "qemb"
-                            ),
-                        )
-                        for m in range(_PQ_M)
-                    ]
-                )
-            ).alias("s"),
-        )
-        .select("qid", F.col("s.m").alias("m"), F.col("s.qemb").alias("qemb"))
-    )
-    lut = qsub.join(cb, "m").select(
-        "qid", "m", "cluster", _sq_l2(F.col("qemb"), F.col("cemb")).alias("d")
-    )
-    lut_rows = lut.collect()  # O(M*k*|Q|) = 80 rows, corpus-independent
-    d_by: dict[int, dict[int, dict[int, float]]] = {}
-    for r in lut_rows:
-        d_by.setdefault(int(r["qid"]), {}).setdefault(int(r["m"]), {})[
-            int(r["cluster"])
-        ] = float(r["d"])
-    # map-only codes off the wide assignment (r13): the explode-then-
-    # regroup pivot this replaced paid a hash-aggregate exchange over
-    # 4x|vectors| rows for values flat already carries per row
-    codes = flat.select(
+    codes = _pq_codes(spark, sf_dir).select(
         "vec_id",
         *[
             F.col(f"cl{m}").cast("int").alias(f"code{m}")
             for m in range(_PQ_M)
         ],
     )
+    d_by = _adc_luts(spark, sf_dir)
     if not d_by:  # degenerate tiny fixture: no query vectors
         return codes.select(
             F.col("vec_id").alias("qid"),
@@ -681,6 +660,52 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("adc_dec", 6).cast("double").alias("adc"),
         )
     )
+
+
+def _adc_luts(spark: SparkSession, sf_dir: str) -> dict:
+    """{qid: {m: {cluster: d}}}: the ADC lookup tables of the
+    ``_ADC_QUERIES`` query vectors, shared per (session, input) under the
+    ``cache.shared`` key ``pq_adc_lut`` (collected driver values,
+    O(M·k·|Q|) — bounded by the index shape, never the corpus)."""
+    return shared("pq_adc_lut", spark, sf_dir, _collect_adc_luts)
+
+
+def _collect_adc_luts(spark: SparkSession, sf_dir: str) -> dict:
+    cb = local_frame(
+        spark,
+        _pq_codebook_values(spark, sf_dir),
+        "m int, cluster bigint, cemb array<double>",
+    )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    qsub = (
+        emb.filter(F.col("vec_id") < _ADC_QUERIES)
+        .select(
+            F.col("vec_id").alias("qid"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(m).alias("m"),
+                            F.slice("embedding", m * _PQ_SUB + 1, _PQ_SUB).alias(
+                                "qemb"
+                            ),
+                        )
+                        for m in range(_PQ_M)
+                    ]
+                )
+            ).alias("s"),
+        )
+        .select("qid", F.col("s.m").alias("m"), F.col("s.qemb").alias("qemb"))
+    )
+    lut = qsub.join(cb, "m").select(
+        "qid", "m", "cluster", _sq_l2(F.col("qemb"), F.col("cemb")).alias("d")
+    )
+    d_by: dict[int, dict[int, dict[int, float]]] = {}
+    for r in lut.collect():
+        d_by.setdefault(int(r["qid"]), {}).setdefault(int(r["m"]), {})[
+            int(r["cluster"])
+        ] = float(r["d"])
+    return d_by
 
 
 def _adc_oracle() -> str:

@@ -137,6 +137,24 @@ def _merged_worker_pythonpath(extra_conf: dict[str, str] | None) -> str:
     return os.pathsep.join(p for p in parts if p)
 
 
+_MAX_DRIVER_MIB = 24 << 10
+
+
+def _default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    24g, capped at half the host's physical memory (``os.sysconf``) so
+    that two sessions side by side on a 16 GiB host cannot grow past
+    it.  Falls back to 24g where the page counts are unavailable."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (ValueError, OSError):
+            phys_bytes = 0
+    if phys_bytes <= 0:
+        return f"{_MAX_DRIVER_MIB}m"
+    return f"{min(_MAX_DRIVER_MIB, phys_bytes // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "aind-hcr-spark",
     master: str | None = None,
@@ -152,7 +170,8 @@ def get_spark(
     # real heap (binary block payloads are MBs each; the 1g default OOMs).
     # Static conf: only applies to sessions this function creates.
     builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
     )
     # Driver + executor JVMs both JIT the generated classes; merge the
     # code-cache flags with (never clobber) deployment-supplied options.

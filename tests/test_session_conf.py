@@ -71,3 +71,18 @@ def test_worker_pythonpath_appends_package_root(tmp_path, monkeypatch):
         {"spark.executorEnv.PYTHONPATH": "/srv/libs"}
     )
     assert merged.split(os.pathsep) == ["/deploy/site", "/srv/libs", _PACKAGE_ROOT]
+
+
+def test_default_driver_memory_is_half_the_host_up_to_24g():
+    from aind_hcr_data_transformation_spark.session import _default_driver_memory
+
+    gib = 1 << 30
+    assert _default_driver_memory(16 * gib) == "8192m"
+    assert _default_driver_memory(15 * gib + 512 * (1 << 20)) == "7936m"
+    assert _default_driver_memory(48 * gib) == "24576m"
+    assert _default_driver_memory(256 * gib) == "24576m"
+    assert _default_driver_memory(0) == "24576m"
+    # the host's own figure, read with os.sysconf, never exceeds half
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mib = int(_default_driver_memory()[:-1])
+    assert 0 < mib <= min(24 << 10, phys // 2 >> 20)

@@ -9,8 +9,10 @@ from __future__ import annotations
 import ast
 import os
 import re
+import shutil
 from pathlib import Path
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -181,6 +183,7 @@ PAIRS = [
     ("dedup_components", "dedup_canonical_pick"),
     ("ivf_kmeans_ann", "ivfpq_search"),
     ("embed_pq_quantize", "pq_adc_topk"),
+    ("embed_pq_quantize", "ivfpq_search"),
     ("assoc_basket_rules", "graph_triangle_count"),
     ("bpe_learn_merges", "bpe_tokenize_corpus"),
     ("graph_pagerank", "graph_label_propagation"),
@@ -188,8 +191,8 @@ PAIRS = [
 ]
 
 
-def _rows(spark, queries, name):
-    rows = queries[name](spark, SF_DIR).collect()
+def _rows(spark, queries, name, sf_dir=SF_DIR):
+    rows = queries[name](spark, sf_dir).collect()
     release_persists()
     return sorted(rows, key=repr)
 
@@ -214,6 +217,83 @@ def test_build_attributed_once(spark, queries):
     queries["dedup_components"](spark, SF_DIR).collect()
     release_persists()
     assert shared_builds() == builds
+
+
+# ---------------------------------------------------------------------------
+# the encoded corpus (pq_codes, ivfpq_index) is built once per input
+# ---------------------------------------------------------------------------
+
+#: query -> parquet scans of ``embeddings`` in a warm call's plan: the
+#: corpus side reads the checkpointed codes; only ivfpq_search scans
+#: its 5 query vectors
+WARM_EMBEDDING_SCANS = {
+    "embed_pq_quantize": 0,
+    "pq_adc_topk": 0,
+    "ivfpq_search": 1,
+}
+
+
+def _embedding_scans(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        "Scan parquet" in line and "embeddings.parquet" in line
+        for line in plan.splitlines()
+    )
+
+
+def _group_jobs(spark, group) -> list:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(WARM_EMBEDDING_SCANS))
+def test_warm_call_reads_encoded_corpus(spark, queries, name):
+    clear()
+    first = sorted(queries[name](spark, SF_DIR).collect(), key=repr)
+    sc = spark.sparkContext
+    group = f"warm-build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = queries[name](spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _group_jobs(spark, group) == []
+    assert _embedding_scans(df) == WARM_EMBEDDING_SCANS[name]
+    assert sorted(df.collect(), key=repr) == first
+    release_persists()
+
+
+def _perturb_embeddings(path):
+    t = pq.read_table(path)
+    emb = np.array(t.column("embedding").to_pylist(), dtype=np.float32)
+    emb += np.random.default_rng(7).normal(0, 0.05, emb.shape).astype(np.float32)
+    arr = pa.array(list(emb), pa.list_(pa.float32()))
+    t = t.set_column(t.schema.get_field_index("embedding"), "embedding", arr)
+    pq.write_table(t, path)
+
+
+def test_rewritten_embeddings_rebuild_encoded_corpus(spark, queries, tmp_path):
+    """A rewritten ``embeddings.parquet`` must not be answered from the
+    codes of the old file: the next calls return what a fresh session
+    cache returns."""
+    copy = tmp_path / "sf"
+    shutil.copytree(SF_DIR, copy, copy_function=shutil.copyfile)
+    names = ("embed_pq_quantize", "ivfpq_search")
+
+    clear()
+    try:
+        before = {n: _rows(spark, queries, n, str(copy)) for n in names}
+        _perturb_embeddings(copy / "embeddings.parquet")
+        after = {n: _rows(spark, queries, n, str(copy)) for n in names}
+        clear()
+        fresh = {n: _rows(spark, queries, n, str(copy)) for n in names}
+    finally:
+        clear()
+    assert after == fresh
+    for n in names:
+        assert after[n] != before[n], n
 
 
 # ---------------------------------------------------------------------------
