@@ -45,7 +45,6 @@ from ..functions.vectors import (
     spark_cosine_prenorm,
     spark_dot,
     sparksql_dot,
-    sparksql_sq_l2,
     sql_cosine,
 )
 from ..tables import load_table
@@ -294,6 +293,15 @@ def _cell_candidates(emb_sql: str, values) -> F.Column:
     return F.expr(_cell_candidates_sql(emb_sql, values))
 
 
+def _probe_cells(values) -> F.Column:
+    """Exploded probe list of ``embedding``: its ``_NPROBE`` nearest
+    cells, ranked by the same (score, cluster) order as the cell
+    assignment — ``array_sort`` on the struct is the windowless form."""
+    return F.explode(
+        F.slice(F.array_sort(_cell_candidates("embedding", values)), 1, _NPROBE)
+    )
+
+
 def _search(emb: DataFrame, codebook: DataFrame) -> DataFrame:
     """Multi-probe IVF search against a (possibly reloaded) codebook.
 
@@ -311,26 +319,15 @@ def _search(emb: DataFrame, codebook: DataFrame) -> DataFrame:
         ].alias("cluster"),
         spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
-    # query probe list: the _NPROBE nearest cells per query vector,
-    # ranked by the same (score, cluster) order the row_number variant
-    # used — array_sort on the struct is the windowless form.  Every
-    # corpus vector sits in exactly ONE cell and probe cells are
-    # distinct, so no candidate dedup is needed downstream.
+    # query probe list: every corpus vector sits in exactly ONE cell and
+    # probe cells are distinct, so no candidate dedup is needed downstream
     queries = (
         emb.filter(F.col("vec_id") < _N_QUERIES)
         .select(
             F.col("vec_id").alias("qid"),
             F.col("embedding").alias("qe"),
             spark_dot(F.col("embedding"), F.col("embedding")).alias("qn2"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        _cell_candidates("embedding", values)
-                    ),
-                    1,
-                    _NPROBE,
-                )
-            ).alias("pc"),
+            _probe_cells(values).alias("pc"),
         )
         .select("qid", "qe", "qn2", F.col("pc.cluster").alias("cluster"))
     )
@@ -643,85 +640,56 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     This composes the two trainers this module family already proves
     (:func:`_train` here, ``vectorops._pq_train_values``) into one index.
 
-    Plan: both codebooks are trained once per session (``cache.shared``
-    keys ``ivf_codebook``/``pq_codebook``, collected values), and the
-    corpus is encoded against them once per (session, input) into the
-    shared ``ivfpq_index`` relation (:func:`_ivfpq_index`: cell + four
-    PQ codes per vector).  A call builds only the 5-row probe frame —
-    each query's ``_NPROBE`` cells carrying its four lookup tables — and
-    broadcasts it onto a scan of the index; the only exchange in the
-    read path is the final per-query top-k window.  At 100 TB: cells
-    shard the corpus (n/k vectors each), codes are 16× smaller than the
-    embeddings, and the probe list bounds read volume per query — the
-    reason this is THE production ANN layout.
+    Plan: the codebooks (``ivf_codebook``/``pq_codebook``), the encoded
+    corpus (``ivfpq_index``: cell + four PQ codes per vector), each
+    query's probe cells (``ivfpq_cells``) and the queries' ADC lookup
+    tables (``pq_adc_lut``, shared with ``pq_adc_topk``) are built once
+    per (session, input) through ``cache.shared``.  A call inlines cells
+    and tables as one literal map cell -> [(qid, ADC of the row's
+    codes)], so the read path is a map-only ``explode(element_at(map,
+    cluster))`` over the index scan plus the per-query top-k window,
+    its one exchange: no join, no broadcast, no embeddings scan.  At
+    100 TB: cells shard the corpus (n/k vectors each), codes are 16×
+    smaller than the embeddings, and the probe list bounds read volume
+    per query — the reason this is THE production ANN layout.
     """
-    from .vectorops import _PQ_M, _pq_centroids_by_m, _pq_sub_sql
+    from .vectorops import _adc_dec_sql, _adc_luts
 
-    # the query side (5 rows) scans WITHOUT the spread repartition so
-    # the vec_id predicate pushes into the parquet scan
-    emb_q = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    ivf_values = _trained_codebook_values(spark, sf_dir)
-    by_m = _pq_centroids_by_m(spark, sf_dir)
-
-    # probe + lookup tables in ONE broadcast frame: each of the 5 query
-    # vectors expands to its _NPROBE probed cells, and the row CARRIES
-    # the query's four per-subspace ADC lookup tables as literal-keyed
-    # maps (cluster -> squared-L2 to that codeword, the same _sq_l2
-    # fold the per-m LUT join computed).  The whole read path is then
-    # index scan |><| broadcast(10 rows) -> window: ONE join
-    # instead of five (probe + 4 LUT joins), which at fixture scale
-    # removes four broadcast-build jobs and at cluster scale four
-    # broadcast rounds over the executors.
-    def _lut_map(m: int) -> F.Column:
-        keys, vals = [], []
-        for cluster, cemb in by_m[m]:
-            keys.append(f"CAST({int(cluster)} AS INT)")
-            vals.append(sparksql_sq_l2(_pq_sub_sql(m), arr_lit(cemb)))
-        return F.expr(
-            "map_from_arrays("
-            f"array({', '.join(keys)}), array({', '.join(vals)}))"
-        )
-
-    probe = (
-        emb_q.filter(F.col("vec_id") < _N_QUERIES)
-        .select(
+    cells = shared("ivfpq_cells", spark, sf_dir, _collect_ivfpq_cells)
+    if not cells:  # no query vectors, so no PQ codebook seeds either
+        return load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("qid"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        _cell_candidates("embedding", ivf_values)
-                    ),
-                    1,
-                    _NPROBE,
-                )
-            ).alias("pc"),
-            *[_lut_map(m).alias(f"lut{m}") for m in range(_PQ_M)],
+            "vec_id",
+            F.lit(1).alias("rank"),
+            F.lit(0.0).alias("adc"),
+        ).filter(F.lit(False))
+    index = _ivfpq_index(spark, sf_dir)
+    luts = _adc_luts(spark, sf_dir)  # same queries: _ADC_QUERIES == _N_QUERIES
+    entries = ", ".join(
+        f"CAST({cluster} AS BIGINT), array("
+        + ", ".join(
+            f"named_struct('qid', CAST({qid} AS BIGINT), "
+            f"'adc_dec', {_adc_dec_sql(luts[qid])})"
+            for qid in qids
+        )
+        + ")"
+        for cluster, qids in sorted(cells.items())
+    )
+    # two-step select: struct-field extraction cannot share a select
+    # with a generator; an unprobed cell maps to NULL, which explodes
+    # to no rows
+    scored = (
+        index.select(
+            "vec_id",
+            F.expr(f"explode(element_at(map({entries}), cluster))").alias("s"),
         )
         .select(
-            "qid",
-            F.col("pc.cluster").alias("cluster"),
-            *[f"lut{m}" for m in range(_PQ_M)],
+            F.col("s.qid").alias("qid"),
+            "vec_id",
+            F.col("s.adc_dec").alias("adc_dec"),
         )
-    )
-
-    cand = (
-        _ivfpq_index(spark, sf_dir)
-        # bounded: _N_QUERIES x _NPROBE probe rows
-        .join(F.broadcast(probe), "cluster")
         .filter(F.col("vec_id") != F.col("qid"))
     )
-    # ADC distance: four map lookups keyed by the vector's PQ codes,
-    # summed as exact decimals in the same fixed order as before (each
-    # lookup value is the identical _sq_l2 double the LUT join carried)
-    adc = (
-        F.element_at(F.col("lut0"), F.col("code0")).cast("decimal(30,10)")
-        + F.element_at(F.col("lut1"), F.col("code1")).cast("decimal(30,10)")
-        + F.element_at(F.col("lut2"), F.col("code2")).cast("decimal(30,10)")
-        + F.element_at(F.col("lut3"), F.col("code3")).cast("decimal(30,10)")
-    )
-    scored = cand.select("qid", "vec_id", adc.alias("adc_dec"))
     w = Window.partitionBy("qid").orderBy("adc_dec", "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -733,6 +701,25 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("adc_dec", 6).cast("double").alias("adc"),
         )
     )
+
+
+def _collect_ivfpq_cells(spark: SparkSession, sf_dir: str) -> dict:
+    """{cluster: [qid, ...]}: the ``_NPROBE`` nearest cells of each query
+    vector, inverted to cell -> the queries probing it (at most
+    ``_N_QUERIES × _NPROBE`` pairs, collected once per session)."""
+    # without the spread repartition the vec_id predicate pushes into
+    # the parquet scan
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") < _N_QUERIES
+    )
+    probe = emb.select(
+        F.col("vec_id").alias("qid"),
+        _probe_cells(_trained_codebook_values(spark, sf_dir)).alias("pc"),
+    )
+    cells: dict[int, list[int]] = {}
+    for qid, pc in sorted(probe.collect()):
+        cells.setdefault(int(pc["cluster"]), []).append(int(qid))
+    return cells
 
 
 def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -617,28 +617,11 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("rank"),
             F.lit(0.0).alias("adc"),
         ).filter(F.lit(False))
-    structs = []
-    for qid in sorted(d_by):
-        # dense per-subspace distance array indexed by code; a cluster
-        # absent from the codebook is unreachable by any code (argmin
-        # only ranges over codebook clusters) — 0.0 filler is never read
-        terms = " + ".join(
-            "CAST(element_at("
-            + arr_lit(
-                [
-                    d_by[qid][m].get(c, 0.0)
-                    for c in range(
-                        max(d_by[qid][m], default=_PQ_K - 1) + 1
-                    )
-                ]
-            )
-            + f", code{m} + 1) AS DECIMAL(30,10))"
-            for m in range(_PQ_M)
-        )
-        structs.append(
-            f"named_struct('qid', CAST({qid} AS BIGINT), "
-            f"'adc_dec', {terms})"
-        )
+    structs = [
+        f"named_struct('qid', CAST({qid} AS BIGINT), "
+        f"'adc_dec', {_adc_dec_sql(d_by[qid])})"
+        for qid in sorted(d_by)
+    ]
     # two-step select: struct-field extraction cannot share a select
     # with a generator
     scored = (
@@ -662,43 +645,56 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _adc_dec_sql(lut: dict) -> str:
+    """Spark-SQL exact-decimal ADC distance of a row's ``code0..code3``
+    to one query, whose lookup tables are ``lut`` = {m: {cluster: d}}:
+    four lookups summed in fixed subspace order.  Each table is a dense
+    literal array indexed by ``code + 1``; a cluster absent from the
+    codebook is unreachable by any code (argmin only ranges over
+    codebook clusters), so its 0.0 filler is never read."""
+    return " + ".join(
+        "CAST(element_at("
+        + arr_lit(
+            [
+                lut[m].get(c, 0.0)
+                for c in range(max(lut[m], default=_PQ_K - 1) + 1)
+            ]
+        )
+        + f", code{m} + 1) AS DECIMAL(30,10))"
+        for m in range(_PQ_M)
+    )
+
+
 def _adc_luts(spark: SparkSession, sf_dir: str) -> dict:
     """{qid: {m: {cluster: d}}}: the ADC lookup tables of the
     ``_ADC_QUERIES`` query vectors, shared per (session, input) under the
     ``cache.shared`` key ``pq_adc_lut`` (collected driver values,
-    O(M·k·|Q|) — bounded by the index shape, never the corpus)."""
+    O(M·k·|Q|) — bounded by the index shape, never the corpus); both
+    ADC searches, this module's and ``ivf.ivfpq_search``, read them."""
     return shared("pq_adc_lut", spark, sf_dir, _collect_adc_luts)
 
 
 def _collect_adc_luts(spark: SparkSession, sf_dir: str) -> dict:
-    cb = local_frame(
-        spark,
-        _pq_codebook_values(spark, sf_dir),
-        "m int, cluster bigint, cemb array<double>",
+    # the codebook is ONE foldable literal array scored per query row
+    # (the _cell_candidates shape): a single scan-and-collect job, no
+    # join and no broadcast of a codebook frame
+    cb = ", ".join(
+        f"named_struct('m', {m}, 'cluster', CAST({cluster} AS BIGINT), "
+        f"'cemb', {arr_lit(cemb)})"
+        for m, cluster, cemb in _pq_codebook_values(spark, sf_dir)
     )
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qsub = (
-        emb.filter(F.col("vec_id") < _ADC_QUERIES)
+    sub = f"slice(embedding, c.m * {_PQ_SUB} + 1, {_PQ_SUB})"
+    lut = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < _ADC_QUERIES)
         .select(
             F.col("vec_id").alias("qid"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.slice("embedding", m * _PQ_SUB + 1, _PQ_SUB).alias(
-                                "qemb"
-                            ),
-                        )
-                        for m in range(_PQ_M)
-                    ]
-                )
+            F.expr(
+                f"explode(transform(array({cb}), c -> named_struct('m', c.m, "
+                f"'cluster', c.cluster, 'd', {sparksql_sq_l2(sub, 'c.cemb')})))"
             ).alias("s"),
         )
-        .select("qid", F.col("s.m").alias("m"), F.col("s.qemb").alias("qemb"))
-    )
-    lut = qsub.join(cb, "m").select(
-        "qid", "m", "cluster", _sq_l2(F.col("qemb"), F.col("cemb")).alias("d")
+        .select("qid", "s.m", "s.cluster", "s.d")
     )
     d_by: dict[int, dict[int, dict[int, float]]] = {}
     for r in lut.collect():

@@ -150,9 +150,6 @@ def test_no_accidental_cartesian_anywhere(spark, queries):
         # one-row total-token-count broadcast (the derived heavy-hitter
         # threshold total // 200)
         "text_heavy_hitters_cms",
-        # ivf_kmeans_ann's k-row centroid broadcast (probe-list build) plus
-        # embed_pq_quantize's per-subspace codebook broadcasts, composed
-        "ivfpq_search",
         # one-row (min, max) range broadcast for integer bucket math
         "agg_histogram",
         # one-row n_users broadcast (the N in the quintile formula),

@@ -140,6 +140,10 @@ BUDGETS = {
     # pq_codes relation — map-only element_at projection + the
     # per-query top-k window exchange; no broadcasts at all
     "pq_adc_topk": (1, 0),
+    # same read path over the checkpointed ivfpq_index (primed below):
+    # the probe cells and ADC LUTs are inlined as one literal map, so
+    # the top-k window is the one exchange — no probe broadcast
+    "ivfpq_search": (1, 0),
     # ONE user shuffle: the partition-only min(ts) window and the moment
     # aggregate ride the same exchange
     "ts_linear_trend": (1, 0),
@@ -221,7 +225,12 @@ def test_shuffle_budget(spark, name):
     # substitutes into a matching subtree here, changing the census —
     # audit the uncached shape
     spark.catalog.clearCache()
-    if name in ("embed_pq_quantize", "pq_adc_topk", "dedup_semantic"):
+    if name in (
+        "embed_pq_quantize",
+        "pq_adc_topk",
+        "ivfpq_search",
+        "dedup_semantic",
+    ):
         # pin the steady-state plan: train- and encode-once-per-session
         # means the audited read path uses the session codebook and
         # codes, not the Lloyd chain or the encoding projection

@@ -14,6 +14,7 @@ from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -224,12 +225,12 @@ def test_build_attributed_once(spark, queries):
 # ---------------------------------------------------------------------------
 
 #: query -> parquet scans of ``embeddings`` in a warm call's plan: the
-#: corpus side reads the checkpointed codes; only ivfpq_search scans
-#: its 5 query vectors
+#: corpus side reads the checkpointed codes, and the query side is
+#: collected values (ADC lookup tables, ivfpq_search's probe cells)
 WARM_EMBEDDING_SCANS = {
     "embed_pq_quantize": 0,
     "pq_adc_topk": 0,
-    "ivfpq_search": 1,
+    "ivfpq_search": 0,
 }
 
 
@@ -263,6 +264,67 @@ def test_warm_call_reads_encoded_corpus(spark, queries, name):
     assert _embedding_scans(df) == WARM_EMBEDDING_SCANS[name]
     assert sorted(df.collect(), key=repr) == first
     release_persists()
+
+
+@pytest.mark.parametrize(
+    "order",
+    [("pq_adc_topk", "ivfpq_search"), ("ivfpq_search", "pq_adc_topk")],
+    ids=["topk_first", "ivfpq_first"],
+)
+def test_adc_tables_built_once_for_both_searches(spark, queries, order):
+    """``pq_adc_topk`` and ``ivfpq_search`` score the same queries
+    against the same PQ codebook: whichever runs first builds the ADC
+    lookup tables, and the other reads them."""
+    clear()
+    for name in order:
+        queries[name](spark, SF_DIR).collect()
+        release_persists()
+        assert [b[:2] for b in shared_builds() if b[0] == "pq_adc_lut"] == [
+            ("pq_adc_lut", SF_DIR)
+        ], name
+
+
+def test_warm_ivfpq_search_runs_two_jobs(spark, queries):
+    """A warm ``ivfpq_search`` is the index scan with the scoring
+    projection, then the per-query top-k window: two jobs, no probe
+    broadcast."""
+    clear()
+    queries["ivfpq_search"](spark, SF_DIR).collect()
+    df = queries["ivfpq_search"](spark, SF_DIR)
+    sc = spark.sparkContext
+    group = "warm-exec-ivfpq_search"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= len(_group_jobs(spark, group)) <= 2
+
+
+def test_ivfpq_search_without_queries_is_empty(spark, queries, tmp_path):
+    """An input with no query vector (``vec_id < _N_QUERIES``) gives an
+    empty result with the usual schema; it has no PQ codebook seeds
+    (``vec_id < _PQ_K``) either, so the search must not train one."""
+    from aind_hcr_data_transformation_spark.operators.ivf import _N_QUERIES
+
+    copy = tmp_path / "sf"
+    shutil.copytree(SF_DIR, copy, copy_function=shutil.copyfile)
+    t = pq.read_table(copy / "embeddings.parquet")
+    keep = pc.greater_equal(t.column("vec_id"), _N_QUERIES)
+    pq.write_table(t.filter(keep), copy / "embeddings.parquet")
+    clear()
+    try:
+        want = queries["ivfpq_search"](spark, SF_DIR).schema
+        df = queries["ivfpq_search"](spark, str(copy))
+        got = df.schema
+        assert df.collect() == []
+    finally:
+        release_persists()
+        clear()
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in want
+    ]
 
 
 def _perturb_embeddings(path):
