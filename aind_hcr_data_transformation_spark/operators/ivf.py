@@ -10,20 +10,24 @@ chained CTEs):
 * init: centroids = the first ``K`` vectors by ``vec_id`` (canonical
   deterministic seeding; production would use k-means‖ with a fixed
   seed).
-* assign: squared-L2 distance via a LEFT-ASSOCIATED fold over double
+* assign: ``c·c − 2·x·c`` via LEFT-ASSOCIATED folds over double
   components — bit-identical IEEE sequences in both engines; ties break
-  on cluster id (``row_number`` ordered by (dist, cluster)).
+  on cluster id (``row_number`` ordered by (score, cluster)).
 * update: per-dimension sums in exact DECIMAL(30,10) (partition-order
   immune — the float-sum nondeterminism that would otherwise break the
   oracle), then mean = CAST(sum AS DOUBLE) / n (same two deterministic
   operands → same double in both engines).
 
-Scale notes (100 TB): each iteration is one broadcast join (k centroid
-rows) + one hash aggregate on ``cluster`` — the canonical Spark k-means
-shape (what MLlib does, minus its driver-side collect). Assignment
-shuffles only (vec_id, cluster, dist)-sized rows; vectors themselves
-shuffle once per update aggregate as 64 decimal partials with map-side
-combine. The search is an equi-join on the cluster id: per-bucket
+The trainer and the nearest-centroid expression are the shared k-means
+kernel (``kmeans.lloyd`` / ``kmeans.assign``); IVF and SemDeDup are its
+one-subspace case.
+
+Scale notes (100 TB): each Lloyd iteration is one job — a map-only
+assignment against the codebook inlined as a literal, then a hash
+aggregate of exact decimal sums on (cluster, dim) whose codebook-sized
+result is collected (MLlib's KMeans loop shape).  No join and no
+broadcast: the corpus shuffles only as the aggregate's map-side-combined
+partials.  The search is an equi-join on the cluster id: per-bucket
 population is n/k and k grows with n.
 
 Reference: the engine's north-star extension surface (BASELINE.json);
@@ -37,21 +41,32 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked, shared
 from ..functions.compat import dround
-from ..session import interpreted_eval, local_frame
 from ..functions.vectors import (
     EMB_DIM,
-    arr_lit,
-    dlit,
     spark_cosine_prenorm,
     spark_dot,
-    sparksql_dot,
     sql_cosine,
 )
+from ..session import local_frame
 from ..tables import load_table
+from .kmeans import assign, candidates_sql, lloyd, ranked, subvector_sql
+from .vectorops import (
+    _ADC_QUERIES,
+    _PQ_ITERS,
+    _PQ_M,
+    _PQ_SUB,
+    _adc_dec_sql,
+    _adc_luts,
+    _adc_rank,
+    _pq_codebooks,
+    _pq_ctes,
+    _query_vectors,
+    _sql_pq_err_off,
+)
 
 _K = 8  # coarse-quantizer cells; scale rule: k ≈ n / target_bucket_size
 _ITERS = 3  # fixed Lloyd iterations (deterministic, unrollable)
-_N_QUERIES = 5
+_N_QUERIES = _ADC_QUERIES  # the standard query vectors, vec_id < 5
 _TOP_K = 3
 # Search probes the NPROBE nearest cells, not just the query's own:
 # nprobe=1 sacrifices recall at cell boundaries (a neighbor just across
@@ -103,124 +118,43 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _train_values(emb: DataFrame) -> list:
-    """K-means codebook values after ``_ITERS`` Lloyd iterations —
-    driver-iterated, exactly MLlib's KMeans loop shape: the k×dim
-    centroid array lives on the DRIVER between iterations and each
-    iteration is ONE distributed job (literal-inlined nearest-centroid
-    assignment → per-(cluster, dim) exact decimal sums → collect the
-    k×dim sums).  The round-6 DataFrame-chained form (broadcast join +
-    argmin aggregate + array rebuild per iteration, persisted lineage)
-    computed the identical values in ~3× the wall time at fixture scale
-    because each iteration cost several jobs of pure orchestration.
-
-    Bit-equivalence with the previous formulation (and with the
-    unrolled-CTE oracle):
-
-    * assignment score ``c·c − 2·x·c`` uses :func:`_cell_candidates` —
-      the same left-fold order as ``_assign``'s ``spark_dot``, with the
-      driver-held centroids inlined as double literals (Python floats
-      ARE IEEE doubles; the ``c²`` Python fold mirrors ``spark_dot(c,
-      c)`` term order);
-    * the argmin is ``array_min`` over (score, cluster) structs — the
-      same deterministic tie-break as ``min(struct(score, cluster,
-      …))`` since (score, cluster) pairs are unique per vector;
-    * the update sums each dimension as ``DECIMAL(30,10)`` exactly like
-      ``_update`` (order-immune, so partial aggregation is free), and
-      the driver computes ``mean = double(sum)/n`` — the same
-      correctly-rounded decimal→double conversion and IEEE division
-      Spark's ``s.cast("double")/n`` performs.
-
-    Collect volume per iteration is k×dim (cluster, dim, sum, count)
-    rows — codebook-sized by definition, independent of corpus rows:
-    the legitimate MLlib-style driver collect at any scale."""
-    # the corpus is re-scanned once per iteration — cache it so
-    # iterations 2..N read materialized blocks instead of re-running the
-    # scan (+ the spread exchange); released with the query's persists
-    emb = persist_tracked(emb)
-    init = emb.filter(F.col("vec_id") < _K).select("vec_id", "embedding").collect()
-    values = sorted(
-        (int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in init
-    )
-    # interpreted eval for the Lloyd collects (r13): each iteration's
-    # literal-inlined assignment is a brand-new expression tree, so
-    # codegen pays a fresh Janino compile per iteration for a job over
-    # codebook-training data volumes — see session.interpreted_eval
-    with interpreted_eval(emb.sparkSession):
-        for _ in range(_ITERS):
-            rows = (
-                emb.select(
-                    # two-step: a struct-field extraction cannot share a
-                    # select with a generator (Spark resolves the
-                    # generator first and loses the struct's field names)
-                    F.array_min(_cell_candidates("embedding", values))[
-                        "cluster"
-                    ].alias("cluster"),
-                    "embedding",
-                )
-                .select("cluster", F.posexplode("embedding").alias("dim", "v"))
-                .select(
-                    "cluster",
-                    "dim",
-                    F.col("v").cast("double").cast("decimal(30,10)").alias("v"),
-                )
-                .groupBy("cluster", "dim")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            byc: dict[int, dict[int, float]] = {}
-            for r in rows:
-                byc.setdefault(int(r["cluster"]), {})[int(r["dim"])] = (
-                    float(r["s"]) / r["n"]
-                )
-            values = sorted(
-                (c, [dims[d] for d in range(len(dims))])
-                for c, dims in byc.items()
-            )
-    return values
-
-
 def _train(emb: DataFrame) -> DataFrame:
-    """K-means codebook after ``_ITERS`` Lloyd iterations (DataFrame
-    wrapper over :func:`_train_values` for the save/load/search API)."""
-    values = _train_values(emb)
+    """K-means codebook after ``_ITERS`` Lloyd iterations, as a frame for
+    the save/load/search API (the one-subspace case of
+    :func:`kmeans.lloyd`)."""
+    values = lloyd(emb, _K, 1, _ITERS)[0]
     return local_frame(emb.sparkSession, values, "cluster bigint, cemb array<double>")
 
 
-def _train_codebook_values(spark: SparkSession, sf_dir: str) -> list:
+def _train_ivf(spark: SparkSession, sf_dir: str) -> list:
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
-    return _train_values(emb)
+    return lloyd(emb, _K, 1, _ITERS)[0]
 
 
-def _trained_codebook_values(spark: SparkSession, sf_dir: str) -> list:
+def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
     """Collected (cluster, cemb) centroid values of the session's coarse
     quantizer — train once, search many times (``save_codebook``/
     ``load_codebook`` is the cross-job form): ``ivf_kmeans_ann`` and
     ``ivfpq_search`` share one Lloyd chain, and Python floats round-trip
     the IEEE doubles exactly, so every consumer gets bit-identical
     centroids."""
-    return shared("ivf_codebook", spark, sf_dir, _train_codebook_values)
-
-
-def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    values = _trained_codebook_values(spark, sf_dir)
-    return local_frame(spark, values, "cluster bigint, cemb array<double>")
+    return shared("ivf_codebook", spark, sf_dir, _train_ivf)
 
 
 def ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN end-to-end: train the codebook, assign every vector to
     its cell, then answer the standard 5 queries with exact cosine top-3
     over the ``_NPROBE`` nearest cells per query (multi-probe — rank ≤
-    nprobe in the same assignment window whose rank-1 is the cell
-    assignment).
+    nprobe in the same (score, cluster) order whose first entry is the
+    cell assignment).
 
     The oracle replays the identical Lloyd iterations as unrolled SQL
     CTEs — a differential test of the full iterative algorithm, not just
     the final search."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    return _search(emb, _trained_codebook(spark, sf_dir))
+    return _probe_search(emb, _ivf_codebook(spark, sf_dir))
 
 
 def save_codebook(codebook: DataFrame, path: str) -> None:
@@ -237,97 +171,45 @@ def load_codebook(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).select("cluster", "cemb")
 
 
-def _codebook_values(codebook: DataFrame) -> list:
-    """Collect a k-row codebook to driver values.  This is the
-    broadcast-the-codebook move in its cheapest form: k is tiny by
-    definition (a codebook, not data), and the collected doubles
-    round-trip exactly, so downstream literal expressions score
-    bit-identically to the broadcast-join formulation."""
-    return [(r["cluster"], list(r["cemb"])) for r in codebook.collect()]
-
-
-def _cell_candidates_sql(emb_sql: str, values) -> str:
-    """Spark-SQL text of :func:`_cell_candidates` (see there).
-
-    Shaped as ``transform(<codebook literal>, c -> score struct)`` rather
-    than k inline copies of the fold: the codebook array-of-structs is
-    wholly foldable, so ConstantFolding collapses it into ONE literal
-    that codegen stores as a reference object — the generated source is
-    then independent of the centroid VALUES and the compiled kernel is
-    reused across Lloyd iterations (scalar literals would be inlined
-    into the source, forcing a fresh whole-stage-codegen compile per
-    iteration — measured ~1 s each)."""
-    entries = []
-    for cluster, cemb in values:
-        c2 = 0.0
-        for v in cemb:
-            c2 = c2 + v * v  # same left fold as spark_dot(c, c)
-        entries.append(
-            f"named_struct('c2', {dlit(c2)}, "
-            f"'cluster', CAST({int(cluster)} AS BIGINT), "
-            f"'cemb', {arr_lit(cemb)})"
-        )
-    cb = "array(" + ", ".join(entries) + ")"
-    dot = sparksql_dot(emb_sql, "c.cemb")
-    return (
-        f"transform({cb}, c -> named_struct("
-        f"'score', c.c2 - 2.0D * {dot}, 'cluster', c.cluster))"
-    )
-
-
-def _cell_candidates(emb_sql: str, values) -> F.Column:
-    """``array<struct<score,cluster>>`` of per-centroid scores with the
-    codebook inlined as literals — the same ``c·c − 2·x·c`` formula and
-    left-fold order as :func:`_assign`, but evaluated per ROW with no
-    join and no aggregate: the cell assignment becomes a map-only
-    expression inside whole-stage codegen (FAISS keeps the coarse
-    codebook in L1 for exactly this reason).
-
-    ``emb_sql`` is a SQL expression STRING (e.g. ``"embedding"`` or a
-    ``slice(...)`` of it), not a Column: the whole candidate array is
-    emitted as one SQL string and parsed with a single ``F.expr`` —
-    the Column-API form cost one py4j round-trip per double literal
-    (~1.5 s of pure DataFrame construction per 8×64 codebook, measured;
-    the analyzed expression and every IEEE operation are identical —
-    bit-equality is pinned in tests/test_sim_recall.py)."""
-    return F.expr(_cell_candidates_sql(emb_sql, values))
-
-
-def _probe_cells(values) -> F.Column:
-    """Exploded probe list of ``embedding``: its ``_NPROBE`` nearest
-    cells, ranked by the same (score, cluster) order as the cell
-    assignment — ``array_sort`` on the struct is the windowless form."""
-    return F.explode(
-        F.slice(F.array_sort(_cell_candidates("embedding", values)), 1, _NPROBE)
-    )
-
-
 def _search(emb: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Multi-probe IVF search against a (possibly reloaded) codebook.
+    """Multi-probe IVF search against a (possibly reloaded) codebook
+    frame.  Its k rows are collected: a codebook, not data, and the
+    doubles round-trip exactly."""
+    return _probe_search(
+        emb, [(r["cluster"], list(r["cemb"])) for r in codebook.collect()]
+    )
 
-    The codebook's k rows are collected and inlined as literal
-    expressions, so the corpus side is a single map-only projection
-    (vec_id, embedding, cell, |x|²) — ZERO shuffles before the final
-    per-query top-k window; the round-4 formulation paid a broadcast
-    join plus an n-row argmin exchange for the same assignment."""
-    values = _codebook_values(codebook)
-    corpus = emb.select(
+
+def _probe_search(emb: DataFrame, codebook: list) -> DataFrame:
+    """Multi-probe IVF search against collected codebook values.
+
+    The codebook is inlined as a literal (:func:`kmeans.assign`), so the
+    corpus side is a single map-only projection (vec_id, embedding,
+    cell, |x|²) — ZERO shuffles before the final per-query top-k window;
+    the round-4 formulation paid a broadcast join plus an n-row argmin
+    exchange for the same assignment."""
+    corpus = assign(
+        emb,
+        {"w": ("embedding", codebook)},
         "vec_id",
         "embedding",
-        F.array_min(_cell_candidates("embedding", values))[
-            "cluster"
-        ].alias("cluster"),
         spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+    ).select("vec_id", "embedding", F.col("w.cluster").alias("cluster"), "n2")
+    # query probe list: the _NPROBE nearest cells in the assignment's
+    # (score, cluster) order (array_sort on the struct is the windowless
+    # form); every corpus vector sits in exactly ONE cell and probe cells
+    # are distinct, so no candidate dedup is needed downstream
+    probe = F.expr(
+        f"explode(slice(array_sort({candidates_sql('embedding', codebook)}), "
+        f"1, {_NPROBE}))"
     )
-    # query probe list: every corpus vector sits in exactly ONE cell and
-    # probe cells are distinct, so no candidate dedup is needed downstream
     queries = (
         emb.filter(F.col("vec_id") < _N_QUERIES)
         .select(
             F.col("vec_id").alias("qid"),
             F.col("embedding").alias("qe"),
             spark_dot(F.col("embedding"), F.col("embedding")).alias("qn2"),
-            _probe_cells(values).alias("pc"),
+            probe.alias("pc"),
         )
         .select("qid", "qe", "qn2", F.col("pc.cluster").alias("cluster"))
     )
@@ -525,20 +407,17 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 iterations × 2 consumers + the final assignment
     corpus = persist_tracked(_normalize(_sem_corpus(spark, sf_dir)))
     # train-once-per-session + literal-codebook assignment, exactly as
-    # the IVF read path (see _trained_codebook_values / _cell_candidates);
-    # its own key because it trains on the normalized mutant-augmented
-    # corpus
-    values = shared(
-        "semdedup_codebook", spark, sf_dir, lambda s, d: _train_values(corpus)
+    # the IVF read path (see _ivf_codebook / _probe_search); its own key
+    # because it trains on the normalized mutant-augmented corpus
+    codebook = shared(
+        "semdedup_codebook",
+        spark,
+        sf_dir,
+        lambda s, d: lloyd(corpus, _K, 1, _ITERS)[0],
     )
     assigned = persist_tracked(
-        corpus.select(
-            "vec_id",
-            "embedding",
-            F.array_min(_cell_candidates("embedding", values))[
-                "cluster"
-            ].alias("cluster"),
-        )
+        assign(corpus, {"w": ("embedding", codebook)}, "vec_id", "embedding")
+        .select("vec_id", "embedding", F.col("w.cluster").alias("cluster"))
     )
     a = assigned.select(
         F.col("vec_id").alias("a_id"), F.col("embedding").alias("aemb"), "cluster"
@@ -637,34 +516,27 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse quantizer restricts each query to its ``_NPROBE`` nearest
     cells, and ranking inside those cells runs on 4-byte PQ codes via
     per-query lookup tables — vectors are touched only at train time.
-    This composes the two trainers this module family already proves
-    (:func:`_train` here, ``vectorops._pq_train_values``) into one index.
+    Both codebooks come from the one Lloyd trainer
+    (:func:`kmeans.lloyd`): the IVF codebook is its one-subspace case,
+    the PQ codebook its four-subspace case.
 
     Plan: the codebooks (``ivf_codebook``/``pq_codebook``), the encoded
     corpus (``ivfpq_index``: cell + four PQ codes per vector), each
     query's probe cells (``ivfpq_cells``) and the queries' ADC lookup
     tables (``pq_adc_lut``, shared with ``pq_adc_topk``) are built once
-    per (session, input) through ``cache.shared``.  A call inlines cells
-    and tables as one literal map cell -> [(qid, ADC of the row's
-    codes)], so the read path is a map-only ``explode(element_at(map,
-    cluster))`` over the index scan plus the per-query top-k window,
-    its one exchange: no join, no broadcast, no embeddings scan.  At
-    100 TB: cells shard the corpus (n/k vectors each), codes are 16×
-    smaller than the embeddings, and the probe list bounds read volume
-    per query — the reason this is THE production ANN layout.
+    per (session, input) through ``cache.shared``; the cells and the
+    tables are derived on the driver from the one collect of the query
+    vectors (``query_vectors``).  A call inlines cells and tables as one
+    literal map cell -> [(qid, ADC of the row's codes)], so the read
+    path is a map-only ``explode(element_at(map, cluster))`` over the
+    index scan plus the per-query top-k window, its one exchange: no
+    join, no broadcast, no embeddings scan.  At 100 TB: cells shard the
+    corpus (n/k vectors each), codes are 16× smaller than the
+    embeddings, and the probe list bounds read volume per query — the
+    reason this is THE production ANN layout.
     """
-    from .vectorops import _adc_dec_sql, _adc_luts
-
     cells = shared("ivfpq_cells", spark, sf_dir, _collect_ivfpq_cells)
-    if not cells:  # no query vectors, so no PQ codebook seeds either
-        return load_table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").alias("qid"),
-            "vec_id",
-            F.lit(1).alias("rank"),
-            F.lit(0.0).alias("adc"),
-        ).filter(F.lit(False))
-    index = _ivfpq_index(spark, sf_dir)
-    luts = _adc_luts(spark, sf_dir)  # same queries: _ADC_QUERIES == _N_QUERIES
+    luts = _adc_luts(spark, sf_dir)
     entries = ", ".join(
         f"CAST({cluster} AS BIGINT), array("
         + ", ".join(
@@ -675,50 +547,25 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         + ")"
         for cluster, qids in sorted(cells.items())
     )
-    # two-step select: struct-field extraction cannot share a select
-    # with a generator; an unprobed cell maps to NULL, which explodes
-    # to no rows
-    scored = (
-        index.select(
-            "vec_id",
-            F.expr(f"explode(element_at(map({entries}), cluster))").alias("s"),
-        )
-        .select(
-            F.col("s.qid").alias("qid"),
-            "vec_id",
-            F.col("s.adc_dec").alias("adc_dec"),
-        )
-        .filter(F.col("vec_id") != F.col("qid"))
-    )
-    w = Window.partitionBy("qid").orderBy("adc_dec", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            "qid",
-            "vec_id",
-            "rank",
-            F.round("adc_dec", 6).cast("double").alias("adc"),
-        )
+    # an unprobed cell maps to NULL, which explodes to no rows
+    return _adc_rank(
+        _ivfpq_index(spark, sf_dir),
+        entries and f"explode(element_at(map({entries}), cluster))",
+        _TOP_K,
     )
 
 
 def _collect_ivfpq_cells(spark: SparkSession, sf_dir: str) -> dict:
     """{cluster: [qid, ...]}: the ``_NPROBE`` nearest cells of each query
     vector, inverted to cell -> the queries probing it (at most
-    ``_N_QUERIES × _NPROBE`` pairs, collected once per session)."""
-    # without the spread repartition the vec_id predicate pushes into
-    # the parquet scan
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < _N_QUERIES
-    )
-    probe = emb.select(
-        F.col("vec_id").alias("qid"),
-        _probe_cells(_trained_codebook_values(spark, sf_dir)).alias("pc"),
-    )
+    ``_N_QUERIES × _NPROBE`` pairs).  Scored on the driver from the
+    collected query vectors, in the assignment's (score, cluster)
+    order."""
+    codebook = _ivf_codebook(spark, sf_dir)
     cells: dict[int, list[int]] = {}
-    for qid, pc in sorted(probe.collect()):
-        cells.setdefault(int(pc["cluster"]), []).append(int(qid))
+    for qid, x in _query_vectors(spark, sf_dir):
+        for _, cluster in ranked(x, codebook)[:_NPROBE]:
+            cells.setdefault(cluster, []).append(qid)
     return cells
 
 
@@ -737,45 +584,27 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .vectorops import _PQ_M, _pq_centroids_by_m, _pq_sub_sql
-
-    ivf_values = _trained_codebook_values(spark, sf_dir)
-    by_m = _pq_centroids_by_m(spark, sf_dir)
-
-    def _code_expr(m) -> F.Column:
-        # same score formula and (score, cluster) argmin as the PQ
-        # encoder (vectorops._pq_encode): c·c − 2·x·c over the m-th
-        # sub-vector (one-F.expr SQL construction — see _cell_candidates)
-        sub = _pq_sub_sql(m)
-        cands = []
-        for cluster, cemb in by_m[m]:
-            c2 = 0.0
-            for v in cemb:
-                c2 = c2 + v * v
-            dot = sparksql_dot(sub, arr_lit(cemb))
-            cands.append(
-                f"named_struct('score', {dlit(c2)} - 2.0D * {dot}, "
-                f"'cluster', CAST({int(cluster)} AS INT))"
-            )
-        return F.expr(
-            "array_min(array(" + ", ".join(cands) + "))"
-        )["cluster"]
-
+    ivf = _ivf_codebook(spark, sf_dir)
+    pq = _pq_codebooks(spark, sf_dir)
+    winners = {
+        "w": ("embedding", ivf),
+        **{f"w{m}": (subvector_sql(m, _PQ_M), pq[m]) for m in range(_PQ_M)},
+    }
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
-    return emb.select(
-        "vec_id",
-        F.array_min(_cell_candidates("embedding", ivf_values))[
-            "cluster"
-        ].alias("cluster"),
-        *[_code_expr(m).alias(f"code{m}") for m in range(_PQ_M)],
-    ).localCheckpoint(eager=False)
+    return (
+        assign(emb, winners, "vec_id")
+        .select(
+            "vec_id",
+            F.col("w.cluster").alias("cluster"),
+            *[F.col(f"w{m}.cluster").cast("int").alias(f"code{m}") for m in range(_PQ_M)],
+        )
+        .localCheckpoint(eager=False)
+    )
 
 
 def _build_ivfpq_oracle() -> str:
-    from .vectorops import _PQ_ITERS, _PQ_M, _PQ_SUB, _pq_ctes, _sql_pq_err_off
-
     final = _ITERS
     pq_ctes = ",".join(_pq_ctes())
     lut_ctes = []

@@ -22,16 +22,10 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked, shared
 from ..functions.compat import dround, dsum, sql_round
-from ..session import interpreted_eval, local_frame
-from ..functions.vectors import (
-    EMB_DIM,
-    arr_lit,
-    dlit,
-    spark_dot,
-    sparksql_dot,
-    sparksql_sq_l2,
-)
+from ..functions.vectors import EMB_DIM, arr_lit, spark_dot
+from ..session import local_frame
 from ..tables import load_table
+from .kmeans import assign, fold_sq_l2, lloyd, subvector_sql
 
 
 def _l2_norm(vec) -> F.Column:
@@ -242,11 +236,6 @@ _PQ_K = 4                    # codewords per subspace codebook
 _PQ_ITERS = 2                # fixed Lloyd iterations per subspace
 
 
-def _pq_sub_sql(m: int) -> str:
-    """SQL for the m-th PQ sub-vector of the ``embedding`` column."""
-    return f"slice(embedding, {m * _PQ_SUB + 1}, {_PQ_SUB})"
-
-
 def _sq_l2(x, c) -> F.Column:
     """Left-folded squared-L2 between two equal-length arrays, double."""
     return F.aggregate(
@@ -271,7 +260,8 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     64×float32 vector to 4 code bytes (64×) for in-memory search.
 
     ALL FOUR codebooks train in ONE driver-iterated Lloyd chain
-    (:func:`_pq_train_values`), and the corpus is encoded against them
+    (:func:`_pq_codebooks`, the four-subspace case of
+    :func:`kmeans.lloyd`), and the corpus is encoded against them
     once per (session, input): the session-shared ``pq_codes`` relation
     (:func:`_pq_codes`).  This query is a map-only projection over those
     codes — no embedding scan, no exchange — so a repeated call reads
@@ -294,102 +284,20 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_codebook_values(spark: SparkSession, sf_dir: str) -> list:
-    """Collected (m, cluster, cemb) PQ sub-codebook values for the
-    session, training on first use: the m×k tiny rows rebuild exactly,
-    so the Lloyd rounds run once per (session, input) and both encoded
-    corpora (``pq_codes`` here, ``ivfpq_index`` in ``ivf``) are built
-    against the same centroids."""
-    return shared("pq_codebook", spark, sf_dir, _pq_train_values)
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
+    """The session's PQ sub-codebooks, one ``[(cluster, cemb), ...]``
+    per subspace, training on first use: the Lloyd rounds run once per
+    (session, input) under the ``cache.shared`` key ``pq_codebook``, and
+    both encoded corpora (``pq_codes`` here, ``ivfpq_index`` in ``ivf``)
+    and the ADC lookup tables use the same centroids."""
+    return shared("pq_codebook", spark, sf_dir, _train_pq)
 
 
-def _pq_centroids_by_m(spark: SparkSession, sf_dir: str) -> dict:
-    """{m: [(cluster, cemb), ...]} of the session PQ codebook."""
-    by_m: dict[int, list] = {}
-    for m, cluster, cemb in _pq_codebook_values(spark, sf_dir):
-        by_m.setdefault(int(m), []).append((int(cluster), list(cemb)))
-    return by_m
-
-
-def _pq_train_values(spark: SparkSession, sf_dir: str) -> list:
-    """Driver-iterated PQ training: all four sub-codebooks advance in
-    each ONE-job Lloyd iteration — the same MLlib loop shape as
-    ``ivf._train_values`` (driver-held centroids inlined as literals for
-    the assignment, per-(m, cluster, subdim) exact decimal sums
-    collected, means computed on the driver), with the subspace index
-    folded into the aggregate key instead of a row fan-out.  Collect
-    volume per iteration is M*k*sub-dim (4*4*16 = 256 rows) —
-    codebook-sized, corpus-independent.  Values are bit-identical to
-    the previous broadcast-join/argmin-aggregate chain: same
-    ``c*c - 2*x*c`` fold (``_cell_candidates``), same (score, cluster)
-    argmin tie-break, same DECIMAL(30,10) sums and decimal->double/n
-    mean — the unrolled-CTE oracle is unchanged."""
-    from .ivf import _cell_candidates
-
-    emb = persist_tracked(
-        load_table(spark, sf_dir, "embeddings", spread=True).select(
-            "vec_id", "embedding"
-        )
+def _train_pq(spark: SparkSession, sf_dir: str) -> list:
+    emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
+        "vec_id", "embedding"
     )
-    init = (
-        emb.filter(F.col("vec_id") < _PQ_K).select("vec_id", "embedding").collect()
-    )
-    by_m = {
-        m: sorted(
-            (
-                int(r["vec_id"]),
-                [float(v) for v in r["embedding"][m * _PQ_SUB : (m + 1) * _PQ_SUB]],
-            )
-            for r in init
-        )
-        for m in range(_PQ_M)
-    }
-    # interpreted eval for the Lloyd collects (r13): each iteration's
-    # literal-inlined assignment is a brand-new expression tree, so
-    # codegen pays a fresh Janino compile per iteration for a job over
-    # codebook-training data volumes — see session.interpreted_eval
-    with interpreted_eval(spark):
-        for _ in range(_PQ_ITERS):
-            assigned = emb.select(
-                *[
-                    F.array_min(
-                        _cell_candidates(_pq_sub_sql(m), by_m[m])
-                    )["cluster"].alias(f"c{m}")
-                    for m in range(_PQ_M)
-                ],
-                "embedding",
-            )
-            long = assigned.select(
-                *[f"c{m}" for m in range(_PQ_M)],
-                F.posexplode("embedding").alias("dim", "v"),
-            )
-            m_col = F.expr(f"dim DIV {_PQ_SUB}").cast("int")
-            rows = (
-                long.select(
-                    m_col.alias("m"),
-                    F.element_at(
-                        F.array(*[f"c{m}" for m in range(_PQ_M)]), m_col + 1
-                    ).alias("cluster"),
-                    F.expr(f"dim % {_PQ_SUB}").alias("subdim"),
-                    F.col("v").cast("double").cast("decimal(30,10)").alias("v"),
-                )
-                .groupBy("m", "cluster", "subdim")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            acc: dict[int, dict[int, dict[int, float]]] = {}
-            for r in rows:
-                acc.setdefault(int(r["m"]), {}).setdefault(
-                    int(r["cluster"]), {}
-                )[int(r["subdim"])] = float(r["s"]) / r["n"]
-            by_m = {
-                m: sorted(
-                    (c, [dims[d] for d in range(len(dims))])
-                    for c, dims in clusters.items()
-                )
-                for m, clusters in acc.items()
-            }
-    return [(m, c, cemb) for m in range(_PQ_M) for c, cemb in by_m[m]]
+    return lloyd(emb, _PQ_K, _PQ_M, _PQ_ITERS)
 
 
 def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,34 +320,18 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build of :func:`_pq_codes`: the final assignment inlines the
-    trained sub-codebooks as literal expressions, so it is a single
-    map-only projection over the embedding scan — no explode, no
-    broadcast join, no argmin aggregate (same score fold, same
-    (score, cluster) tie-break, same ``_sq_l2`` error fold on the
+    trained sub-codebooks as literals (:func:`kmeans.assign`), so it is
+    a single map-only projection over the embedding scan — no explode,
+    no broadcast join, no argmin aggregate (same score fold, same
+    (score, cluster) tie-break, same squared-L2 error fold on the
     winning codeword as the oracle's ``pf{m}`` CTEs)."""
-    by_m = _pq_centroids_by_m(spark, sf_dir)
+    books = _pq_codebooks(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
-
-    def _win(m: int) -> F.Column:
-        # one-F.expr SQL construction, same rationale and bit-identical
-        # semantics as ivf._cell_candidates (py4j-per-literal cost)
-        sub = _pq_sub_sql(m)
-        cands = []
-        for cluster, cemb in by_m[m]:
-            c2 = 0.0
-            for v in cemb:
-                c2 = c2 + v * v  # same left fold as spark_dot(c, c)
-            arr = arr_lit(cemb)
-            cands.append(
-                f"named_struct("
-                f"'score', {dlit(c2)} - 2.0D * {sparksql_dot(sub, arr)}, "
-                f"'cluster', CAST({int(cluster)} AS BIGINT), "
-                f"'err', {sparksql_sq_l2(sub, arr)})"
-            )
-        return F.expr("array_min(array(" + ", ".join(cands) + "))")
-
+    winners = {
+        f"w{m}": (subvector_sql(m, _PQ_M), books[m]) for m in range(_PQ_M)
+    }
     # r13 (guide §2.4): the WIDE assignment (one row per vector,
     # cl0..cl3 / e0..e3 columns) instead of exploding it to
     # (vec_id, m, cluster, err) rows — both consumers used to re-pivot
@@ -451,7 +343,7 @@ def _pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst analyzes and plans: measured 0.58 → 0.37 s per build
     # at sf0.01, rows identical.
     return (
-        emb.select("vec_id", *[_win(m).alias(f"w{m}") for m in range(_PQ_M)])
+        assign(emb, winners, "vec_id", err=True)
         .select(
             "vec_id",
             *[F.col(f"w{m}.cluster").alias(f"cl{m}") for m in range(_PQ_M)],
@@ -590,17 +482,17 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the codes are the session-shared ``pq_codes`` relation
     (:func:`_pq_codes`, encoded once per session and input), and the
-    LUT is (queries × M × k) = 80 rows — corpus-independent, computed
-    by ONE tiny Spark job once per session and input (:func:`_adc_luts`)
-    and INLINED as per-(query, subspace) literal arrays indexed by code,
-    exactly how FAISS holds the ADC tables in registers at search time.
-    A call is then a map-only ``element_at`` projection over the codes
-    plus one exchange for the final per-query top-k window: no
-    embedding scan, no join, no job while building.  At 100 TB the codes
-    are 4 bytes/vector (64× smaller than raw), which is the entire
-    point: scan codes, not vectors. The 4-term distance sum is exact
-    decimal in the same fixed textual order, so both engines rank
-    identically.
+    LUT is (queries × M × k) = 80 distances — corpus-independent,
+    computed on the driver once per session and input from the collected
+    query vectors (:func:`_adc_luts`) and INLINED as per-(query,
+    subspace) literal arrays indexed by code, exactly how FAISS holds
+    the ADC tables in registers at search time.  A call is then a
+    map-only ``element_at`` projection over the codes plus one exchange
+    for the final per-query top-k window: no embedding scan, no join, no
+    job while building.  At 100 TB the codes are 4 bytes/vector (64×
+    smaller than raw), which is the entire point: scan codes, not
+    vectors. The 4-term distance sum is exact decimal in the same fixed
+    textual order, so both engines rank identically.
     """
     codes = _pq_codes(spark, sf_dir).select(
         "vec_id",
@@ -609,33 +501,45 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for m in range(_PQ_M)
         ],
     )
-    d_by = _adc_luts(spark, sf_dir)
-    if not d_by:  # degenerate tiny fixture: no query vectors
+    luts = _adc_luts(spark, sf_dir)
+    structs = ", ".join(
+        f"named_struct('qid', CAST({qid} AS BIGINT), "
+        f"'adc_dec', {_adc_dec_sql(luts[qid])})"
+        for qid in sorted(luts)
+    )
+    return _adc_rank(codes, structs and f"explode(array({structs}))", _ADC_TOP_K)
+
+
+def _adc_rank(codes: DataFrame, scores_sql: str, top_k: int) -> DataFrame:
+    """Per-query top-``top_k`` ``(qid, vec_id, rank, adc)`` of an ADC
+    search, the tail of both :func:`pq_adc_topk` and ``ivf.ivfpq_search``.
+
+    ``scores_sql`` is the generator that turns one row of ``codes``
+    (vec_id, code0..code3, ...) into its ``(qid, adc_dec)`` structs; it
+    is empty when the input has no query vectors, and so is the result,
+    with the usual schema."""
+    if not scores_sql:
         return codes.select(
             F.col("vec_id").alias("qid"),
             "vec_id",
             F.lit(1).alias("rank"),
             F.lit(0.0).alias("adc"),
         ).filter(F.lit(False))
-    structs = [
-        f"named_struct('qid', CAST({qid} AS BIGINT), "
-        f"'adc_dec', {_adc_dec_sql(d_by[qid])})"
-        for qid in sorted(d_by)
-    ]
     # two-step select: struct-field extraction cannot share a select
     # with a generator
     scored = (
-        codes.select(
+        codes.select("vec_id", F.expr(scores_sql).alias("s"))
+        .select(
+            F.col("s.qid").alias("qid"),
             "vec_id",
-            F.expr("explode(array(" + ", ".join(structs) + "))").alias("s"),
+            F.col("s.adc_dec").alias("adc_dec"),
         )
-        .select("vec_id", F.col("s.qid").alias("qid"), F.col("s.adc_dec").alias("adc_dec"))
         .filter(F.col("vec_id") != F.col("qid"))
     )
     w = Window.partitionBy("qid").orderBy("adc_dec", "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _ADC_TOP_K)
+        .filter(F.col("rank") <= top_k)
         .select(
             "qid",
             "vec_id",
@@ -668,40 +572,47 @@ def _adc_dec_sql(lut: dict) -> str:
 def _adc_luts(spark: SparkSession, sf_dir: str) -> dict:
     """{qid: {m: {cluster: d}}}: the ADC lookup tables of the
     ``_ADC_QUERIES`` query vectors, shared per (session, input) under the
-    ``cache.shared`` key ``pq_adc_lut`` (collected driver values,
-    O(M·k·|Q|) — bounded by the index shape, never the corpus); both
-    ADC searches, this module's and ``ivf.ivfpq_search``, read them."""
-    return shared("pq_adc_lut", spark, sf_dir, _collect_adc_luts)
+    ``cache.shared`` key ``pq_adc_lut`` (driver values, O(M·k·|Q|) —
+    bounded by the index shape, never the corpus); both ADC searches,
+    this module's and ``ivf.ivfpq_search``, read them."""
+    return shared("pq_adc_lut", spark, sf_dir, _build_adc_luts)
 
 
-def _collect_adc_luts(spark: SparkSession, sf_dir: str) -> dict:
-    # the codebook is ONE foldable literal array scored per query row
-    # (the _cell_candidates shape): a single scan-and-collect job, no
-    # join and no broadcast of a codebook frame
-    cb = ", ".join(
-        f"named_struct('m', {m}, 'cluster', CAST({cluster} AS BIGINT), "
-        f"'cemb', {arr_lit(cemb)})"
-        for m, cluster, cemb in _pq_codebook_values(spark, sf_dir)
+def _build_adc_luts(spark: SparkSession, sf_dir: str) -> dict:
+    # the squared-L2 fold on the driver's doubles is the oracle's lut{m}
+    # fold, term for term (bit equality pinned in tests/test_sim_recall.py)
+    books = _pq_codebooks(spark, sf_dir)
+    return {
+        qid: {
+            m: {
+                cluster: fold_sq_l2(x[m * _PQ_SUB : (m + 1) * _PQ_SUB], cemb)
+                for cluster, cemb in books[m]
+            }
+            for m in range(_PQ_M)
+        }
+        for qid, x in _query_vectors(spark, sf_dir)
+    }
+
+
+def _query_vectors(spark: SparkSession, sf_dir: str) -> list:
+    """[(vec_id, [double, ...])] of the ``_ADC_QUERIES`` query vectors,
+    collected once per (session, input) under the ``cache.shared`` key
+    ``query_vectors``: the ADC tables here and ``ivf.ivfpq_search``'s
+    probe cells are both derived from it on the driver.  Without the
+    spread repartition the vec_id predicate pushes into the parquet
+    scan."""
+    return shared(
+        "query_vectors",
+        spark,
+        sf_dir,
+        lambda s, d: sorted(
+            (int(r["vec_id"]), [float(v) for v in r["embedding"]])
+            for r in load_table(s, d, "embeddings")
+            .filter(F.col("vec_id") < _ADC_QUERIES)
+            .select("vec_id", "embedding")
+            .collect()
+        ),
     )
-    sub = f"slice(embedding, c.m * {_PQ_SUB} + 1, {_PQ_SUB})"
-    lut = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _ADC_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.expr(
-                f"explode(transform(array({cb}), c -> named_struct('m', c.m, "
-                f"'cluster', c.cluster, 'd', {sparksql_sq_l2(sub, 'c.cemb')})))"
-            ).alias("s"),
-        )
-        .select("qid", "s.m", "s.cluster", "s.d")
-    )
-    d_by: dict[int, dict[int, dict[int, float]]] = {}
-    for r in lut.collect():
-        d_by.setdefault(int(r["qid"]), {}).setdefault(int(r["m"]), {})[
-            int(r["cluster"])
-        ] = float(r["d"])
-    return d_by
 
 
 def _adc_oracle() -> str:
@@ -764,7 +675,7 @@ def embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal direction of the embedding matrix by power
     iteration — v ← Xᵀ(Xv), renormalized each round — with the 64-long
     fixed-point iterate held on the DRIVER between rounds (the MLlib
-    loop shape, like ``ivf._train_values``): each round is ONE
+    loop shape, like ``kmeans.lloyd``): each round is ONE
     distributed job computing both matvecs in a single pass — per row,
     ``dot_i = Σ_j xq_ij·v_j`` folds over the literal iterate, then the
     per-dimension products ``xq_ij·dot_i`` aggregate as exact

@@ -25,6 +25,7 @@ from aind_hcr_data_transformation_spark.cache import (
     shared,
     shared_builds,
 )
+from aind_hcr_data_transformation_spark.operators.ivf import _K, _N_QUERIES
 from aind_hcr_data_transformation_spark.tables import table_count
 from tests.conftest import SF_DIR
 
@@ -302,26 +303,57 @@ def test_warm_ivfpq_search_runs_two_jobs(spark, queries):
     assert 1 <= len(_group_jobs(spark, group)) <= 2
 
 
-def test_ivfpq_search_without_queries_is_empty(spark, queries, tmp_path):
-    """An input with no query vector (``vec_id < _N_QUERIES``) gives an
-    empty result with the usual schema; it has no PQ codebook seeds
-    (``vec_id < _PQ_K``) either, so the search must not train one."""
-    from aind_hcr_data_transformation_spark.operators.ivf import _N_QUERIES
+VECTOR_QUERIES = (
+    "ivf_kmeans_ann",
+    "dedup_semantic",
+    "embed_pq_quantize",
+    "pq_adc_topk",
+    "ivfpq_search",
+)
+
+#: copies of the input without some of the vectors the vector queries
+#: single out: the rows ``vec_id <`` this bound are dropped
+DROPPED = {"no_queries": _N_QUERIES, "no_seeds": _K}
+
+
+@pytest.mark.parametrize(
+    "name,dropped",
+    [("ivfpq_search", "no_queries")] + [(n, "no_seeds") for n in VECTOR_QUERIES],
+)
+def test_vector_query_without_vectors_matches_oracle(
+    spark, queries, tmp_path, name, dropped
+):
+    """Without its query vectors (``vec_id < _N_QUERIES``, which are the
+    PQ seeds too), or without the seeds of every codebook (``vec_id <
+    _K``), a vector query gives its oracle's rows — none — with the
+    usual schema.  An empty codebook gives a vector no candidate
+    centroid and so no row, as the oracle's ``CROSS JOIN`` with an empty
+    codebook does."""
+    import duckdb
+
+    import __spark_entry__ as m
 
     copy = tmp_path / "sf"
     shutil.copytree(SF_DIR, copy, copy_function=shutil.copyfile)
     t = pq.read_table(copy / "embeddings.parquet")
-    keep = pc.greater_equal(t.column("vec_id"), _N_QUERIES)
+    keep = pc.greater_equal(t.column("vec_id"), DROPPED[dropped])
     pq.write_table(t.filter(keep), copy / "embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{copy}/embeddings.parquet')"
+    )
+    oracle_rows = con.execute(m.oracle_sql()[name]).fetchall()
     clear()
     try:
-        want = queries["ivfpq_search"](spark, SF_DIR).schema
-        df = queries["ivfpq_search"](spark, str(copy))
+        want = queries[name](spark, SF_DIR).schema
+        df = queries[name](spark, str(copy))
         got = df.schema
-        assert df.collect() == []
+        rows = df.collect()
     finally:
         release_persists()
         clear()
+    assert rows == oracle_rows == []
     assert [(f.name, f.dataType) for f in got] == [
         (f.name, f.dataType) for f in want
     ]

@@ -98,7 +98,10 @@ def test_sqlstring_vector_folds_bit_equal_column_api(spark):
     """The SQL-string expression builders (functions/vectors: dlit,
     arr_lit, sparksql_dot, sparksql_sq_l2 — used by the codebook-literal
     assignment paths) must be BIT-identical to the Column-API folds they
-    replaced: same zip_with/aggregate tree, repr-exact double literals."""
+    replaced: same zip_with/aggregate tree, repr-exact double literals.
+    So must the driver-side folds (kmeans: fold_dot, fold_sq_l2 and the
+    ranked score) that derive the ADC tables and probe cells from the
+    collected query vectors, on double and on float32 elements."""
     import functools
     import random
     import struct as pystruct
@@ -111,6 +114,11 @@ def test_sqlstring_vector_folds_bit_equal_column_api(spark):
         spark_dot,
         sparksql_dot,
         sparksql_sq_l2,
+    )
+    from aind_hcr_data_transformation_spark.operators.kmeans import (
+        fold_dot,
+        fold_sq_l2,
+        ranked,
     )
     from aind_hcr_data_transformation_spark.operators.vectorops import _sq_l2
 
@@ -140,6 +148,23 @@ def test_sqlstring_vector_folds_bit_equal_column_api(spark):
         ) == bits(
             F.expr(f"{dlit(c2)} - 2.0D * {sparksql_dot('embedding', arr_lit(arr))}")
         )
+
+    # driver folds over the collected vector, as the column holds it
+    for elem in ("double", "float"):
+        df = df.select(F.col("embedding").cast(f"array<{elem}>").alias("embedding"))
+        x = df.collect()[0]["embedding"]
+        for arr in (plain, adversarial):
+            lit = F.array(*[F.lit(float(v)) for v in arr])
+            c2 = functools.reduce(lambda acc, v: acc + v * v, arr, 0.0)
+            assert pystruct.pack("<d", fold_dot(x, arr)) == bits(
+                spark_dot(F.col("embedding"), lit)
+            )
+            assert pystruct.pack("<d", fold_sq_l2(x, arr)) == bits(
+                _sq_l2(F.col("embedding"), lit)
+            )
+            assert pystruct.pack("<d", ranked(x, [(0, arr)])[0][0]) == bits(
+                F.lit(c2) - F.lit(2) * spark_dot(F.col("embedding"), lit)
+            )
 
 
 def test_dlit_rejects_non_finite():
