@@ -124,6 +124,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (src, dst, (w * _SCALE) // outs[src]) for src, dst, w in edge_rows
     ]
     n_nodes = len(nations)  # 25 at every TPC-H SF; derived, not assumed
+    if not n_nodes:  # no node to rank: the oracle's empty result
+        return n.select(
+            F.col("n_name").alias("nation"),
+            F.lit(None).cast("long").alias("rank_e9"),
+        )
     base = (15 * _SCALE) // (100 * n_nodes)  # (1-d)/N in fixed-point
     r = {node: _SCALE // n_nodes for node, _name in nations}
     for _ in range(_ITERS):

@@ -7,8 +7,8 @@ Re-expresses (not copies) the reference planners:
 * ``BlockedArrayWriter._get_size`` / ``_closer_to_target`` /
   ``expand_chunks`` / ``get_block_shape`` — ``compress/zarr_writer.py:15-120,215-247``
 
-These govern Spark-side physics: rows-per-partition for ``repartition(n)``,
-Arrow batch sizing, and the chunk-aligned regions the zarr sink writes.
+These govern Spark-side physics: Arrow batch sizing and the
+chunk-aligned regions the zarr sink writes.
 """
 
 from __future__ import annotations
@@ -145,14 +145,3 @@ def get_block_shape(
     zyx = tuple(arr_shape[-3:])
     base = tuple(min(c, s) for c, s in zip(chunks, zyx))
     return expand_chunks(base, zyx, target_size_mb * 1024 * 1024, itemsize, mode)
-
-
-def rows_per_partition(
-    total_rows: int, row_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Spark-side use of the same targeting logic: how many block rows fit
-    a target partition size (drives ``repartition(n)`` / Arrow batch
-    sizing — SURVEY §4 X3)."""
-    if total_rows <= 0 or row_bytes <= 0:
-        raise ValueError("rows and row size must be positive")
-    return max(1, target_partition_bytes // row_bytes)

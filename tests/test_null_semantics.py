@@ -257,6 +257,32 @@ def test_tiny_slice_queries_match_their_oracles(spark, queries, tmp_path):
         assert got == want, name
 
 
+def test_pagerank_on_empty_input_matches_its_oracle(spark, queries, tmp_path):
+    """With no nation rows there is no node to rank: the oracle returns
+    no row, where the Spark twin divided by the zero node count."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+    from conftest import SF_DIR
+
+    import __spark_entry__ as entrymod
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from tools.registry_run import TABLES, derive
+
+    derive(SF_DIR, str(tmp_path), dict.fromkeys(TABLES, lambda t: (t.slice(0, 0), 0)))
+    con = duckdb.connect()
+    for t in ("nation", "customer", "supplier", "orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    want = con.sql(entrymod.oracle_sql()["graph_pagerank"]).fetchall()
+    df = queries["graph_pagerank"](spark, str(tmp_path))
+    assert dict(df.dtypes) == {"nation": "string", "rank_e9": "bigint"}
+    assert df.collect() == want == []
+
+
 def test_grouped_zscore_keeps_the_null_user_group(spark, queries, tmp_path):
     """NULL probe ``user_id`` stage: the oracle's ``PARTITION BY
     user_id`` z-scores all NULL users as one group; the grouped-map

@@ -110,6 +110,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.registry_run import opt  # noqa: E402
+
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.datasource import DataSource  # noqa: E402
 
@@ -1103,16 +1105,9 @@ def main() -> int:
     argv = sys.argv[1:]
     if argv[:1] == ["--child"]:
         return _child_main(argv[1], argv[2], argv[3])
-    json_out = "CHAOS_PROBE.json"
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    only = None
-    if "--only" in argv:
-        i = argv.index("--only")
-        only = set(argv[i + 1].split(","))
-        argv = argv[:i] + argv[i + 2 :]
+    json_out = opt(argv, "--json", "CHAOS_PROBE.json")
+    only = opt(argv, "--only")
+    only = set(only.split(",")) if only else None
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
 
     from aind_hcr_data_transformation_spark.session import get_spark

@@ -59,6 +59,8 @@ import numpy as np
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.registry_run import opt  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.001"
 
 LOUD = (ValueError, NotImplementedError, OSError, KeyError, IndexError,
@@ -492,10 +494,7 @@ _NEEDS_SPARK = {"parquet_truncated", "zarr_chunk_corruption"}
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_out = "CORRUPTION_PROBE.json"
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
+    json_out = opt(argv, "--json", "CORRUPTION_PROBE.json")
 
     spark = None
     results, any_fail = {}, False

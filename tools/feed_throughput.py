@@ -43,6 +43,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.registry_run import opt  # noqa: E402
+
 BATCH_LADDER = (24, 12, 6, 3)  # feed_target_batches, small -> large batches
 
 from bench import _median  # noqa: E402  (one shared helper, not a fork)
@@ -96,16 +98,8 @@ def run_config(
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_out = "FEED_THROUGHPUT.json"
-    samples = 3
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    if "--samples" in argv:
-        i = argv.index("--samples")
-        samples = int(argv[i + 1])
-        argv = argv[:i] + argv[i + 2 :]
+    json_out = opt(argv, "--json", "FEED_THROUGHPUT.json")
+    samples = int(opt(argv, "--samples", "3"))
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
 
     import duckdb

@@ -157,15 +157,13 @@ def _replicate_table(name: str, src_file: str, k: int) -> pa.Table:
 
 
 def main() -> int:
+    sys.path.insert(0, str(REPO))
+    from tools.registry_run import opt
+
     argv = sys.argv[1:]
 
     def _opt(flag, default):
-        if flag in argv:
-            i = argv.index(flag)
-            v = argv[i + 1]
-            del argv[i : i + 2]
-            return v
-        return default
+        return opt(argv, flag, default)
 
     src = _opt("--src", "/root/testdata/sf0.1")
     dst = _opt("--dst", str(REPO / ".sfscale" / "sf1"))

@@ -52,46 +52,21 @@ JSON, keeping the other stages' records.
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import sys
-import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from tools.skew_probe import run_registry_differential  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events embeddings"
-).split()
+from tools.registry_run import derive, fixture_sweep, opt, overwrite  # noqa: E402
 
 
 def build_fixture(src: str, dst: str, mutation: str) -> int:
     """Copy ``src`` fixtures into ``dst`` with one column nulled;
-    returns the number of nulled rows. Mutations go through pyarrow so
-    every untouched column (including the events ts physical type,
-    which varies by fixture generation) survives byte-identical."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    os.makedirs(dst, exist_ok=True)
+    returns the number of nulled rows."""
     table, key, col, mod, repl = MUTATIONS[mutation]
-    for t in TABLES + ["documents"]:
-        if t != table:
-            shutil.copy(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
-    tab = pq.read_table(f"{src}/{table}.parquet")
-    keys = tab[key].to_numpy()
-    mask = pa.array((keys % mod) == 0)
-    idx = tab.schema.get_field_index(col)
-    mutated = pc.if_else(
-        mask, pa.scalar(repl, tab.schema.field(col).type), tab[col]
-    )
-    tab = tab.set_column(idx, col, mutated)
-    pq.write_table(tab, f"{dst}/{table}.parquet")
-    return int(pc.sum(mask).as_py())
+    edit = overwrite(key, lambda k: (k % mod) == 0, col, repl)
+    return derive(src, dst, {table: edit})[table]
 
 
 #: mutation -> (table, key col, mutated col, key modulus, replacement)
@@ -120,29 +95,18 @@ TINY_ROWS = {
 
 
 def build_tiny_fixture(src: str, dst: str) -> int:
-    import pyarrow.parquet as pq
-
-    os.makedirs(dst, exist_ok=True)
-    total = 0
-    for t, n in TINY_ROWS.items():
-        tab = pq.read_table(f"{src}/{t}.parquet")
-        pq.write_table(tab.slice(0, n), f"{dst}/{t}.parquet")
-        total += min(n, tab.num_rows)
-    return total
+    edits = {
+        t: lambda tab, n=n: (tab.slice(0, n), min(n, tab.num_rows))
+        for t, n in TINY_ROWS.items()
+    }
+    return sum(derive(src, dst, edits).values())
 
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_out = "NULL_PROBE.json"
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    only = None
-    if "--only" in argv:
-        i = argv.index("--only")
-        only = set(argv[i + 1].split(","))
-        argv = argv[:i] + argv[i + 2 :]
+    json_out = opt(argv, "--json", "NULL_PROBE.json")
+    only = opt(argv, "--only")
+    only = set(only.split(",")) if only else None
     src = argv[0] if argv else "/root/testdata/sf0.001"
 
     stages = (
@@ -150,53 +114,29 @@ def main() -> int:
         if only and Path(json_out).exists()
         else {}
     )
-    any_fail = False
     descs = {
         m: f"{t}.{c} = {v!r} where {k} % {mod} = 0"
         for m, (t, k, c, mod, v) in MUTATIONS.items()
     }
     descs["tiny"] = "truncate every table to TINY_ROWS slices"
-    if only:
-        descs = {m: d for m, d in descs.items() if m in only}
-    for mutation, desc in descs.items():
-        dst = tempfile.mkdtemp(prefix=f"sfnull_{mutation}_")
-        try:
+
+    def build(mutation):
+        def fields(dst):
             if mutation == "tiny":
                 nulled = build_tiny_fixture(src, dst)
             else:
                 nulled = build_fixture(src, dst, mutation)
-            print(f"[{mutation}] fixture: {dst} ({nulled} mutated rows)", flush=True)
-            recs, failures, missing, rc_crashed = run_registry_differential(
-                dst, mutation
-            )
-            any_fail = (
-                any_fail or bool(failures) or bool(rc_crashed) or bool(missing)
-            )
-            stages[mutation] = {
-                "mutation": desc,
-                "nulled_rows": nulled,
-                "n_queries": len(recs),
-                "failures": failures,
-                "missing": missing,
-                "rc_crashed": rc_crashed,
-            }
-            # incremental write: a crash in a later stage must not lose
-            # the finished stages' evidence
-            Path(json_out).write_text(
-                json.dumps({"src": src, "stages": stages}, indent=1)
-            )
-        finally:
-            shutil.rmtree(dst, ignore_errors=True)
+            return {"mutation": descs[mutation], "nulled_rows": nulled}
 
-    doc = {"src": src, "stages": stages}
-    Path(json_out).write_text(json.dumps(doc, indent=1))
-    flagged = {
-        m: (s["failures"] or s["missing"] or f"rc {s['rc_crashed']}")
-        for m, s in stages.items()
-        if m in descs and (s["failures"] or s["missing"] or s["rc_crashed"])
-    }
+        return fields
+
+    flagged = fixture_sweep(
+        {"src": src, "stages": stages},
+        json_out,
+        {m: build(m) for m in descs if not only or m in only},
+    )
     print(f"wrote {json_out}; failures: {flagged or 'none'}")
-    return 1 if any_fail else 0
+    return 1 if flagged else 0
 
 
 if __name__ == "__main__":

@@ -12,10 +12,15 @@ driver hashes through Arrow, where DuckDB HUGEINT materializes as
 when every value is identical.  Plain ``fetchall()`` collapses both to
 Python ``int`` and was blind to the class (the round-5/6 driver reds,
 ``scalar_variant_json`` / ``layout_compaction_plan``); the family check
-makes those trip locally (``type_match`` in the JSON record).
+makes those trip locally (``type_match`` in the JSON record, with the
+differing columns and both types in ``type_diffs``).
 
 Usage: python tools/oracle_check.py [--json OUT.json] [--duckdb-strict]
        [sf_dir] [query ...]
+
+Listed queries run in the order given (all of ``queries()``, in registry
+order, when none is listed), so a shuffled name list is a registry-order
+sweep.
 
 ``--json`` writes a driver-shaped per-query record (rows/schema/hash
 match booleans) so the full-registry differential evidence can be
@@ -44,10 +49,6 @@ from datetime import datetime
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def _norm(v) -> str:
@@ -89,30 +90,20 @@ def _strictify(sql: str) -> str:
 
 
 def main() -> int:
-    import duckdb
-
     import __spark_entry__ as entrymod
-    from aind_hcr_data_transformation_spark.cache import release_persists
-    from aind_hcr_data_transformation_spark.session import get_spark
+    from tools.registry_run import each, flag, opt, pick, session
+    from tools.type_audit import connect, duckdb_family, spark_family
 
     argv = sys.argv[1:]
-    json_out = None
-    # accept --json anywhere (a misplaced flag once silently became a
-    # "query name" filter that matched nothing and reported 0 failures)
-    if "--json" in argv:
-        i = argv.index("--json")
-        if i + 1 >= len(argv):
-            print("usage: --json OUT.json [sf_dir] [query ...]")
-            return 2
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    strict = "--duckdb-strict" in argv
-    if strict:
-        argv.remove("--duckdb-strict")
+    # --json anywhere (a misplaced flag once silently became a "query
+    # name" filter that matched nothing and reported 0 failures)
+    json_out = opt(argv, "--json")
+    strict = flag(argv, "--duckdb-strict")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    names = pick(argv[1:], entrymod.queries())
+    oracles = entrymod.oracle_sql()
 
-    spark = get_spark("oracle-check")
+    spark = session("oracle-check")
 
     # bounded memory + disk spill: the heavy unrolled-CTE oracles
     # (SemDeDup's 3 Lloyd iterations over 64-dim folds) can exceed
@@ -122,7 +113,7 @@ def main() -> int:
     import tempfile
 
     def _fresh_con():
-        c = duckdb.connect()
+        c = connect(sf_dir)
         # 24GB, not 48: the Spark JVM shares this host, and the limit is
         # only a buffer-pool cap — with temp_directory set the heavy
         # unrolled-CTE oracles spill instead of failing. 48GB left too
@@ -132,10 +123,6 @@ def main() -> int:
         c.execute(
             f"SET temp_directory='{tempfile.gettempdir()}/duckdb_oracle_spill'"
         )
-        for t in TABLES:
-            c.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
         return c
 
     con = _fresh_con()
@@ -162,12 +149,6 @@ def main() -> int:
             con = _fresh_con()
             return con.execute(sql)
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    unknown = only - set(queries)
-    if unknown:
-        print(f"unknown query names: {sorted(unknown)}")
-        return 2
     failures = []
     records: dict[str, dict] = {}
 
@@ -180,27 +161,22 @@ def main() -> int:
             "spark_rows": None,
             "oracle_rows": None,
             "err": None,
+            "type_diffs": None,
         }
         base.update(kw)
         records[name] = base
 
-    from tools.type_audit import duckdb_family, spark_family
+    def collect(name, build):
+        sdf = build()
+        return sdf.columns, sdf.schema, [tuple(r) for r in sdf.collect()]
 
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            sschema = sdf.schema
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
+    for name, got, err in each(spark, sf_dir, names, collect):
+        if err is not None:
             failures.append(name)
-            record(name, err=f"spark error: {e}")
-            print(f"FAIL  {name}: spark error: {e}")
+            record(name, err=f"spark error: {err}")
+            print(f"FAIL  {name}: spark error: {err}")
             continue
-        finally:
-            release_persists()
+        scols, sschema, srows = got
         if name not in oracles:
             record(name, spark_rows=len(srows), err="no_oracle")
             print(f"ROWS  {name}: {len(srows)} rows (no oracle)")
@@ -222,43 +198,52 @@ def main() -> int:
         # re-execution) and catches the Arrow-level HUGEINT class that
         # value comparison through fetchall() cannot see
         try:
-            dd_types = {
-                r[0]: r[1]
+            dd_types = dict(
+                r[:2]
                 for r in _dd_execute(f"DESCRIBE {oracles[name]}").fetchall()
-            }
-            sp_fams = {f.name: spark_family(f.dataType) for f in sschema.fields}
+            )
+            sp_types = {f.name: f.dataType for f in sschema.fields}
             type_diffs = [
-                (c, t, sp_fams.get(c))
+                {
+                    "col": c,
+                    "duckdb": t,
+                    "duckdb_family": duckdb_family(t),
+                    "spark": sp_types[c].simpleString(),
+                    "spark_family": spark_family(sp_types[c]),
+                }
                 for c, t in dd_types.items()
-                if c in sp_fams and duckdb_family(t) != sp_fams[c]
+                if c in sp_types
+                and duckdb_family(t) != spark_family(sp_types[c])
             ]
         except Exception as e:
-            type_diffs = [("<describe failed>", str(e), None)]
+            type_diffs = [{"col": "<describe failed>", "duckdb": str(e)}]
         if type_diffs:
             failures.append(name)
             record(name, rows_match=rows_match, schema_match=schema_match,
                    type_match=False, spark_rows=len(srows),
-                   oracle_rows=len(drows))
+                   oracle_rows=len(drows), type_diffs=type_diffs)
             print(f"FAIL  {name}: physical type family differs "
                   f"(driver Arrow-hash hazard): {type_diffs}")
             continue
         if not schema_match:
             failures.append(name)
             record(name, rows_match=rows_match, schema_match=False,
-                   spark_rows=len(srows), oracle_rows=len(drows))
+                   spark_rows=len(srows), oracle_rows=len(drows),
+                   type_diffs=[])
             print(f"FAIL  {name}: columns differ spark={sorted(scols)} duckdb={sorted(dcols)}")
             continue
         if not rows_match:
             failures.append(name)
             record(name, rows_match=False, schema_match=True,
-                   spark_rows=len(srows), oracle_rows=len(drows))
+                   spark_rows=len(srows), oracle_rows=len(drows),
+                   type_diffs=[])
             print(f"FAIL  {name}: rowcount spark={len(srows)} duckdb={len(drows)}")
             continue
         sc, dc = _canon(srows, scols), _canon(drows, dcols)
         hash_match = sc == dc
         record(name, rows_match=True, schema_match=True, type_match=True,
-               hash_match=hash_match,
-               spark_rows=len(srows), oracle_rows=len(drows))
+               hash_match=hash_match, spark_rows=len(srows),
+               oracle_rows=len(drows), type_diffs=[])
         if not hash_match:
             failures.append(name)
             diff = [(a, b) for a, b in zip(sc, dc) if a != b][:3]

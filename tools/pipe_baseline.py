@@ -29,12 +29,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.registry_run import opt  # noqa: E402
+
 
 def main() -> int:
     argv = sys.argv[1:]
-    samples = 4
-    if "--samples" in argv:
-        samples = int(argv[argv.index("--samples") + 1])
+    samples = int(opt(argv, "--samples", "4"))
 
     import bench
     from aind_hcr_data_transformation_spark.session import get_spark

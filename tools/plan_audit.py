@@ -155,12 +155,11 @@ def diff(before: dict, after: dict, varying: set[str]) -> dict[str, list[str]]:
 
 
 def main() -> int:
-    import __spark_entry__ as entrymod
     from aind_hcr_data_transformation_spark import cache
-    from aind_hcr_data_transformation_spark.session import get_spark
+    from tools.registry_run import each, opt, pick, registry, session
 
     argv = sys.argv[1:]
-    queries = {**entrymod.queries(), **entrymod.production_queries()}
+    queries = registry()
     if argv[:1] == ["--diff"] and len(argv) == 3:
         varying = RUN_VARYING | {
             n for n, fn in queries.items() if ".streaming." in fn.__module__
@@ -171,49 +170,33 @@ def main() -> int:
             print(f"changed {name}: {before[name]['joins']} -> {after[name]['joins']}")
         print({k: len(v) for k, v in groups.items()}, "missing:", groups["missing"])
         return 1 if groups["changed"] or groups["missing"] else 0
-    json_out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        if i + 1 >= len(argv):
-            print("usage: --json OUT.json [sf_dir] [query ...]")
-            return 2
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
+    json_out = opt(argv, "--json")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
-    only = set(argv[1:])
+    names = pick(argv[1:], queries)
 
     # every execution of the largest query must stay in the status store
-    spark = get_spark(
+    spark = session(
         "plan-audit", extra_conf={"spark.sql.ui.retainedExecutions": "5000"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    unknown = only - set(queries)
-    if unknown:
-        print(f"unknown query names: {sorted(unknown)}")
-        return 2
 
-    audit: dict[str, dict] = {}
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
+    def census(name, build):
         # each query builds its own shared indexes: its census must not
         # depend on which queries ran before it
         cache.clear()
         spark.catalog.clearCache()
-        try:
-            exchanges = {}
+        exchanges = {}
 
-            def run():
-                df = fn(spark, sf_dir)
-                exchanges.update(count_exchanges(df))
-                df.write.format("noop").mode("overwrite").save()
+        def run():
+            df = build()
+            exchanges.update(count_exchanges(df))
+            df.write.format("noop").mode("overwrite").save()
 
-            audit[name] = {**plan_census(spark, run), **exchanges}
-        except Exception as e:  # noqa: BLE001 - audit must not die mid-sweep
-            audit[name] = {"err": str(e)[:200]}
-        cache.release_persists()
-        row = audit[name]
-        print(f"{name}: {row}", flush=True)
+        return {**plan_census(spark, run), **exchanges}
+
+    audit: dict[str, dict] = {}
+    for name, row, err in each(spark, sf_dir, names, census):
+        audit[name] = row if err is None else {"err": str(err)[:200]}
+        print(f"{name}: {audit[name]}", flush=True)
 
     if json_out:
         Path(json_out).write_text(json.dumps(audit, indent=1, sort_keys=True))

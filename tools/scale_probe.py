@@ -267,47 +267,30 @@ def classify(ratio: float, growth: float = DATA_GROWTH) -> str:
 
 
 def main() -> int:
+    from tools.registry_run import each, flag, noop_wall, opt, pick, registry, session
+
     argv = sys.argv[1:]
-    json_out = "SCALE_PROBE.json"
-    sf_small, sf_big, growth = SF_SMALL, SF_BIG, DATA_GROWTH
-
-    def _opt(flag, default):
-        nonlocal argv
-        if flag in argv:
-            i = argv.index(flag)
-            v = argv[i + 1]
-            argv = argv[:i] + argv[i + 2 :]
-            return v
-        return default
-
-    json_out = _opt("--json", json_out)
-    sf_small = _opt("--small", sf_small)
-    sf_big = _opt("--big", sf_big)
-    growth = float(_opt("--growth", growth))
+    json_out = opt(argv, "--json", "SCALE_PROBE.json")
+    sf_small = opt(argv, "--small", SF_SMALL)
+    sf_big = opt(argv, "--big", SF_BIG)
+    growth = float(opt(argv, "--growth", DATA_GROWTH))
     # --conf k=v (repeatable): pin a plan choice across both SFs — e.g.
     # spark.sql.autoBroadcastJoinThreshold=-1 isolates a BHJ→SMJ
     # threshold step from genuine growth (r10: the rec_item_cosine
     # sf3→sf10 flag was exactly such a step; explicit broadcast() hints
     # still apply, so vocabulary-sized dims stay broadcast)
     extra_conf: dict[str, str] = {}
-    while "--conf" in argv:
-        i = argv.index("--conf")
-        k, _, v = argv[i + 1].partition("=")
+    while (kv := opt(argv, "--conf")) is not None:
+        k, _, v = kv.partition("=")
         extra_conf[k] = v
-        del argv[i : i + 2]
-    full = "--full" in argv
-    if full:
-        argv = [a for a in argv if a != "--full"]
-    names = argv or DEFAULT_QUERIES
+    # --full: the whole registry — makes "zero superlinear" a census
+    # claim, not a 26%-sample claim (VERDICT r7 task 2)
+    full = flag(argv, "--full")
+    queries = registry()
+    names = pick([] if full else argv or DEFAULT_QUERIES, queries)
 
     log_dir = Path(tempfile.mkdtemp(prefix="spark_scale_probe_"))
-
-    import __spark_entry__ as entrymod
-
-    from aind_hcr_data_transformation_spark.cache import release_persists
-    from aind_hcr_data_transformation_spark.session import get_spark
-
-    spark = get_spark(
+    spark = session(
         "scale-probe",
         extra_conf={
             "spark.eventLog.enabled": "true",
@@ -317,38 +300,29 @@ def main() -> int:
             **extra_conf,
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = {**entrymod.queries(), **entrymod.production_queries()}
-    if full:
-        # the whole registry — makes "zero superlinear" a census claim,
-        # not a 26%-sample claim (VERDICT r7 task 2)
-        names = list(queries)
-    unknown = [n for n in names if n not in queries]
-    if unknown:
-        print(f"unknown query names: {unknown}")
-        return 2
 
     intervals: list[tuple[str, float, float]] = []
+
+    def traced(name, build):
+        group = f"{tag}:{name}"
+        spark.sparkContext.setJobGroup(group, group)
+        t0_ms = time.time() * 1000
+        wall = noop_wall(name, build)
+        intervals.append((group, t0_ms, time.time() * 1000))
+        spark.sparkContext.setJobGroup("", "")
+        return wall
+
     for sf_dir, tag in [(sf_small, "small"), (sf_big, "big")]:
-        for name in names:
-            group = f"{tag}:{name}"
-            spark.sparkContext.setJobGroup(group, group)
-            t0_ms = time.time() * 1000
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            wall = round(time.perf_counter() - t0, 3)
-            intervals.append((group, t0_ms, time.time() * 1000))
-            release_persists()
-            spark.sparkContext.setJobGroup("", "")
+        for name, wall, err in each(spark, sf_dir, names, traced):
+            if err:
+                raise err
             # walls are printed as progress only, NOT recorded: the
             # small-SF pass absorbs per-plan JIT/warm-up, so its wall
             # routinely exceeds the 10×-data wall and any recorded
             # ratio would mislead (VERDICT r6 "what's wrong" #3).  The
             # recorded signal is shuffle-byte growth, which warm-up
             # does not touch.
-            print(f"ran {group}: {wall} s (progress only)", flush=True)
+            print(f"ran {tag}:{name}: {wall} s (progress only)", flush=True)
     spark.stop()  # flush the event log
 
     agg = parse_event_log(log_dir, intervals)

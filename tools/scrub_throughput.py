@@ -36,6 +36,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.registry_run import opt  # noqa: E402
+
 
 def _tree_bytes(root: str) -> int:
     total = 0
@@ -47,10 +49,8 @@ def _tree_bytes(root: str) -> int:
 
 def main() -> int:
     argv = sys.argv[1:]
-    gb = float(argv[argv.index("--gb") + 1]) if "--gb" in argv else 2.0
-    samples = (
-        int(argv[argv.index("--samples") + 1]) if "--samples" in argv else 2
-    )
+    gb = float(opt(argv, "--gb", "2.0"))
+    samples = int(opt(argv, "--samples", "2"))
 
     from aind_hcr_data_transformation_spark.config import (
         ZarrConversionSettings,

@@ -40,20 +40,22 @@ Usage::
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import subprocess
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tools.registry_run import (  # noqa: E402
+    derive,
+    each,
+    fixture_sweep,
+    noop_wall,
+    opt,
+    overwrite,
+    session,
+)
 
 #: stage -> (table, key col used for the deterministic row mask,
 #:           mutated col, percent of rows redirected to the hot key)
@@ -100,169 +102,40 @@ WALL_QUERIES = [
 def build_skew_fixture(
     src: str, dst: str, stages: list[str]
 ) -> dict[str, int]:
-    """Copy ``src`` into ``dst`` with the named hot-key mutations
-    applied (several stages may hit different tables in one fixture).
-    Returns stage -> redirected row count. pyarrow end-to-end so every
-    untouched column (including the events ts physical type) survives
-    byte-identical — the null_probe lesson."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    os.makedirs(dst, exist_ok=True)
-    by_table: dict[str, list[str]] = {}
+    """Copy ``src`` into ``dst`` with the named hot-key mutations applied
+    (each stage on its own table). Returns stage -> redirected row
+    count. The hot key is the column's first value: FK-safe."""
+    edits = {}
     for s in stages:
-        by_table.setdefault(STAGES[s][0], []).append(s)
-    counts: dict[str, int] = {}
-    for t in TABLES:
-        if t not in by_table:
-            shutil.copy(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
-            continue
-        tab = pq.read_table(f"{src}/{t}.parquet")
-        for s in by_table[t]:
-            _, key, col, pct = STAGES[s]
-            keys = tab[key].to_numpy()
-            mask = pa.array((keys % 100) < pct)
-            hot = tab[col][0]  # an existing value: FK-safe
-            idx = tab.schema.get_field_index(col)
-            tab = tab.set_column(
-                idx, col, pc.if_else(mask, hot, tab[col])
-            )
-            counts[s] = int(pc.sum(mask).as_py())
-        pq.write_table(tab, f"{dst}/{t}.parquet")
-    return counts
-
-
-def run_registry_differential(
-    fixture: str, tag: str
-) -> tuple[dict, list[str], list[str], list[int]]:
-    """Full queries()-vs-oracle_sql() differential against ``fixture``,
-    chunked into fresh processes with individual retry — the
-    null_probe/strict_sweep recipe (DuckDB's buffer pool degrades over
-    a 40-query chunk; transient bad_allocs are green alone)."""
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import __spark_entry__ as m, json; print(json.dumps(list(m.queries())))",
-        ],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-    )
-    names = json.loads(proc.stdout.strip().splitlines()[-1])
-    recs: dict = {}
-    rc_crashed: list[int] = []
-    chunk = 40
-    for ci in range(0, len(names), chunk):
-        record = os.path.join(fixture, f"record_{ci}.json")
-        p = subprocess.run(
-            [
-                sys.executable,
-                "tools/oracle_check.py",
-                fixture,
-                "--json",
-                record,
-                *names[ci : ci + chunk],
-            ],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
+        table, key, col, pct = STAGES[s]
+        edits[table] = overwrite(
+            key, lambda k, pct=pct: (k % 100) < pct, col, lambda c: c[0]
         )
-        sys.stdout.write(
-            "\n".join(
-                l
-                for l in p.stdout.splitlines()
-                if l.startswith(("FAIL", "ERR"))
-            )
-        )
-        if p.returncode not in (0, 1):
-            rc_crashed.append(p.returncode)
-            print(f"[{tag}] chunk {ci//chunk}: rc {p.returncode}", flush=True)
-        if os.path.exists(record):
-            part = json.load(open(record))
-            recs.update(
-                {k: v for k, v in part.items() if not k.startswith("_")}
-            )
-
-    def _failed(recset):
-        return [
-            k
-            for k, v in recset.items()
-            if not k.startswith("_")
-            and isinstance(v, dict)
-            and not (
-                v.get("rows_match")
-                and v.get("schema_match")
-                and v.get("hash_match") is not False
-            )
-        ]
-
-    # retry failures AND missing names individually in fresh processes:
-    # a failure may be a transient DuckDB bad_alloc (green alone every
-    # time observed), and a crashed chunk (rc -11) writes NO record at
-    # all, so its queries would otherwise stay "missing" unretried
-    missing0 = [n for n in names if n not in recs]
-    for name in _failed(recs) + missing0:
-        record = os.path.join(fixture, f"retry_{name}.json")
-        subprocess.run(
-            [
-                sys.executable,
-                "tools/oracle_check.py",
-                fixture,
-                "--json",
-                record,
-                name,
-            ],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-        )
-        if os.path.exists(record):
-            part = json.load(open(record))
-            if name in part:
-                print(f"[{tag}] retried {name}", flush=True)
-                recs[name] = part[name]
-    failures = _failed(recs)
-    missing = [n for n in names if n not in recs]
-    return recs, failures, missing, rc_crashed
+    counts = derive(src, dst, edits)
+    return {s: counts[STAGES[s][0]] for s in stages}
 
 
 def run_wall_guard(walls_src: str) -> dict:
     """Time WALL_QUERIES against pristine-then-skewed sf0.1 fixtures in
     one session; flag hot-partition blowups (ratio > 3 AND delta > 2 s)."""
-    import __spark_entry__ as entrymod
-
-    from aind_hcr_data_transformation_spark.cache import release_persists
-    from aind_hcr_data_transformation_spark.session import get_spark
-
-    dst = tempfile.mkdtemp(prefix="sfskew_walls_")
-    counts = build_skew_fixture(
-        walls_src,
-        dst,
-        ["events_hot_user", "orders_hot_cust", "lineitem_hot_part"],
-    )
-    print(f"[walls] skewed fixture: {dst} ({counts})", flush=True)
-    queries = {**entrymod.queries(), **entrymod.production_queries()}
     out: dict[str, dict] = {}
-    try:
-        spark = get_spark("skew-probe")
-        spark.sparkContext.setLogLevel("ERROR")
+    with tempfile.TemporaryDirectory(prefix="sfskew_walls_") as dst:
+        counts = build_skew_fixture(
+            walls_src,
+            dst,
+            ["events_hot_user", "orders_hot_cust", "lineitem_hot_part"],
+        )
+        print(f"[walls] skewed fixture: {dst} ({counts})", flush=True)
+        spark = session("skew-probe")
         # pristine first: it pays the per-plan JIT warm-up, so a skewed
         # slowdown is understated rather than manufactured
         for tag, sf in [("base", walls_src), ("skew", dst)]:
-            for name in WALL_QUERIES:
-                t0 = time.perf_counter()
-                queries[name](spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = round(time.perf_counter() - t0, 3)
-                release_persists()
+            for name, wall, err in each(spark, sf, WALL_QUERIES, noop_wall):
+                if err:
+                    raise err
                 out.setdefault(name, {})[tag] = wall
                 print(f"[walls] {tag}:{name}: {wall}s", flush=True)
         spark.stop()
-    finally:
-        shutil.rmtree(dst, ignore_errors=True)
     flagged = []
     for name, w in out.items():
         ratio = w["skew"] / w["base"] if w["base"] else None
@@ -275,69 +148,26 @@ def run_wall_guard(walls_src: str) -> dict:
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_out = "SKEW_PROBE.json"
-    walls_src = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    if "--walls" in argv:
-        i = argv.index("--walls")
-        walls_src = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
+    json_out = opt(argv, "--json", "SKEW_PROBE.json")
+    walls_src = opt(argv, "--walls")
     src = argv[0] if argv else "/root/testdata/sf0.001"
 
-    stages: dict = {}
-    any_fail = False
-    for stage, (table, key, col, pct) in STAGES.items():
-        dst = tempfile.mkdtemp(prefix=f"sfskew_{stage}_")
-        try:
-            counts = build_skew_fixture(src, dst, [stage])
-            print(
-                f"[{stage}] fixture: {dst} "
-                f"({counts[stage]} rows -> hot {table}.{col})",
-                flush=True,
-            )
-            recs, failures, missing, rc_crashed = run_registry_differential(
-                dst, stage
-            )
-            any_fail = (
-                any_fail
-                or bool(failures)
-                or bool(missing)
-                or bool(rc_crashed)
-            )
-            stages[stage] = {
-                "mutation": f"{pct}% of {table}.{col} -> first value",
-                "hot_rows": counts[stage],
-                "n_queries": len(recs),
-                "failures": failures,
-                "missing": missing,
-                "rc_crashed": rc_crashed,
-            }
-            # incremental write: a crash in a later stage (or the wall
-            # guard) must not lose the finished stages' evidence
-            Path(json_out).write_text(
-                json.dumps({"src": src, "stages": stages}, indent=1)
-            )
-        finally:
-            shutil.rmtree(dst, ignore_errors=True)
+    def build(stage):
+        table, _key, col, pct = STAGES[stage]
+        return lambda dst: {
+            "mutation": f"{pct}% of {table}.{col} -> first value",
+            "hot_rows": build_skew_fixture(src, dst, [stage])[stage],
+        }
 
-    doc: dict = {"src": src, "stages": stages}
+    doc: dict = {"src": src, "stages": {}}
+    flagged = fixture_sweep(doc, json_out, {s: build(s) for s in STAGES})
     if walls_src:
         doc["walls"] = run_wall_guard(walls_src)
-        any_fail = any_fail or bool(doc["walls"]["flagged"])
-
-    Path(json_out).write_text(json.dumps(doc, indent=1))
-    flagged = {
-        m: (s["failures"] or s["missing"] or f"rc {s['rc_crashed']}")
-        for m, s in stages.items()
-        if s["failures"] or s["missing"] or s["rc_crashed"]
-    }
-    if walls_src and doc["walls"]["flagged"]:
-        flagged["walls"] = doc["walls"]["flagged"]
+        Path(json_out).write_text(json.dumps(doc, indent=1))
+        if doc["walls"]["flagged"]:
+            flagged["walls"] = doc["walls"]["flagged"]
     print(f"wrote {json_out}; failures: {flagged or 'none'}")
-    return 1 if any_fail else 0
+    return 1 if flagged else 0
 
 
 if __name__ == "__main__":

@@ -7,12 +7,10 @@ std::bad_alloc can segfault the process and lose every record (observed
 twice in round 6 — exit 139 mid-sweep, artifact never written).
 
 This wrapper runs ``tools/oracle_check.py --duckdb-strict`` over the
-DRIVER-SAMPLED query set (the keys of the latest CORRECTNESS_r*.json —
-exactly the population the judge asked to probe) in chunks of
-``--chunk`` queries, each in a FRESH process (fresh JVM, fresh DuckDB
-pool), merges the per-chunk JSON records, and retries any query whose
-chunk crashed individually. A crash therefore costs one retry, not the
-sweep.
+DRIVER-SAMPLED query set (the keys of every CORRECTNESS_r*.json) through
+``registry_run.differential``: chunks of ``--chunk`` queries, each in a
+fresh process, and a query whose chunk crashed retried alone. A strict
+divergence is the finding, so failed queries are not retried.
 
 Usage:
     python tools/strict_sweep.py [sf_dir] [--sample CORRECTNESS.json]
@@ -20,100 +18,46 @@ Usage:
                                  [--full]
 
 ``--full`` switches from the strict TRY_CAST probe to the plain
-differential over the ENTIRE registry (every ``queries()`` entry) —
-the crash-proof way to produce the round-end full-registry evidence:
-a single-process ``oracle_check`` run over 200+ queries can die on one
-transient host-level DuckDB ``std::bad_alloc`` and lose the whole
-artifact (observed again in round 7 at ``ivfpq_search``); chunked
-fresh processes bound the blast radius to one retried chunk.
+differential over the ENTIRE registry (every ``queries()`` entry): the
+crash-proof way to produce full-registry evidence (a single-process
+run died once at ``ivfpq_search`` and lost the whole artifact).
 """
 
 from __future__ import annotations
 
 import datetime
+import glob
 import json
 import os
-import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def _run_chunk(
-    sf_dir: str, names: list[str], strict: bool = True
-) -> tuple[dict, int]:
-    """One fresh-process oracle_check over ``names``; returns (records,
-    exit_code). Records may be partial if the process crashed."""
-    with tempfile.NamedTemporaryFile(
-        suffix=".json", prefix="strict_chunk_", delete=False
-    ) as tf:
-        out = tf.name
-    try:
-        proc = subprocess.run(
-            [
-                sys.executable,
-                os.path.join(REPO, "tools", "oracle_check.py"),
-                "--json",
-                out,
-                *(["--duckdb-strict"] if strict else []),
-                sf_dir,
-                *names,
-            ],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            timeout=3600,
-        )
-        recs = {}
-        if os.path.exists(out) and os.path.getsize(out) > 0:
-            with open(out) as fh:
-                recs = {k: v for k, v in json.load(fh).items() if k != "_meta"}
-        if proc.returncode != 0 and not recs:
-            tail = (proc.stdout or "")[-2000:] + (proc.stderr or "")[-500:]
-            print(f"  chunk rc={proc.returncode}; tail:\n{tail}")
-        return recs, proc.returncode
-    finally:
-        try:
-            os.unlink(out)
-        except OSError:
-            pass
+from tools.registry_run import differential, flag, opt, oracle_chunk  # noqa: E402
 
 
 def main() -> int:
     argv = sys.argv[1:]
-
-    def _opt(flag, default):
-        if flag in argv:
-            i = argv.index(flag)
-            v = argv[i + 1]
-            del argv[i : i + 2]
-            return v
-        return default
-
     # default sample = the UNION of every driver CORRECTNESS_r*.json in
     # the repo (VERDICT r6 task 8: each round's driver sample rotates,
     # so the strict population should accumulate across rounds).
     # ``--sample`` accepts a comma-separated list of files to override.
-    import glob as _glob
-
     default_samples = ",".join(
-        sorted(_glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+        sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     )
-    full = "--full" in argv
-    if full:
-        argv.remove("--full")
-    sample = _opt("--sample", default_samples)
-    out_path = _opt(
+    full = flag(argv, "--full")
+    sample = opt(argv, "--sample", default_samples)
+    out_path = opt(
+        argv,
         "--out",
         os.path.join(
             REPO, "FULL_ORACLE.json" if full else "STRICT_ORACLE.json"
         ),
     )
-    chunk = int(_opt("--chunk", "12"))
+    chunk = int(opt(argv, "--chunk", "12"))
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
 
-    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod  # registry names only; no session
 
     live = set(entrymod.queries())
@@ -136,40 +80,12 @@ def main() -> int:
         print(f"skipping retired sample names: {retired}")
     print(f"strict sweep: {len(names)} driver-sampled queries, chunks of {chunk}")
 
-    merged: dict[str, dict] = {}
-    crashed: list[str] = []
-    for i in range(0, len(names), chunk):
-        batch = names[i : i + chunk]
-        recs, rc = _run_chunk(sf_dir, batch, strict=not full)
-        merged.update(recs)
-        missing = [n for n in batch if n not in recs]
-        if missing:
-            print(f"  chunk {i // chunk}: rc={rc}, missing {missing} — will retry")
-            crashed.extend(missing)
-        done = [n for n in batch if n in recs]
-        bad = [
-            n
-            for n in done
-            if recs[n].get("err") or recs[n].get("strict_match") is False
-        ]
-        print(
-            f"  chunk {i // chunk}: {len(done)}/{len(batch)} recorded"
-            + (f", bad: {bad}" if bad else "")
-        )
-
-    for n in crashed:  # isolate: one query per process
-        recs, rc = _run_chunk(sf_dir, [n], strict=not full)
-        if n in recs:
-            merged[n] = recs[n]
-        else:
-            merged[n] = {
-                "rows_match": None,
-                "schema_match": None,
-                "hash_match": None,
-                "spark_rows": None,
-                "oracle_rows": None,
-                "err": f"process crashed twice (rc={rc})",
-            }
+    merged, _ = differential(
+        names,
+        oracle_chunk(sf_dir, *([] if full else ["--duckdb-strict"])),
+        chunk,
+        retry_failed=False,
+    )
 
     n_fail = sum(
         1

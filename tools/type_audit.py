@@ -1,4 +1,4 @@
-"""Arrow/physical type-family audit of every oracle vs its Spark twin.
+"""Arrow/physical type families of the oracles and their Spark twins.
 
 The round-6 driver red (``layout_compaction_plan``) — and round 5's
 (``scalar_variant_json``) — were **type-level**, not value-level: DuckDB
@@ -8,33 +8,25 @@ identical; the driver's hasher sees the physical type and flags a
 mismatch.  Local ``fetchall()`` comparison collapses both to Python
 ``int`` and is blind to the entire class.
 
-This tool kills the class: for every registered oracle it asks DuckDB
-for the oracle's output types **without executing it** (``DESCRIBE
-SELECT ...``) and compares the *type family* of each column against the
-Spark twin's analyzed schema.  Families: int / float / decimal / string
-/ bool / date / timestamp / interval / list / struct / map / binary.
-Any family divergence (most importantly DuckDB HUGEINT/DECIMAL vs Spark
-int) is reported; ``--json`` writes the audit artifact.
+This module kills the class: DuckDB gives an oracle's output types
+**without executing it** (``DESCRIBE SELECT ...``), and each column's
+*type family* is compared against the Spark twin's analyzed schema.
+Families: int / float / decimal / string / bool / date / timestamp /
+interval / list / struct / map / binary.
 
-Used two ways:
-  * standalone sweep:  python tools/type_audit.py [sf_dir] [names...]
-  * as a library by ``tests/test_oracle_types.py`` (the permanent gate)
-    and by ``tools/oracle_check.py`` (driver-faithful local check).
+Used by ``tests/test_oracle_types.py`` (the permanent gate) and by
+``tools/oracle_check.py``, which runs the family check on every query
+and records each differing column in ``type_diffs``.
 """
 
 from __future__ import annotations
 
-import json
-import re
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tools.registry_run import TABLES  # noqa: E402
 
 
 def duckdb_family(t: str) -> str:
@@ -117,89 +109,3 @@ def connect(sf_dir: str):
             f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
-
-
-def audit_one(con, name: str, sql: str, spark_schema) -> list[dict]:
-    """Family mismatches for one (oracle, spark-schema) pair."""
-    dtypes = describe_oracle(con, sql)
-    sfam = {f.name: spark_family(f.dataType) for f in spark_schema.fields}
-    out = []
-    for col, dt in dtypes.items():
-        dfam = duckdb_family(dt)
-        if col not in sfam:
-            out.append({"query": name, "col": col, "duckdb": dt,
-                        "duckdb_family": dfam, "spark": "<missing>",
-                        "spark_family": "<missing>"})
-            continue
-        if dfam != sfam[col]:
-            sdt = next(f.dataType.simpleString()
-                       for f in spark_schema.fields if f.name == col)
-            out.append({"query": name, "col": col, "duckdb": dt,
-                        "duckdb_family": dfam, "spark": sdt,
-                        "spark_family": sfam[col]})
-    return out
-
-
-def main() -> int:
-    argv = sys.argv[1:]
-    json_out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
-    only = set(argv[1:])
-
-    import __spark_entry__ as entrymod
-    from aind_hcr_data_transformation_spark.cache import release_persists
-    from aind_hcr_data_transformation_spark.session import get_spark
-
-    spark = get_spark("type-audit")
-    con = connect(sf_dir)
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-
-    mismatches: list[dict] = []
-    errors: list[dict] = []
-    n = 0
-    for name, sql in oracles.items():
-        if only and name not in only:
-            continue
-        n += 1
-        try:
-            schema = queries[name](spark, sf_dir).schema
-        except Exception as e:
-            errors.append({"query": name, "err": f"spark: {e}"})
-            print(f"ERR   {name}: spark: {e}")
-            continue
-        finally:
-            release_persists()
-        try:
-            mm = audit_one(con, name, sql, schema)
-        except Exception as e:
-            errors.append({"query": name, "err": f"duckdb: {e}"})
-            print(f"ERR   {name}: duckdb: {e}")
-            continue
-        if mm:
-            mismatches.extend(mm)
-            for m in mm:
-                print(f"MISMATCH {name}.{m['col']}: duckdb {m['duckdb']} "
-                      f"({m['duckdb_family']}) vs spark {m['spark']} "
-                      f"({m['spark_family']})")
-        else:
-            print(f"OK    {name}")
-    print(f"\n{n} oracles audited, {len(mismatches)} column mismatches, "
-          f"{len(errors)} errors")
-    if json_out:
-        Path(json_out).write_text(json.dumps({
-            "_meta": {"tool": "tools/type_audit.py", "sf_dir": sf_dir,
-                      "n_oracles": n, "n_mismatches": len(mismatches),
-                      "n_errors": len(errors),
-                      "ts": time.strftime("%Y-%m-%dT%H:%M:%S")},
-            "mismatches": mismatches, "errors": errors}, indent=1))
-        print(f"wrote {json_out}")
-    return 1 if (mismatches or errors) else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

@@ -45,18 +45,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.registry_run import each, noop_wall, registry, session  # noqa: E402
+from tools.registry_run import opt as _opt  # noqa: E402
+
 K_DATA = 10.0
 TOL = 1.5
 ABS_FLOOR_S = 6.0  # sub-second sf0.1 queries: scheduling floor absorbs K
-
-
-def _opt(argv: list[str], name: str, default: str) -> str:
-    if name in argv:
-        i = argv.index(name)
-        val = argv[i + 1]
-        del argv[i : i + 2]
-        return val
-    return default
 
 
 def main() -> int:
@@ -85,33 +79,28 @@ def main() -> int:
         f"{len(names)} queries: {names}"
     )
 
-    import __spark_entry__ as entrymod
-    from aind_hcr_data_transformation_spark.cache import release_persists
-    from aind_hcr_data_transformation_spark.session import get_spark
+    spark = session("wall-probe")
+    queries = registry()
 
-    spark = get_spark("wall-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = {**entrymod.queries(), **entrymod.production_queries()}
-
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        release_persists()
-        return round(time.perf_counter() - t0, 3)
+    def walls(names: list[str], sf_dir: str) -> list[float]:
+        out = []
+        for _name, wall, err in each(spark, sf_dir, names, noop_wall):
+            if err:
+                raise err
+            out.append(wall)
+        return out
 
     # warm both fixtures' scan paths + python workers
-    run("q1_pricing_summary", sf01)
-    run("q1_pricing_summary", sf1)
+    walls(["q1_pricing_summary"], sf01)
+    walls(["q1_pricing_summary"], sf1)
 
     results: dict[str, dict] = {}
     flags: list[str] = []
     for name in names:
         if name not in queries:
             continue
-        m01 = statistics.median(run(name, sf01) for _ in range(samples))
-        m1 = statistics.median(run(name, sf1) for _ in range(samples))
+        m01 = statistics.median(walls([name] * samples, sf01))
+        m1 = statistics.median(walls([name] * samples, sf1))
         gate = max(m01 * K_DATA * TOL, ABS_FLOOR_S)
         growth = round(m1 / m01, 2) if m01 > 0 else None
         ok = m1 <= gate
