@@ -1102,7 +1102,7 @@ def _build_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NOTE: the localCheckpoint() calls are not optional — persist()
         # (even materialized by an action) does NOT truncate the
         # *analyzed logical plan*, and with the jump self-join the plan
-        # tree quadruples per round (labels feeds neigh AND prop; prop
+        # tree quadruples per round (labels feeds both union sides; prop
         # feeds both jump sides), so Catalyst re-analysis goes 4^k and
         # hangs the driver by round 3 even for 122 nodes (observed).
         # localCheckpoint swaps the lineage for a LogicalRDD so every
@@ -1113,21 +1113,24 @@ def _build_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rounds to the consumer's action.  Dataset.checkpoint executes
         # the physical plan to build its RDD, and under AQE that runs
         # every shuffle stage below the final one right here, at call
-        # time: a cold build at sf0.01 runs 34 jobs inside this builder
-        # and 1 in the consumer's action (~2 s of a ~5.4 s cold
-        # llm_prep pass).  ROADMAP lists the alternatives measured.
+        # time: a cold build at sf0.01 runs 27 jobs inside this builder
+        # and 1 in the consumer's action.  ROADMAP and plans/cold_builds/
+        # list the alternatives measured.
         # Executor-local blocks (no checkpoint dir needed); at cluster
         # scale use spark.sparkContext.setCheckpointDir + .checkpoint()
         # if executor loss during the few CC rounds must be survivable.
-        neigh = (
+        # propagate as ONE aggregate: each node's min over its own label
+        # and its neighbours' labels.  Every edge end is a node of
+        # `labels` (the edges are symmetric), so the value is the
+        # oracle's least(label, coalesce(min neighbour label, label)).
+        prop = (
             edges.join(labels, edges.b == labels.node)
-            .groupBy(F.col("a").alias("n2"))
-            .agg(F.min("label").alias("nl"))
+            .select(F.col("a").alias("node"), "label")
+            .unionByName(labels)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=False)
         )
-        prop = labels.join(neigh, labels.node == F.col("n2"), "left").select(
-            "node",
-            F.least(F.col("label"), F.coalesce("nl", "label")).alias("label"),
-        ).localCheckpoint(eager=False)
         hop = prop.select(
             F.col("node").alias("h_node"), F.col("label").alias("h_label")
         )
@@ -1152,8 +1155,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``_CC_ITERS`` fixed rounds of ``label(v) ← min(label(v), min over
     neighbours)`` followed by POINTER JUMPING (``label(v) ←
-    min(label(v), label(label(v)))``) — each round is two equi-joins
-    plus a min-aggregate, and the jump doubles the reached distance per
+    min(label(v), label(label(v)))``) — each round is one min-aggregate
+    over (edges ⋈ labels) ∪ labels plus the jump's equi-join, and the
+    jump doubles the reached distance per
     round (reach ≥ 2^k − 1), the standard O(log diameter) relational CC
     recipe (GraphX/Pregel large-star).  Fixed round count keeps the
     computation DuckDB-unrollable (the oracle replays the same rounds as

@@ -52,20 +52,22 @@ from ..tables import load_table
 from .kmeans import assign, candidates_sql, lloyd, ranked, subvector_sql
 from .vectorops import (
     _ADC_QUERIES,
+    _IVF_ITERS,
+    _IVF_K,
     _PQ_ITERS,
     _PQ_M,
     _PQ_SUB,
     _adc_dec_sql,
     _adc_luts,
     _adc_rank,
-    _pq_codebooks,
+    _codebooks,
     _pq_ctes,
     _query_vectors,
     _sql_pq_err_off,
 )
 
-_K = 8  # coarse-quantizer cells; scale rule: k ≈ n / target_bucket_size
-_ITERS = 3  # fixed Lloyd iterations (deterministic, unrollable)
+_K = _IVF_K  # coarse-quantizer cells; scale rule: k ≈ n / target_bucket_size
+_ITERS = _IVF_ITERS  # fixed Lloyd iterations (deterministic, unrollable)
 _N_QUERIES = _ADC_QUERIES  # the standard query vectors, vec_id < 5
 _TOP_K = 3
 # Search probes the NPROBE nearest cells, not just the query's own:
@@ -122,25 +124,8 @@ def _train(emb: DataFrame) -> DataFrame:
     """K-means codebook after ``_ITERS`` Lloyd iterations, as a frame for
     the save/load/search API (the one-subspace case of
     :func:`kmeans.lloyd`)."""
-    values = lloyd(emb, _K, 1, _ITERS)[0]
+    ((values,),) = lloyd(emb, [(_K, 1, _ITERS)])
     return local_frame(emb.sparkSession, values, "cluster bigint, cemb array<double>")
-
-
-def _train_ivf(spark: SparkSession, sf_dir: str) -> list:
-    emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
-        "vec_id", "embedding"
-    )
-    return lloyd(emb, _K, 1, _ITERS)[0]
-
-
-def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
-    """Collected (cluster, cemb) centroid values of the session's coarse
-    quantizer — train once, search many times (``save_codebook``/
-    ``load_codebook`` is the cross-job form): ``ivf_kmeans_ann`` and
-    ``ivfpq_search`` share one Lloyd chain, and Python floats round-trip
-    the IEEE doubles exactly, so every consumer gets bit-identical
-    centroids."""
-    return shared("ivf_codebook", spark, sf_dir, _train_ivf)
 
 
 def ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,7 +139,7 @@ def ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs — a differential test of the full iterative algorithm, not just
     the final search."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    return _probe_search(emb, _ivf_codebook(spark, sf_dir))
+    return _probe_search(emb, _codebooks(spark, sf_dir)[0])
 
 
 def save_codebook(codebook: DataFrame, path: str) -> None:
@@ -407,13 +392,13 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 iterations × 2 consumers + the final assignment
     corpus = persist_tracked(_normalize(_sem_corpus(spark, sf_dir)))
     # train-once-per-session + literal-codebook assignment, exactly as
-    # the IVF read path (see _ivf_codebook / _probe_search); its own key
+    # the IVF read path (see vectorops._codebooks / _probe_search); its own key
     # because it trains on the normalized mutant-augmented corpus
     codebook = shared(
         "semdedup_codebook",
         spark,
         sf_dir,
-        lambda s, d: lloyd(corpus, _K, 1, _ITERS)[0],
+        lambda s, d: lloyd(corpus, [(_K, 1, _ITERS)])[0][0],
     )
     assigned = persist_tracked(
         assign(corpus, {"w": ("embedding", codebook)}, "vec_id", "embedding")
@@ -520,8 +505,8 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`kmeans.lloyd`): the IVF codebook is its one-subspace case,
     the PQ codebook its four-subspace case.
 
-    Plan: the codebooks (``ivf_codebook``/``pq_codebook``), the encoded
-    corpus (``ivfpq_index``: cell + four PQ codes per vector), each
+    Plan: the codebooks (``codebooks``, trained in the same Lloyd jobs),
+    the encoded corpus (``ivfpq_index``: cell + four PQ codes per vector), each
     query's probe cells (``ivfpq_cells``) and the queries' ADC lookup
     tables (``pq_adc_lut``, shared with ``pq_adc_topk``) are built once
     per (session, input) through ``cache.shared``; the cells and the
@@ -561,7 +546,7 @@ def _collect_ivfpq_cells(spark: SparkSession, sf_dir: str) -> dict:
     ``_N_QUERIES × _NPROBE`` pairs).  Scored on the driver from the
     collected query vectors, in the assignment's (score, cluster)
     order."""
-    codebook = _ivf_codebook(spark, sf_dir)
+    codebook = _codebooks(spark, sf_dir)[0]
     cells: dict[int, list[int]] = {}
     for qid, x in _query_vectors(spark, sf_dir):
         for _, cluster in ranked(x, codebook)[:_NPROBE]:
@@ -584,8 +569,7 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ivf = _ivf_codebook(spark, sf_dir)
-    pq = _pq_codebooks(spark, sf_dir)
+    ivf, pq = _codebooks(spark, sf_dir)
     winners = {
         "w": ("embedding", ivf),
         **{f"w{m}": (subvector_sql(m, _PQ_M), pq[m]) for m in range(_PQ_M)},

@@ -4,9 +4,10 @@ operator (IVF and SemDeDup in ``ivf``, PQ and ADC in ``vectorops``, and
 the IVF-PQ index that composes them).
 
 * **Codebook:** collected driver values ``[(cluster, cemb), ...]``, one
-  list per subspace.  Python floats are IEEE doubles and ``dlit`` emits
-  them repr-exact, so a codebook inlined as a literal scores
-  bit-identically on every consumer.
+  list per subspace.  Python floats are IEEE doubles; the codebook
+  reaches Spark as one JSON string whose doubles are Python's
+  shortest round-trip ``repr``, parsed back to the same doubles, so it
+  scores bit-identically on every consumer.
 * **Score:** ``c·c − 2·x·c``.  It orders centroids as squared L2 does
   (``x·x`` is constant per vector) at half the expression size.  Both dot
   products are the left fold of ``spark_dot``, and ``c·c`` is folded on
@@ -24,21 +25,15 @@ shape (driver-held centroids, one distributed job per iteration).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import persist_tracked
-from ..functions.vectors import (
-    EMB_DIM,
-    arr_lit,
-    dlit,
-    sparksql_dot,
-    sparksql_sq_l2,
-)
-from ..session import interpreted_eval
+from ..functions.vectors import EMB_DIM, sparksql_dot, sparksql_sq_l2
 
-#: Spark type of a codebook literal; an empty codebook is this type's
-#: empty array, so the expressions over it still resolve
+#: Spark type of a codebook literal
 _CODEBOOK_TYPE = "array<struct<c2:double,cluster:bigint,cemb:array<double>>>"
 
 
@@ -77,30 +72,35 @@ def subvector_sql(m: int, subspaces: int) -> str:
     return f"slice(embedding, {m * width + 1}, {width})"
 
 
+def codebook_sql(codebook) -> str:
+    """``from_json('<json>', _CODEBOOK_TYPE)``: the codebook as ONE string
+    literal, with each centroid's ``c·c`` folded on the driver.  Python
+    writes JSON floats as their shortest round-trip ``repr`` and Spark's
+    parser reads them back to the same doubles (pinned in
+    tests/test_sim_recall.py); a non-finite value raises ValueError."""
+    rows = [
+        {"c2": fold_dot(cemb, cemb), "cluster": int(cluster), "cemb": cemb}
+        for cluster, cemb in codebook
+    ]
+    text = json.dumps(rows, allow_nan=False, separators=(",", ":"))
+    return f"from_json('{text}', '{_CODEBOOK_TYPE}')"
+
+
 def candidates_sql(emb_sql: str, codebook, err: bool = False) -> str:
     """Spark-SQL ``array<struct<score, cluster[, err]>>``: the vector
     ``emb_sql`` scored against every centroid of ``codebook``, with the
     squared-L2 error to each centroid as ``err`` when asked.
 
-    Shaped as ``transform(<codebook literal>, c -> struct)``.  The
-    codebook array is wholly foldable, so ConstantFolding collapses it
-    into ONE literal that codegen stores as a reference object: the
-    generated source does not depend on the centroid values (scalar
-    literals would be inlined into it, forcing a fresh whole-stage
-    compile per codebook — measured ~1 s each).
-    It is one SQL string parsed by one ``F.expr``: the Column-API form
-    cost a py4j round trip per double literal (~1.5 s of DataFrame
-    construction per 8×64 codebook).  Bit equality with the Column-API
-    folds is pinned in tests/test_sim_recall.py."""
-    entries = ", ".join(
-        f"named_struct('c2', {dlit(fold_dot(cemb, cemb))}, "
-        f"'cluster', CAST({int(cluster)} AS BIGINT), 'cemb', {arr_lit(cemb)})"
-        for cluster, cemb in codebook
-    )
-    cb = f"array({entries})" if entries else f"CAST(array() AS {_CODEBOOK_TYPE})"
+    Shaped as ``transform(<codebook_sql>, c -> struct)``: the codebook is
+    one string literal, so the expression has the same shape and size
+    for every codebook (an empty one too), and its analysis does not
+    grow with k × dim.  ConstantFolding turns the ``from_json`` into one
+    array literal, which codegen stores as a reference object: the
+    generated class does not depend on the centroid values either, and
+    the next codebook reuses it from the session's codegen cache."""
     err_sql = f", 'err', {sparksql_sq_l2(emb_sql, 'c.cemb')}" if err else ""
     return (
-        f"transform({cb}, c -> named_struct("
+        f"transform({codebook_sql(codebook)}, c -> named_struct("
         f"'score', c.c2 - 2.0D * {sparksql_dot(emb_sql, 'c.cemb')}, "
         f"'cluster', c.cluster{err_sql}))"
     )
@@ -129,73 +129,95 @@ def assign(
     return out
 
 
-def lloyd(emb: DataFrame, k: int, subspaces: int, iters: int) -> list:
-    """One codebook per subspace after ``iters`` Lloyd iterations over
-    ``emb`` (vec_id, embedding), each seeded with the slices of the
-    vectors ``vec_id < k``.  IVF and SemDeDup train one 64-dim
-    codebook; PQ trains four 16-dim ones in the same jobs.
+def lloyd(emb: DataFrame, specs: list[tuple[int, int, int]]) -> list[list]:
+    """For each ``(k, subspaces, iters)`` of ``specs``, one codebook per
+    subspace after ``iters`` Lloyd iterations over ``emb`` (vec_id,
+    embedding), seeded with the slices of the vectors ``vec_id < k``.
+    IVF and SemDeDup train one 64-dim codebook; PQ trains four 16-dim
+    ones.  All specs train in the same jobs, over one persist of ``emb``
+    and one seed collect; a spec drops out once its iterations are done.
 
-    Each iteration is ONE distributed job: :func:`assign` against the
-    driver-held codebooks, then exact ``DECIMAL(30,10)`` sums per
-    (subspace, cluster, sub-dimension) and their counts are collected,
+    Each iteration is ONE distributed job: :func:`assign` against every
+    live driver-held codebook, then exact ``DECIMAL(30,10)`` sums per
+    (codebook, cluster, sub-dimension) and their counts are collected,
     and the driver computes ``mean = double(sum) / n``.  That is the
     same correctly rounded decimal→double conversion and IEEE division
     as the oracles' ``CAST(s AS DOUBLE) / n``, and the sums do not
-    depend on partition order.  A cluster that wins no vector drops out
-    of its codebook, as in the oracles' ``GROUP BY``.  The collect is
-    codebook-sized (subspaces × k × sub-dimension rows), independent of
+    depend on partition order or on which other codebooks share the
+    job.  A cluster that wins no vector drops out of its codebook, as in
+    the oracles' ``GROUP BY``; an empty codebook (no seed vectors) stays
+    empty and trains in no job.  The collect is codebook-sized (the
+    sum over live codebooks of k × sub-dimension rows), independent of
     the corpus."""
     # each iteration re-reads the corpus: iterations 2..N read the
     # persisted blocks, released with the query's persists
     emb = persist_tracked(emb)
-    width = EMB_DIM // subspaces
-    seeds = emb.filter(F.col("vec_id") < k).select("vec_id", "embedding").collect()
+    seeds = (
+        emb.filter(F.col("vec_id") < max(k for k, _, _ in specs))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    widths = [EMB_DIM // subspaces for _, subspaces, _ in specs]
     books = [
-        sorted(
-            (int(r["vec_id"]), [float(v) for v in r["embedding"][m * width : (m + 1) * width]])
-            for r in seeds
-        )
-        for m in range(subspaces)
-    ]
-    codes = [f"c{m}" for m in range(subspaces)]
-    m_col = F.expr(f"dim DIV {width}").cast("int")
-    # interpreted eval: each iteration's literal-inlined assignment is a
-    # new expression tree, and codegen would pay a fresh Janino compile
-    # per iteration for a job over training-sized data (see
-    # session.interpreted_eval)
-    with interpreted_eval(emb.sparkSession):
-        for _ in range(iters):
-            winners = {
-                f"w{m}": (subvector_sql(m, subspaces), books[m])
-                for m in range(subspaces)
-            }
-            rows = (
-                assign(emb, winners, "embedding")
-                # a struct-field extraction cannot share a select with a
-                # generator (Spark resolves the generator first and loses
-                # the struct's field names)
-                .select(
-                    *[F.col(f"w{m}.cluster").alias(c) for m, c in enumerate(codes)],
-                    "embedding",
-                )
-                .select(*codes, F.posexplode("embedding").alias("dim", "v"))
-                .select(
-                    m_col.alias("m"),
-                    F.element_at(F.array(*codes), m_col + 1).alias("cluster"),
-                    F.expr(f"dim % {width}").alias("subdim"),
-                    F.col("v").cast("double").cast("decimal(30,10)").alias("v"),
-                )
-                .groupBy("m", "cluster", "subdim")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
+        [
+            sorted(
+                (int(r["vec_id"]), [float(v) for v in r["embedding"][m * w : (m + 1) * w]])
+                for r in seeds
+                if r["vec_id"] < k
             )
-            sums: list[dict[int, dict[int, float]]] = [{} for _ in range(subspaces)]
-            for r in rows:
-                sums[int(r["m"])].setdefault(int(r["cluster"]), {})[
-                    int(r["subdim"])
-                ] = float(r["s"]) / r["n"]
-            books = [
-                sorted((c, [dims[d] for d in range(len(dims))]) for c, dims in byc.items())
-                for byc in sums
-            ]
+            for m in range(subspaces)
+        ]
+        for (k, subspaces, _), w in zip(specs, widths)
+    ]
+    for it in range(max(iters for _, _, iters in specs)):
+        live = [s for s, (_, _, iters) in enumerate(specs) if it < iters and books[s][0]]
+        if not live:
+            break
+        live_books = [(s, m) for s in live for m in range(specs[s][1])]
+        codes = [f"c{s}_{m}" for s, m in live_books]
+        winners = {
+            f"w{s}_{m}": (subvector_sql(m, specs[s][1]), books[s][m])
+            for s, m in live_books
+        }
+        # every embedding component is summed once per live spec, under
+        # the winner of that spec's subspace holding it
+        targets = []
+        for s in live:
+            m_col = F.expr(f"dim DIV {widths[s]}").cast("int")
+            spec_codes = [f"c{s}_{m}" for m in range(specs[s][1])]
+            targets.append(
+                F.struct(
+                    F.lit(s).alias("s"),
+                    m_col.alias("m"),
+                    F.element_at(F.array(*spec_codes), m_col + 1).alias("cluster"),
+                    F.expr(f"dim % {widths[s]}").alias("subdim"),
+                )
+            )
+        rows = (
+            assign(emb, winners, "embedding")
+            # a struct-field extraction cannot share a select with a
+            # generator (Spark resolves the generator first and loses
+            # the struct's field names)
+            .select(
+                *[F.col(f"w{s}_{m}.cluster").alias(f"c{s}_{m}") for s, m in live_books],
+                "embedding",
+            )
+            .select(*codes, F.posexplode("embedding").alias("dim", "v"))
+            .select(
+                F.inline(F.array(*targets)),
+                F.col("v").cast("double").cast("decimal(30,10)").alias("v"),
+            )
+            .groupBy("s", "m", "cluster", "subdim")
+            .agg(F.sum("v").alias("s_v"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        sums: dict[tuple[int, int], dict] = {sm: {} for sm in live_books}
+        for r in rows:
+            sums[(r["s"], r["m"])].setdefault(int(r["cluster"]), {})[
+                int(r["subdim"])
+            ] = float(r["s_v"]) / r["n"]
+        for (s, m), byc in sums.items():
+            books[s][m] = sorted(
+                (c, [dims[d] for d in range(len(dims))]) for c, dims in byc.items()
+            )
     return books

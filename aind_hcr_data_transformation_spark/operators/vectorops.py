@@ -234,6 +234,11 @@ _PQ_M = 4                    # subspaces
 _PQ_SUB = EMB_DIM // _PQ_M   # dims per subspace (16)
 _PQ_K = 4                    # codewords per subspace codebook
 _PQ_ITERS = 2                # fixed Lloyd iterations per subspace
+# the IVF coarse quantizer (``ivf._K``/``ivf._ITERS``): cells and fixed
+# Lloyd iterations; here because its codebook trains in the same Lloyd
+# jobs as the PQ sub-codebooks (:func:`_codebooks`)
+_IVF_K = 8
+_IVF_ITERS = 3
 
 
 def _sq_l2(x, c) -> F.Column:
@@ -260,9 +265,9 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     64×float32 vector to 4 code bytes (64×) for in-memory search.
 
     ALL FOUR codebooks train in ONE driver-iterated Lloyd chain
-    (:func:`_pq_codebooks`, the four-subspace case of
-    :func:`kmeans.lloyd`), and the corpus is encoded against them
-    once per (session, input): the session-shared ``pq_codes`` relation
+    (:func:`_codebooks`, the four-subspace case of :func:`kmeans.lloyd`,
+    in the same jobs as the IVF codebook), and the corpus is encoded
+    against them once per (session, input): the session-shared ``pq_codes`` relation
     (:func:`_pq_codes`).  This query is a map-only projection over those
     codes — no embedding scan, no exchange — so a repeated call reads
     codes instead of re-encoding every vector.  The whole pipeline
@@ -284,20 +289,24 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
-    """The session's PQ sub-codebooks, one ``[(cluster, cemb), ...]``
-    per subspace, training on first use: the Lloyd rounds run once per
-    (session, input) under the ``cache.shared`` key ``pq_codebook``, and
-    both encoded corpora (``pq_codes`` here, ``ivfpq_index`` in ``ivf``)
-    and the ADC lookup tables use the same centroids."""
-    return shared("pq_codebook", spark, sf_dir, _train_pq)
+def _codebooks(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+    """(IVF codebook, PQ sub-codebooks) of the session as collected
+    ``[(cluster, cemb), ...]`` values (one list per PQ subspace), training
+    on first use: both Lloyd chains run once per (session, input), in the
+    same jobs (:func:`kmeans.lloyd`), under the ``cache.shared`` key
+    ``codebooks`` (``ivf.save_codebook`` is the cross-job form).  Python
+    floats round-trip the IEEE doubles exactly, so both encoded corpora
+    (``pq_codes`` here, ``ivfpq_index`` in ``ivf``), the ADC lookup
+    tables and the IVF searches score against bit-identical centroids."""
+    return shared("codebooks", spark, sf_dir, _train_codebooks)
 
 
-def _train_pq(spark: SparkSession, sf_dir: str) -> list:
+def _train_codebooks(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
-    return lloyd(emb, _PQ_K, _PQ_M, _PQ_ITERS)
+    (ivf,), pq = lloyd(emb, [(_IVF_K, 1, _IVF_ITERS), (_PQ_K, _PQ_M, _PQ_ITERS)])
+    return ivf, pq
 
 
 def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,7 +334,7 @@ def _pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     no broadcast join, no argmin aggregate (same score fold, same
     (score, cluster) tie-break, same squared-L2 error fold on the
     winning codeword as the oracle's ``pf{m}`` CTEs)."""
-    books = _pq_codebooks(spark, sf_dir)
+    books = _codebooks(spark, sf_dir)[1]
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
@@ -581,7 +590,7 @@ def _adc_luts(spark: SparkSession, sf_dir: str) -> dict:
 def _build_adc_luts(spark: SparkSession, sf_dir: str) -> dict:
     # the squared-L2 fold on the driver's doubles is the oracle's lut{m}
     # fold, term for term (bit equality pinned in tests/test_sim_recall.py)
-    books = _pq_codebooks(spark, sf_dir)
+    books = _codebooks(spark, sf_dir)[1]
     return {
         qid: {
             m: {

@@ -10,7 +10,6 @@ same session config scales from ``local[32]`` to a 1000-executor cluster.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -46,6 +45,14 @@ _DEFAULT_CONFS: dict[str, str] = {
     # In-memory columnar cache compression.
     "spark.sql.inMemoryColumnarStorage.compressed": "true",
     "spark.sql.shuffle.partitions": "32",
+    # Generated classes kept for reuse, keyed by their source. One
+    # llm_prep pass compiles ~110 distinct classes; with Spark's default
+    # 100 entries every cold pass evicts classes the next one needs and
+    # recompiles 75-118 of them, with 1000 none. One registry sweep at
+    # sf0.01 compiles 2,675 distinct classes: 3,494 compiles with 100
+    # entries, 2,773 with 1000. Static: a driver-provided session keeps
+    # 100 (SCALING.md).
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Off-heap friendly UI noise reduction for bench runs.
     "spark.ui.showConsoleProgress": "false",
     # Headless engine: no UI server, and tight listener retention. The
@@ -199,42 +206,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return spark
-
-
-@contextmanager
-def interpreted_eval(spark: SparkSession):
-    """Run the enclosed driver-iterated jobs with whole-stage codegen
-    OFF (interpreted expression evaluation — same expressions, same
-    results, a supported execution mode).
-
-    Rationale (r13, guide §1.2 per-task work): the Lloyd trainers
-    inline the current centroids as LITERALS, so every iteration's
-    assignment expression is a brand-new several-thousand-node tree —
-    Janino compiles it from scratch each time (~0.5 s/iteration),
-    while the job itself only touches a few thousand cached rows.
-    Interpreted eval of those trees is near-free at codebook-training
-    data volumes; measured 5.6 → 2.6 s cold / 1.8 → 1.4 s warm for the
-    PQ trainer at sf0.1. Scale note: training-collect volume is
-    codebook-sized (corpus-independent), and the per-row interpreted
-    overhead is amortized the same way at any corpus size because the
-    assignment jobs this wraps stay bounded by the training SAMPLE,
-    not the corpus.
-    """
-    pairs = {
-        "spark.sql.codegen.wholeStage": "false",
-        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
-    }
-    prev = {k: spark.conf.get(k, None) for k in pairs}
-    for k, v in pairs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def apply_session_confs(spark: SparkSession) -> SparkSession:

@@ -130,3 +130,46 @@ def test_opt_and_flag_pop_their_arguments_anywhere():
     with pytest.raises(SystemExit) as exc:
         registry_run.opt(["sf", "--json"], "--json")
     assert exc.value.code == 2
+
+
+#: the record oracle_check writes when the oracle's column is HUGEINT and
+#: Spark's a double: rows and columns agree, the type family does not, so
+#: the values are never compared
+HUGEINT = {
+    "rows_match": True,
+    "schema_match": True,
+    "type_match": False,
+    "hash_match": None,
+    "err": None,
+    "type_diffs": [
+        {"col": "revenue", "duckdb": "HUGEINT", "duckdb_family": "decimal",
+         "spark": "double", "spark_family": "float"}
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "rec, fails",
+    [
+        (OK, False),
+        ({**OK, "type_match": True, "strict_match": True}, False),
+        (BAD, True),
+        (HUGEINT, True),
+        ({**OK, "rows_match": False, "hash_match": None}, True),
+        ({**OK, "schema_match": False, "hash_match": None}, True),
+        ({**OK, "strict_match": False, "err": "strict divergence"}, True),
+        ({**OK, "strict_match": False}, True),
+        ({**OK, "err": "no_oracle", "rows_match": None}, True),
+        ({"err": "process crashed twice (rc=-11)"}, True),
+    ],
+    ids=["ok", "ok-strict", "values", "hugeint", "rows", "schema",
+         "strict-err", "strict", "no-oracle", "crash"],
+)
+def test_one_verdict_fails_any_mismatch(rec, fails):
+    assert registry_run.failed(rec) is fails
+
+
+def test_the_strict_sweep_counts_with_the_same_verdict():
+    from tools import strict_sweep
+
+    assert strict_sweep.failed is registry_run.failed

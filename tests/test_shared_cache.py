@@ -303,6 +303,48 @@ def test_warm_ivfpq_search_runs_two_jobs(spark, queries):
     assert 1 <= len(_group_jobs(spark, group)) <= 2
 
 
+def test_one_codebooks_entry_serves_every_vector_query(spark, queries):
+    """The IVF and PQ codebooks train in the same Lloyd jobs, under one
+    ``cache.shared`` key: a cold ``ivfpq_search`` records one
+    ``codebooks`` build and no per-codebook one, and the other readers
+    of either codebook build nothing more."""
+    clear()
+    try:
+        for name in ("ivfpq_search", "embed_pq_quantize", "pq_adc_topk", "ivf_kmeans_ann"):
+            queries[name](spark, SF_DIR).collect()
+            release_persists()
+            keys = [b[0] for b in shared_builds()]
+            assert keys.count("codebooks") == 1, name
+            assert not {"ivf_codebook", "pq_codebook"} & set(keys), name
+        assert _entries("codebooks") == [("codebooks", spark.sparkContext.applicationId, SF_DIR)]
+    finally:
+        clear()
+
+
+def test_cold_pass_on_a_fresh_copy_compiles_no_class(spark, queries, tmp_path):
+    """A cold pass over a new copy of the input builds every shared index
+    again, but its plans are those of the previous copy's pass: the
+    session's codegen cache must still hold all of their generated
+    classes (a 100-entry cache did not: one pass compiles ~110).  A
+    counter, so the host's speed does not move it."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    names = ("dedup_components", "embed_pq_quantize", "ivfpq_search")
+    clear()
+    try:
+        for i in range(2):
+            copy = tmp_path / f"c{i}"
+            shutil.copytree(SF_DIR, copy, copy_function=shutil.copyfile)
+            before = codegen.METRIC_COMPILATION_TIME().getCount()
+            for name in names:
+                queries[name](spark, str(copy)).write.format("noop").mode("overwrite").save()
+                release_persists()
+            new = codegen.METRIC_COMPILATION_TIME().getCount() - before
+        assert [b[0] for b in shared_builds()].count("cc_labels") == 2
+        assert new == 0
+    finally:
+        clear()
+
+
 VECTOR_QUERIES = (
     "ivf_kmeans_ann",
     "dedup_semantic",

@@ -183,3 +183,102 @@ def test_dlit_rejects_non_finite():
     # finite extremes still round-trip exactly
     for ok in (1.7976931348623157e308, 5e-324, -0.0):
         assert float(dlit(ok)[:-1]) == ok or math.copysign(1, ok) == -1
+
+
+def _seventeen_digit_doubles(n):
+    """``n`` doubles whose shortest round-trip ``repr`` needs all 17
+    significant digits."""
+    import random
+
+    rng = random.Random(13)
+    out = []
+    while len(out) < n:
+        v = rng.uniform(-1, 1) * 10 ** rng.randint(-30, 30)
+        if len(repr(v).split("e")[0].lstrip("-").replace(".", "").lstrip("0")) == 17:
+            out.append(v)
+    return out
+
+
+def test_json_codebook_literal_parses_repr_exact(spark):
+    """The codebook reaches Spark as one JSON string (``kmeans.
+    codebook_sql``): every double must come back repr-equal to the
+    driver's value, subnormals, the extremes and -0.0 included."""
+    import json
+
+    from aind_hcr_data_transformation_spark.operators.kmeans import (
+        _CODEBOOK_TYPE,
+        codebook_sql,
+        fold_dot,
+    )
+
+    edge = [5e-324, 2.2250738585072014e-308, 1.7976931348623157e308, -0.0, 0.1 + 0.2]
+    vals = edge + _seventeen_digit_doubles(16)
+    # the parser, on every value in every double field of the type
+    text = json.dumps([{"c2": v, "cluster": i, "cemb": [v, -v]} for i, v in enumerate(vals)])
+    got = spark.sql(f"SELECT from_json('{text}', '{_CODEBOOK_TYPE}') AS cb").collect()[0].cb
+    assert [repr((r.c2, r.cluster, r.cemb)) for r in got] == [
+        repr((v, i, [v, -v])) for i, v in enumerate(vals)
+    ]
+    # the literal kmeans writes (c·c of 1.79e308 overflows, so it sits out)
+    book = [(7, vals[:2] + vals[3:]), (3, [-0.0] * 4), (11, vals[5:])]
+    got = spark.sql(f"SELECT {codebook_sql(book)} AS cb").collect()[0].cb
+    assert [repr((r.c2, r.cluster, r.cemb)) for r in got] == [
+        repr((fold_dot(c, c), k, c)) for k, c in book
+    ]
+
+
+def test_json_codebook_literal_rejects_non_finite():
+    """A non-finite centroid (or an overflowing ``c·c``) raises
+    ValueError, as ``dlit`` does, instead of reaching Spark as a
+    ``NaN``/``Infinity`` token its JSON parser would accept."""
+    from aind_hcr_data_transformation_spark.operators.kmeans import candidates_sql
+
+    for bad in (float("nan"), float("inf"), float("-inf"), 1.7976931348623157e308):
+        with pytest.raises(ValueError):
+            candidates_sql("embedding", [(0, [1.0, bad])])
+
+
+def test_assign_plans_no_json_parse(spark):
+    """ConstantFolding folds the codebook's ``from_json`` into one
+    literal: the optimized plan of an assignment parses no JSON per
+    row."""
+    from aind_hcr_data_transformation_spark.operators.kmeans import assign, ranked
+
+    vecs = [[float(i * 2 + d) for d in range(4)] for i in range(3)]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id bigint, embedding array<double>")
+    book = [(0, [0.5] * 4), (1, [3.0] * 4), (2, [5.5] * 4)]
+    out = assign(df, {"w": ("embedding", book)}, "vec_id", err=True)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan.lower() and "jsontostructs" not in plan.lower()
+    assert [r.w.cluster for r in out.orderBy("vec_id").collect()] == [
+        ranked(x, book)[0][1] for x in vecs
+    ] == [0, 1, 2]
+
+
+def test_joint_lloyd_equals_separate_runs(spark):
+    """IVF and PQ train in the same Lloyd jobs (``vectorops._codebooks``);
+    their codebooks must be repr-equal to those of one run per spec."""
+    from aind_hcr_data_transformation_spark.cache import release_persists
+    from aind_hcr_data_transformation_spark.operators.kmeans import lloyd
+    from aind_hcr_data_transformation_spark.operators.vectorops import (
+        _IVF_ITERS,
+        _IVF_K,
+        _PQ_ITERS,
+        _PQ_K,
+        _PQ_M,
+    )
+    from aind_hcr_data_transformation_spark.tables import load_table
+    from tests.conftest import SF_DIR
+
+    specs = [(_IVF_K, 1, _IVF_ITERS), (_PQ_K, _PQ_M, _PQ_ITERS)]
+    emb = load_table(spark, SF_DIR, "embeddings", spread=True).select(
+        "vec_id", "embedding"
+    )
+    try:
+        joint = lloyd(emb, specs)
+        alone = [lloyd(emb, [spec])[0] for spec in specs]
+    finally:
+        release_persists()
+    assert [len(books) for books in joint] == [1, _PQ_M]
+    assert all(len(b) == k for (k, _, _), books in zip(specs, joint) for b in books)
+    assert repr(joint) == repr(alone)

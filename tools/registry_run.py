@@ -116,12 +116,16 @@ def noop_wall(name: str, build) -> float:
 
 
 def failed(rec: dict) -> bool:
-    """A differential record whose rows, columns or values differ from
-    its oracle's, or that has none (an error)."""
-    return not (
-        rec.get("rows_match")
-        and rec.get("schema_match")
-        and rec.get("hash_match") is not False
+    """The tools' one verdict on a differential record: it fails on an
+    error (a crash, no oracle), a rowcount, column-set or type-family
+    mismatch, differing values, or a strict-probe divergence."""
+    return bool(
+        rec.get("err")
+        or not rec.get("rows_match")
+        or not rec.get("schema_match")
+        or rec.get("type_match") is False
+        or rec.get("hash_match") is False
+        or rec.get("strict_match") is False
     )
 
 

@@ -34,7 +34,13 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.registry_run import differential, flag, opt, oracle_chunk  # noqa: E402
+from tools.registry_run import (  # noqa: E402
+    differential,
+    failed,
+    flag,
+    opt,
+    oracle_chunk,
+)
 
 
 def main() -> int:
@@ -87,13 +93,7 @@ def main() -> int:
         retry_failed=False,
     )
 
-    n_fail = sum(
-        1
-        for v in merged.values()
-        if v.get("err")
-        or v.get("hash_match") is False
-        or v.get("strict_match") is False
-    )
+    n_fail = sum(map(failed, merged.values()))
     merged_out = {
         "_meta": {
             "tool": (
