@@ -20,17 +20,19 @@ Because block offsets are multiples of the base chunk (divisible by the
 factor), per-block trimming of the final edge block equals the global
 trim — no halo exchange needed.
 
-Arrow-native levels: every level of the conversion pyramid
-(``pipeline._convert_pyramid``, the one caller of these kernels) is ONE
-``mapInArrow`` that writes its tiles and pools them with
-:func:`pool_batches` — payloads read zero-copy from Arrow buffers
-(:func:`block_tiles`), pooled tiles leave as record batches under a
-128 MiB flush budget (Arrow binary columns carry a 2 GiB offset cap).
-Re-tiling onto the base chunk grid starts no
-Python runner of its own (:func:`chunk_sorted` exchanges and sorts in the
-JVM, :func:`assemble_chunks` stitches inside the consuming task): each
-runner costs ~0.2 s of CPU to start (SCALING.md, "Known bounded worst
-cases").
+Arrow-native levels: the conversion pyramid
+(``pipeline._convert_pyramid``, the one caller of these kernels) writes
+the first levels of each region inside ONE ``mapInArrow`` task: it
+pools each tile (:func:`pool_tiles`), holds one target chunk row at a
+time (:func:`row_sorted`) and stitches it into chunks
+(:func:`assemble_chunks`) for the next level.  Levels past those, if
+any, re-tile with no Python runner of their own: :func:`chunk_sorted`
+exchanges and sorts the emitted tiles in the JVM and the next stage's
+task reads them zero-copy (:func:`block_tiles`) and stitches them with
+the same :func:`assemble_chunks`; tiles leave a task as record batches
+under a 128 MiB flush budget (:func:`tile_batches`; Arrow binary columns
+carry a 2 GiB offset cap).  Each runner costs ~0.2 s of CPU to start
+(SCALING.md, "Known bounded worst cases").
 """
 
 from __future__ import annotations
@@ -122,32 +124,35 @@ def block_tiles(batches: Iterable[pa.RecordBatch]) -> Iterator[Tile]:
             yield cols["stack_name"][i], cols["t"][i], cols["c"][i], origin, arr
 
 
-def pool_batches(
-    tiles: Iterable[Tile], factors: tuple[int, int, int]
-) -> Iterator[pa.RecordBatch]:
-    """Windowed-mean pool each tile (see :func:`block_tiles`) and emit
-    the pooled tiles as ``BLOCK_SCHEMA`` record batches, flushed at
-    :data:`FLUSH_BYTES`.  A tile thinner than its factor on some axis
-    crops away entirely (global ``floor(shape/f)`` excludes it)."""
-    out: dict[str, list] = {k: [] for k in _BLOCK_ARROW.names}
-    pending = 0
+def pool_tiles(tiles: Iterable[Tile], factors: tuple[int, int, int]) -> Iterator[Tile]:
+    """Windowed-mean pool each tile onto the next level's grid.  A tile
+    thinner than its factor on some axis crops away entirely (global
+    ``floor(shape/f)`` excludes it)."""
     for name, t, c, origin, arr in tiles:
         red = windowed_mean_nd(arr.reshape(arr.shape[-3:]), factors)
-        if red.size == 0:
-            continue
-        z0, y0, x0 = (o // f for o, f in zip(origin, factors))
+        if red.size:
+            yield name, t, c, tuple(o // f for o, f in zip(origin, factors)), red[None, None]
+
+
+def tile_batches(tiles: Iterable[Tile]) -> Iterator[pa.RecordBatch]:
+    """Tiles as ``BLOCK_SCHEMA`` record batches, flushed at
+    :data:`FLUSH_BYTES`."""
+    out: dict[str, list] = {k: [] for k in _BLOCK_ARROW.names}
+    pending = 0
+    for name, t, c, (z0, y0, x0), arr in tiles:
+        shape = arr.shape[-3:]
         row = {
             "stack_name": name, "t": t, "c": c,
-            "z0": z0, "z1": z0 + red.shape[0],
-            "y0": y0, "y1": y0 + red.shape[1],
-            "x0": x0, "x1": x0 + red.shape[2],
-            "shape": [1, 1, *red.shape],
-            "dtype": str(red.dtype),
-            "block": red.tobytes(),
+            "z0": z0, "z1": z0 + shape[0],
+            "y0": y0, "y1": y0 + shape[1],
+            "x0": x0, "x1": x0 + shape[2],
+            "shape": [1, 1, *shape],
+            "dtype": str(arr.dtype),
+            "block": arr.tobytes(),
         }
         for k, v in row.items():
             out[k].append(v)
-        pending += red.nbytes
+        pending += arr.nbytes
         if pending >= FLUSH_BYTES:
             yield pa.RecordBatch.from_pydict(out, schema=_BLOCK_ARROW)
             out = {k: [] for k in out}
@@ -175,6 +180,19 @@ def chunk_sorted(blocks: DataFrame, chunk: tuple[int, int, int]) -> DataFrame:
         *_chunk_origin((F.col("z0"), F.col("y0"), F.col("x0")), chunk),
     ]
     return blocks.repartition(*keys).sortWithinPartitions(*keys)
+
+
+def row_sorted(tiles: Iterable[Tile], chunk: tuple[int, int, int]) -> Iterator[Tile]:
+    """In-task twin of :func:`chunk_sorted` for tiles that arrive in z
+    order: hold each run of tiles of one (stack, t, c, target chunk
+    z-row) and release it sorted by target chunk, for
+    :func:`assemble_chunks`.  A run is one chunk deep on the target
+    grid and at most one y×x plane wide, so at most one such row is
+    held."""
+    for _, run in itertools.groupby(
+        tiles, key=lambda e: (*e[:3], e[3][0] - e[3][0] % chunk[0])
+    ):
+        yield from sorted(run, key=lambda e: (_chunk_origin(e[3], chunk), e[3]))
 
 
 def assemble_chunks(

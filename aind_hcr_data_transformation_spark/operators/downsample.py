@@ -17,8 +17,8 @@ Two Spark forms, both provided:
 * :func:`downsample_relational` — ``groupBy(floor(z/s), …).avg()`` — the
   correctness reference; a plain partial+final hash aggregate, shuffles one
   row per output voxel, no halo constraints, works for any factor/extent.
-* the dense-array fast path — ``blockwise.pool_batches``, a numpy reduce
-  per tile inside each fused level task of ``pipeline._convert_pyramid``
+* the dense-array fast path — ``blockwise.pool_tiles``, a numpy reduce
+  per tile inside the writing tasks of ``pipeline._convert_pyramid``
   (``tests/test_downsample.py`` pins the converter's level 1 to the
   relational form).
 

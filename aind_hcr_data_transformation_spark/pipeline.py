@@ -3,35 +3,46 @@
 (``zeiss_job.py:207-226``, ``czi_to_zarr.py:457-653``), orchestrated as
 Spark stages instead of SLURM partitions:
 
-stage 0   block-index relation (all stacks at once — the scheduler
-          replaces ``num_of_partitions``/``partition_to_process``),
-          exploded in the JVM from an Arrow-built ``LocalTableScan``
-          catalog; only INDEX rows (bounds, no payload) enter the exchange
-stage 1   one ``mapInArrow`` that BIRTHS each level-0 tile (codec slab
-          read or synthetic ramp), writes its zarr region, and EMITS the
-          windowed-mean-pooled tile — one Python runner per task
-stage k   pooled tiles exchange and sort by target base chunk in the JVM
-          (``blockwise.chunk_sorted``); one ``mapInArrow`` per task
-          stitches each chunk, writes level k and emits level k+1
+stage 0   region index (all stacks at once — the scheduler replaces
+          ``num_of_partitions``/``partition_to_process``): one row per
+          region whose chunks of the first ``D`` levels all lie inside
+          it (:func:`fusion_groups`, :func:`fusion_depth`) — whole-plane
+          z-groups for CZI stacks, y×x-tiled blocks for synthetic ones —
+          built on the driver as an Arrow ``LocalTableScan`` and placed
+          with ``repartitionById`` on a largest-first partition id
+          (:func:`place_groups`); only these INDEX rows are exchanged
+stage 1   one ``mapInArrow`` whose task, per region, BIRTHS each
+          level-0 tile (codec slab read or synthetic ramp) in z, y, x
+          order, writes it and pools it, then stitches the pooled tiles
+          into the next level's chunks in the task
+          (``blockwise.row_sorted`` + ``assemble_chunks``), writes and
+          pools again, through level ``D−1``; it emits level-``D``
+          tiles only for stacks deeper than ``D``
+stage k   (tail, only then) pooled tiles exchange and sort by target
+          base chunk in the JVM (``blockwise.chunk_sorted``); one
+          ``mapInArrow`` per level stitches, writes and emits the next —
+          the same stage function writing one level
 finally   OME-NGFF group metadata (omero + multiscales, driver-side)
 
-The whole pyramid is ONE Spark job driven by one action: shuffle
-boundaries between levels materialize each (8×-smaller) level exactly
-once, replacing the reference's per-level write-then-read-back
-(``czi_to_zarr.py:623-635``, SURVEY §4 X7).  The fusion matters at both
-ends of the scale: full-resolution voxels NEVER cross the Python↔JVM
-Arrow boundary (measured ~55 MiB/s per direction for multi-MB binary
-rows; a separate read stage feeding the write stage paid it twice and
-capped the 2 GiB local benchmark at ~30 MiB/s — fusing gen into the
-write stage lifted it to ~115 MiB/s), and at 100 TB level 0 never
-shuffles at all: only the 8×-smaller pooled tiles do.  Each Python
+The whole pyramid is ONE Spark job driven by one action, replacing the
+reference's per-level write-then-read-back (``czi_to_zarr.py:623-635``,
+SURVEY §4 X7).  Full-resolution voxels NEVER cross the Python↔JVM Arrow
+boundary (measured ~55 MiB/s per direction for multi-MB binary rows; a
+separate read stage feeding the write stage paid it twice and capped the
+2 GiB local benchmark at ~30 MiB/s), and the levels a region's task
+writes never leave its Python worker at all: at the benchmark geometry
+(4 stacks of 96×256×256, chunk 64×128×128, 3 levels) ``D`` is the whole
+pyramid, the conversion is one ``mapInArrow`` over four z-groups, and
+the only shuffle is the index (a few hundred bytes).  Each Python
 runner costs ~0.2 s of CPU to start (SCALING.md, "Known bounded worst
-cases"), so no stage starts one it could leave to the JVM.
+cases"), so no stage starts one it could leave to the JVM or to a task
+already running.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Collection
 from urllib.parse import urlparse
 
 import numpy as np
@@ -101,6 +112,88 @@ def dtype_minmax(dtype: str) -> tuple[float, float]:
     return float(finfo.min), float(finfo.max)
 
 
+def fusion_groups(
+    stacks: dict[str, tuple[int, int, int]],
+    depths: dict[str, int],
+    chunk: tuple[int, int, int],
+    factors: tuple[int, int, int],
+    fused: int,
+    planes: Collection[str] = (),
+) -> list[tuple[str, int, int, int, int, int, int]]:
+    """``(stack, z0, z1, y0, y1, x0, x1)`` regions on the grid of
+    level-``m−1`` chunks, ``m = min(fused, stack depth)``: every chunk
+    of levels ``< m`` lies inside one region, so one task can write
+    those levels alone.  At ``m = 1`` a region is one level-0 tile.
+    Stacks in ``planes`` (decoded slab by slab) take whole y×x planes,
+    so each of their regions is a z-group whose slabs are decoded once."""
+    out = []
+    for name, shape in stacks.items():
+        step = [c * f ** (min(fused, depths[name]) - 1) for c, f in zip(chunk, factors)]
+        if name in planes:
+            step[1:] = shape[1:]
+        z, y, x = shape
+        out += [
+            (name, z0, min(z0 + step[0], z), y0, min(y0 + step[1], y), x0, min(x0 + step[2], x))
+            for z0 in range(0, z, step[0])
+            for y0 in range(0, y, step[1])
+            for x0 in range(0, x, step[2])
+        ]
+    return out
+
+
+def fusion_depth(
+    stacks: dict[str, tuple[int, int, int]],
+    chunk: tuple[int, int, int],
+    factors: tuple[int, int, int],
+    n_lvls: int,
+    n_part: int,
+    planes: Collection[str] = (),
+) -> int:
+    """Levels the level-0 task writes before its tiles leave it: the
+    deepest ``D`` (at most the deepest stack's pyramid) whose regions
+    (:func:`fusion_groups`)
+
+    - still number at least ``min(n_part, level-0 regions)`` — slabs
+      for stacks in ``planes``, tiles for the others — so fusing never
+      takes level-0 parallelism the unfused stage had; and
+    - keep a task's held pooled tiles within one decoded slab: at level
+      ``j`` a task holds at most one chunk row of a plane, ``cz × Y_j ×
+      X_j`` voxels (:func:`~.operators.blockwise.row_sorted`), so a
+      stack needs ``Σ_{j=1}^{D−1} Y_j·X_j ≤ Y·X``.
+
+    Derived from the geometry alone; no knob sets it."""
+    _, fy, fx = factors
+    depths = {n: pyramid_depth(s, factors, n_lvls) for n, s in stacks.items()}
+
+    def n_groups(d: int) -> int:
+        return len(fusion_groups(stacks, depths, chunk, factors, d, planes))
+
+    def held_fits(d: int) -> bool:
+        return all(
+            sum((y // fy**j) * (x // fx**j) for j in range(1, min(d, depths[n])))
+            <= y * x
+            for n, (_, y, x) in stacks.items()
+        )
+
+    need = min(n_part, n_groups(1))
+    d = 1
+    while d < max(depths.values(), default=1) and n_groups(d + 1) >= need and held_fits(d + 1):
+        d += 1
+    return d
+
+
+def place_groups(weights: list[int], n: int) -> list[int]:
+    """Partition id per group, largest first: each group in turn goes to
+    the least-loaded of ``n`` partitions (lowest id on ties), so no
+    partition exceeds its fair share by more than one group."""
+    loads = [0] * n
+    pids = [0] * len(weights)
+    for i in sorted(range(len(weights)), key=lambda i: -weights[i]):
+        pids[i] = min(range(n), key=loads.__getitem__)
+        loads[pids[i]] += weights[i]
+    return pids
+
+
 def _convert_pyramid(
     spark: SparkSession,
     settings: ZarrConversionSettings,
@@ -109,177 +202,169 @@ def _convert_pyramid(
     paths: dict[str, str] | None = None,
     fault=None,
 ) -> dict[str, str]:
-    """Fused leveled pyramid write (the engine core behind every
-    converter): one Spark job, one action; each stage writes level k
-    for every still-alive stack AND emits the pooled level k+1 tiles.
+    """Fused pyramid write (the engine core behind every converter): one
+    Spark job, one action.  The first stage writes levels ``0 … D−1``
+    (:func:`fusion_depth`) of each region in the task that decodes it;
+    each later stage writes one level of the stacks that go deeper.
 
     ``fault`` (None in production) is the chaos hook behind
-    ``tools/chaos_probe.py``: called as ``fault(n)`` after each region
-    write inside a task (``n`` = the task's region writes so far) and
-    as ``fault("pre_shard", n)`` after its last chunk write, before its
-    checksum shards — so the probe can kill first task attempts
-    mid-write or in the chunks-durable / manifest-absent window and
-    assert the retried job's trees are byte-equal to a clean run's (the
-    idempotence contract the paragraph below claims).
+    ``tools/chaos_probe.py``: called as ``fault(n, level)`` after each
+    region write inside a task (``n`` = the task's region writes so far,
+    ``level`` = the level just written) and as ``fault("pre_shard", n)``
+    after its last chunk write, before its checksum shards — so the
+    probe can kill first task attempts mid-write or in the
+    chunks-durable / manifest-absent window and assert the retried
+    job's trees are byte-equal to a clean run's (the idempotence
+    contract the paragraph below claims).
 
     Group nodes and ``.zattrs`` must already exist; level arrays are
     initialized here (driver) and their metas ship to tasks via the
     closure — workers do zero ``.zarray`` GETs.
 
     Writes are chunk-aligned and byte-deterministic, so task retries /
-    speculative duplicates are idempotent (the same guarantee the
-    unfused design relied on).
+    speculative duplicates are idempotent.
 
     ``paths`` maps stack names to CZI files: those stacks' level-0 tiles
     are born by the codec slab read (``sources.czi._read_slab_czifile``
     — czifile when installed, the vendored ZISRAW reader otherwise)
-    instead of the synthetic ramp. Their tile rows are co-partitioned
-    and sorted by (stack, z-slab) so one task owns all tiles of a slab
-    consecutively and a single-entry per-worker cache decodes each slab
-    exactly once — without it, a y×x tile grid over per-plane subblocks
-    re-decodes every plane once per tile (ruinous on mosaic-scale
-    planes)."""
+    instead of the synthetic ramp.  Their regions are whole-plane
+    z-groups: a task walks each slab by slab, so every slab is decoded
+    exactly once and all its tiles are cut from it — a y×x tile grid
+    over per-plane subblocks would otherwise re-decode every plane once
+    per tile (ruinous on mosaic-scale planes).  Synthetic tiles cost
+    nothing to birth twice, so synthetic regions also split in y and x,
+    down to one tile each when nothing is fused."""
     from .operators.blockwise import (
         assemble_chunks,
         block_tiles,
         chunk_sorted,
-        pool_batches,
+        pool_tiles,
+        row_sorted,
+        tile_batches,
     )
     from .sinks.zarr_sink import init_array, write_checksum_shard, write_region
-    from .sources.czi import (
-        BLOCK_SCHEMA,
-        _read_slab_czifile,
-        block_index,
-        synthetic_ramp_block,
-    )
+    from .sources.czi import BLOCK_SCHEMA, _read_slab_czifile, synthetic_ramp_block
 
-    cz, cy, cx = settings.chunk_size
-    fz, fy, fx = settings.scale_factor
+    base_chunk = cz, cy, cx = settings.chunk_size
+    factors = fz, fy, fx = settings.scale_factor
     out_dir = settings.output_directory
-    base_chunk = (cz, cy, cx)
-
-    depths = {
-        n: pyramid_depth((z, y, x), (fz, fy, fx), settings.downsample_levels)
-        for n, (z, y, x) in stacks.items()
-    }
-    shapes = {n: [1, 1, z, y, x] for n, (z, y, x) in stacks.items()}
-
-    catalog = local_frame(
-        spark,
-        [(n, z, y, x) for n, (z, y, x) in stacks.items()],
-        "stack_name string, z_extent int, y_extent int, x_extent int",
-    )
-    n_part = min(64, max(4, spark.sparkContext.defaultParallelism))
-    # level 0 streams the INDEX (tiny rows), not materialized payloads:
-    # the write stage below births each tile in the same Python worker
-    # that writes it, so full-resolution voxels never cross the
-    # Python↔JVM Arrow boundary at all (measured ~55 MiB/s per direction
-    # for multi-MB binary rows — a gen→Arrow→write chain paid it twice
-    # and was the end-to-end bottleneck).
-    if paths:
-        # slab-locality layout (see docstring): every tile of one
-        # (stack, z0) slab lands in the same task, in y/x order
-        blocks = (
-            block_index(catalog, base_chunk)
-            .repartition(n_part, "stack_name", "z0")
-            .sortWithinPartitions("stack_name", "z0", "y0", "x0")
-        )
-    else:
-        blocks = block_index(catalog, base_chunk).repartition(n_part)
-
     czi_paths = paths or {}
 
-    def births(batches):
-        """Level 0: BIRTH each tile (synthetic ramp / codec read) in the
-        task that writes it — no Arrow crossing for full-res voxels."""
-        slab_cache: list = [None, None]  # [(path, z0), decoded slab]
-        for batch in batches:
-            for row in batch.to_pylist():
-                name = row["stack_name"]
-                z0, y0, x0 = row["z0"], row["y0"], row["x0"]
-                if name in czi_paths:
-                    key = (czi_paths[name], z0)
-                    if slab_cache[0] != key:
-                        slab_cache[0] = key
-                        slab_cache[1] = _read_slab_czifile(key[0], z0, row["z1"])
-                    core = slab_cache[1][
-                        :, y0 : row["y1"], x0 : row["x1"]
-                    ].astype(dtype, copy=False)
-                else:
-                    core = synthetic_ramp_block(
-                        z0, row["z1"], y0, row["y1"], x0, row["x1"], dtype
-                    )
-                yield name, 0, 0, (z0, y0, x0), core[None, None]
-
-    for lvl in range(max(depths.values())):
-        alive = {n: s for n, s in shapes.items() if lvl < depths[n]}
-        metas = {
-            n: init_array(
-                os.path.join(out_dir, f"{n}.zarr", str(lvl)),
-                tuple(s),
-                (1, 1, min(cz, s[2]), min(cy, s[3]), min(cx, s[4])),
+    depths = {
+        n: pyramid_depth(s, factors, settings.downsample_levels)
+        for n, s in stacks.items()
+    }
+    metas = {}
+    for name, (z, y, x) in stacks.items():
+        for lvl in range(depths[name]):
+            metas[name, lvl] = init_array(
+                os.path.join(out_dir, f"{name}.zarr", str(lvl)),
+                (1, 1, z, y, x),
+                (1, 1, min(cz, z), min(cy, y), min(cx, x)),
                 dtype,
                 settings.compressor_name,
                 settings.compressor_kwargs,
             )
-            for n, s in alive.items()
-        }
-        pool = frozenset(n for n in alive if lvl + 1 < depths[n])
+            z, y, x = z // fz, y // fy, x // fx
 
-        def write_and_pool(
-            batches,
-            _out=out_dir,
-            _lvl=str(lvl),
-            _metas=metas,
-            _pool=pool,
-            _first=(lvl == 0),
-            _fault=fault,
-        ):
-            # per-array chunk digests, flushed as ONE manifest shard per
+    n_part = min(64, max(4, spark.sparkContext.defaultParallelism))
+    fused = fusion_depth(
+        stacks, base_chunk, factors, settings.downsample_levels, n_part, czi_paths
+    )
+    groups = fusion_groups(stacks, depths, base_chunk, factors, fused, czi_paths)
+    n_tasks = min(n_part, len(groups))
+    pids = place_groups(
+        [(z1 - z0) * (y1 - y0) * (x1 - x0) for _, z0, z1, y0, y1, x0, x1 in groups],
+        n_tasks,
+    )
+    # only INDEX rows (one per region) enter the exchange: full-resolution
+    # voxels are born in the task that writes them and never cross the
+    # Python↔JVM Arrow boundary (~55 MiB/s per direction for multi-MB
+    # binary rows — a gen→Arrow→write chain paid it twice)
+    blocks = local_frame(
+        spark,
+        [(*g, pid) for g, pid in zip(groups, pids)],
+        "stack_name string, z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, pid int",
+    ).repartitionById(n_tasks, "pid")
+
+    def births(batches):
+        """Level 0: BIRTH each tile of the task's regions (codec slab
+        read or synthetic ramp) in z, y, x order."""
+        for batch in batches:
+            for row in batch.to_pylist():
+                name = row["stack_name"]
+                for z0 in range(row["z0"], row["z1"], cz):
+                    z1 = min(z0 + cz, row["z1"])
+                    slab = (
+                        _read_slab_czifile(czi_paths[name], z0, z1)
+                        if name in czi_paths
+                        else None
+                    )
+                    for y0 in range(row["y0"], row["y1"], cy):
+                        for x0 in range(row["x0"], row["x1"], cx):
+                            y1, x1 = min(y0 + cy, row["y1"]), min(x0 + cx, row["x1"])
+                            if slab is None:
+                                core = synthetic_ramp_block(z0, z1, y0, y1, x0, x1, dtype)
+                            else:
+                                core = slab[:, y0:y1, x0:x1].astype(dtype, copy=False)
+                            yield name, 0, 0, (z0, y0, x0), core[None, None]
+
+    first, depth = 0, fused
+    while True:
+
+        def stage(batches, _first=first, _depth=depth):
+            """Birth (level 0) or assemble (later levels) the task's
+            tiles, then write levels ``_first … _first+_depth−1``,
+            stitching each pooled level into chunks inside the task;
+            emit the pooled tiles of the stacks that go deeper."""
+            # chunk digests per array, flushed as ONE manifest shard per
             # (task, array) after all of this task's chunks are durable
             digests: dict[str, dict[str, str]] = {}
             n_written = 0
 
-            def written(tiles):
+            def written(tiles, lvl):
                 nonlocal n_written
                 for name, t, c, origin, arr in tiles:
+                    url = os.path.join(out_dir, f"{name}.zarr", str(lvl))
                     write_region(
-                        os.path.join(_out, f"{name}.zarr", _lvl),
+                        url,
                         (t, c, *origin),
                         arr,
-                        meta=_metas[name],
-                        record=digests.setdefault(name, {}),
+                        meta=metas[name, lvl],
+                        record=digests.setdefault(url, {}),
                     )
                     n_written += 1
-                    if _fault is not None:
-                        _fault(n_written)
-                    if name in _pool:
+                    if fault is not None:
+                        fault(n_written, lvl)
+                    if lvl + 1 < depths[name]:
                         yield name, t, c, origin, arr
 
             tiles = (
                 births(batches)
-                if _first
+                if _first == 0
                 else assemble_chunks(block_tiles(batches), base_chunk)
             )
-            yield from pool_batches(written(tiles), (fz, fy, fx))
-            if _fault is not None:
-                _fault("pre_shard", n_written)
-            for name, rec in digests.items():
-                write_checksum_shard(os.path.join(_out, f"{name}.zarr", _lvl), rec)
+            for lvl in range(_first, _first + _depth):
+                tiles = pool_tiles(written(tiles, lvl), factors)
+                if lvl + 1 < _first + _depth:
+                    tiles = assemble_chunks(row_sorted(tiles, base_chunk), base_chunk)
+            yield from tile_batches(tiles)
+            if fault is not None:
+                fault("pre_shard", n_written)
+            for url, rec in digests.items():
+                write_checksum_shard(url, rec)
 
-        pooled = blocks.mapInArrow(write_and_pool, BLOCK_SCHEMA)
-        if not pool:
-            # last level for every stack: ONE action executes the whole
-            # fused chain (all levels' writes)
-            pooled.count()
+        pooled = blocks.mapInArrow(stage, BLOCK_SCHEMA)
+        first += depth
+        if first >= max(depths.values()):
+            # ONE action executes the whole chain (every level's writes);
+            # the last stage emits no tile, so collecting it adds no
+            # exchange or task after the writes
+            pooled.collect()
             break
-        # the (8x smaller) pooled tiles exchange onto the base chunk grid;
-        # the next level's task assembles each chunk, writes and pools it
-        blocks = chunk_sorted(pooled, base_chunk)
-        shapes = {
-            n: [1, 1, s[2] // fz, s[3] // fy, s[4] // fx]
-            for n, s in shapes.items()
-        }
+        # the level-`first` tiles of the deeper stacks exchange onto the
+        # base chunk grid; each later stage writes one level
+        blocks, depth = chunk_sorted(pooled, base_chunk), 1
     return {n: os.path.join(out_dir, f"{n}.zarr") for n in stacks}
 
 
@@ -355,15 +440,15 @@ def convert_synthetic_stacks(
     dtype: str = "uint16",
     resume: bool = False,
 ) -> dict[str, str]:
-    """Convert MANY stacks in ONE Spark job per pyramid level — the
-    Spark-first restatement of the reference's outer loop.
+    """Convert MANY stacks in ONE Spark job — the Spark-first
+    restatement of the reference's outer loop.
 
     The reference converts stacks sequentially per SLURM node
     (``zeiss_job.py:133-157``: ``for stack: czi_stack_zarr_writer``),
     so a node with one big stack straggles while others idle. Here the
-    block index of every stack concatenates into one DataFrame and the
-    scheduler interleaves tiles of all stacks across all cores — work
-    balances at tile granularity, not stack granularity.
+    regions of every stack concatenate into one index, placed
+    largest-first across all partitions — work balances at region
+    granularity, not stack granularity.
 
     ``stacks`` maps stack_name → (z, y, x) extents. Returns name → group
     path. Per-stack array routing happens inside the sink task (the
@@ -394,9 +479,9 @@ def convert_czi_stacks(
     voxel_size: tuple[float, float, float] = (1.0, 1.0, 1.0),
     resume: bool = False,
 ) -> dict[str, str]:
-    """Convert MANY real CZI files in ONE fused Spark job per pyramid
-    level — :func:`convert_synthetic_stacks`' scheduling story (tiles of
-    every stack interleave across all cores; the reference's per-node
+    """Convert MANY real CZI files in ONE fused Spark job —
+    :func:`convert_synthetic_stacks`' scheduling story (z-groups of
+    every stack spread across all partitions; the reference's per-node
     stack loop straggles on its largest stack) applied to actual ZISRAW
     input, with the same ``_SUCCESS``/``resume`` restart semantics.
 

@@ -9,6 +9,7 @@ same session config scales from ``local[32]`` to a 1000-executor cluster.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -208,19 +209,31 @@ def get_spark(
     return spark
 
 
-def apply_session_confs(spark: SparkSession) -> SparkSession:
+def apply_session_confs(spark: SparkSession) -> list[str]:
     """Apply the engine's runtime-settable confs to an existing session.
 
-    The driver hands us a pre-built SparkSession in ``entry()``; static confs
-    (memory, master) are fixed by then, but SQL confs are runtime-settable
-    and needed for oracle agreement (UTC) and performance (AQE).
-    """
+    The driver hands us a pre-built SparkSession in ``entry()``; static
+    confs (memory, master, the codegen cache size, the worker daemon)
+    are fixed by then, but SQL confs are runtime-settable and needed for
+    oracle agreement (UTC) and performance (AQE).
+
+    Returns the engine defaults whose live value still differs (static
+    confs the session was built without), sorted, and logs one warning
+    naming them; ``[]`` when the session runs with every default."""
+    missed = []
     for k, v in _DEFAULT_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # static conf on a live session — keep going
             pass
-    return spark
+        if spark.conf.get(k, None) != v:
+            missed.append(k)
+    if missed:
+        logging.getLogger(__name__).warning(
+            "session built without engine defaults it cannot take live: %s",
+            ", ".join(sorted(missed)),
+        )
+    return sorted(missed)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str | T.StructType) -> DataFrame:

@@ -1,14 +1,13 @@
-"""CZI stack source: stack listing → block-index DataFrame → slab
-decodes inside the tasks that consume them (SURVEY §2.1 S1-S7, §3.2
-restatement).
+"""CZI stack source: stack listing → slab decodes inside the tasks that
+consume them (SURVEY §2.1 S1-S7, §3.2 restatement).
 
 The reference reads a CZI stack as sequential z-slabs on one node
 (``czi_block_generator`` ``utils/utils.py:462-526``; threaded subblock
-assembly ``read_slices_czi`` ``utils/utils.py:284-395``). Here the *block
-index* is data (one row per tile), Spark schedules tiles across
-executors, and each task keeps the reference's in-task thread pool for
-I/O-bound subblock reads (SURVEY §4 X5 — threads inside the task are not
-Spark's job).
+assembly ``read_slices_czi`` ``utils/utils.py:284-395``). Here the
+z-group index is data (one row per z-range, ``pipeline.fusion_groups``),
+Spark schedules z-groups across executors, and each task keeps the
+reference's in-task thread pool for I/O-bound subblock reads (SURVEY §4
+X5 — threads inside the task are not Spark's job).
 
 Tiles are born where they are used: ``pipeline._convert_pyramid`` decodes
 each level-0 tile (:func:`_read_slab_czifile` — the ``czifile`` package
@@ -25,8 +24,6 @@ import os
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: one row per z-slab block; payload is raw C-order bytes + shape/dtype tag
@@ -90,31 +87,6 @@ def list_stacks(input_dir: str, suffix: str = ".czi") -> dict[str, str]:
         for name in sorted(os.listdir(search_dir))
         if name.endswith(suffix) and os.path.isfile(os.path.join(search_dir, name))
     }
-
-
-def block_index(
-    stacks: DataFrame, block_shape: tuple[int, int, int] = (128, 128, 128)
-) -> DataFrame:
-    """3-D block-index DataFrame: stacks × (z, y, x) tile bounds — the
-    distributed twin of ``gen_slices`` (``zarr_writer.py:129-186``) +
-    ``generate_jumps`` (``utils/utils.py:398-415``) as ``sequence`` +
-    ``explode``. ``stacks`` must carry ``z_extent``/``y_extent``/
-    ``x_extent``.
-
-    Tiling all three axes (the reference slabs only z) is what gives a
-    512³ stack 64 four-MB tasks instead of 4 sixty-four-MB ones — and at
-    real microscope geometry (thin z, huge y×x planes) it is the only
-    shape that parallelizes at all."""
-    bz, by, bx = block_shape
-    out = stacks
-    for name, extent, b in (("z", "z_extent", bz), ("y", "y_extent", by), ("x", "x_extent", bx)):
-        out = out.select(
-            "*",
-            F.explode(
-                F.sequence(F.lit(0), F.col(extent) - 1, F.lit(b))
-            ).alias(f"{name}0"),
-        ).withColumn(f"{name}1", F.least(F.col(f"{name}0") + b, F.col(extent)))
-    return out
 
 
 def synthetic_ramp_block(

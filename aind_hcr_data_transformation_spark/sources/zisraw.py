@@ -647,5 +647,5 @@ def stack_info(path: str) -> tuple[tuple[int, int, int], str]:
 
 def stack_extents(path: str) -> tuple[int, int, int]:
     """(z, y, x) extents of a CZI stack from its subblock directory — the
-    planner input ``block_index`` needs for real (non-synthetic) stacks."""
+    planner input ``pipeline.fusion_groups`` needs for real (non-synthetic) stacks."""
     return stack_info(path)[0]

@@ -84,10 +84,10 @@ _MIN_CUT = -(2**62)  # "before every event" sentinel (micros)
 
 def _feed_plan(path: str, target_batches: int) -> list[int]:
     """Driver-side replay plan: time-aligned batch cutoffs (ts micros,
-    strictly increasing, last == max ts). The RETAINED state is one int
-    per planned micro-batch; the exact-quantile computation below reads
-    the ts column once (transient, 8 B/row) for equal-ROW batches at
-    test scale. The no-late-rows guarantee needs only that cutoffs are
+    strictly increasing, last == max ts; none for an empty table). The
+    RETAINED state is one int per planned micro-batch; the exact-quantile
+    computation below reads the ts column once (transient, 8 B/row) for
+    equal-ROW batches at test scale. The no-late-rows guarantee needs only that cutoffs are
     time values (range partitioning by time) — NOT quantile exactness,
     which only balances batch sizes — so the 100 TB path swaps this for
     parquet row-group min/max statistics (footer-only, O(row groups))
@@ -113,9 +113,8 @@ def _feed_plan(path: str, target_batches: int) -> list[int]:
         c = int(ts[i])
         if not cuts or c > cuts[-1]:
             cuts.append(c)
-    last = int(ts[-1])
-    if not cuts or cuts[-1] < last:
-        cuts.append(last)
+    if n and (not cuts or cuts[-1] < int(ts[-1])):
+        cuts.append(int(ts[-1]))
     _PLAN_CACHE[key] = cuts
     return cuts
 
@@ -248,7 +247,11 @@ class EventFeedStreamReader(DataSourceStreamReader):
         return {"cut": _MIN_CUT}
 
     def latestOffset(self) -> dict:
-        nxt = next((c for c in self._cuts if c > self._cur), self._cuts[-1])
+        # an empty topic has no cutoff: the offset stays where it is
+        nxt = next(
+            (c for c in self._cuts if c > self._cur),
+            self._cuts[-1] if self._cuts else self._cur,
+        )
         self._cur = nxt
         return {"cut": nxt}
 

@@ -501,3 +501,21 @@ def test_feed_throughput_floor(spark):
     # sf0.001 fixture is fixed-cost-dominated, so the gate stays far
     # under the ~1400 ev/s this config measures warm)
     assert res["rows"] / res["wall_s"] > 250, (res, wall)
+
+
+def test_empty_topic_gives_the_oracles_empty_result(spark, tmp_path):
+    """An events table with no rows plans no cutoff, keeps the offset at
+    its start and returns the oracle's empty result with the query's
+    columns."""
+    import pyarrow.parquet as pq
+
+    empty = pq.read_table(EVENTS).slice(0, 0)
+    pq.write_table(empty, str(tmp_path / "events.parquet"))
+    assert _feed_plan(str(tmp_path / "events.parquet"), 3) == []
+    reader = EventFeedStreamReader(
+        {"path": str(tmp_path / "events.parquet"), "progress_dir": str(tmp_path / "prog")}
+    )
+    assert reader.latestOffset() == reader.initialOffset() == {"cut": _MIN_CUT}
+    got = stream_feed_windowed(spark, str(tmp_path))
+    assert got.columns == ["window_start", "event_type", "n_events", "sum_value", "avg_value"]
+    assert got.collect() == []

@@ -86,3 +86,55 @@ def test_default_driver_memory_is_half_the_host_up_to_24g():
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     mib = int(_default_driver_memory()[:-1])
     assert 0 < mib <= min(24 << 10, phys // 2 >> 20)
+
+
+class _DriverConf:
+    """``spark.conf`` of a session a driver built without the engine's
+    static confs: setting one raises, as Spark's ``RuntimeConfig`` does."""
+
+    def __init__(self, static: dict[str, str]):
+        self.static, self.live = static, {}
+
+    def set(self, key, value):
+        if key in self.static:
+            raise RuntimeError(f"Cannot modify the value of a static config: {key}")
+        self.live[key] = value
+
+    def get(self, key, default=None):
+        return self.live.get(key, self.static.get(key, default))
+
+
+def test_apply_session_confs_names_static_confs_it_could_not_set(caplog):
+    """The static defaults a live session cannot take come back, and one
+    warning names them; a static conf already at the engine's value
+    does not."""
+    from types import SimpleNamespace
+
+    from aind_hcr_data_transformation_spark.session import (
+        _DEFAULT_CONFS,
+        apply_session_confs,
+    )
+
+    session = SimpleNamespace(
+        conf=_DriverConf(
+            {
+                "spark.sql.codegen.cache.maxEntries": "100",
+                "spark.python.daemon.module": "pyspark.daemon",
+                "spark.ui.enabled": "false",
+            }
+        )
+    )
+    with caplog.at_level("WARNING"):
+        missed = apply_session_confs(session)
+    assert missed == ["spark.python.daemon.module", "spark.sql.codegen.cache.maxEntries"]
+    (record,) = caplog.records
+    assert all(k in record.getMessage() for k in missed)
+    assert session.conf.live["spark.sql.session.timeZone"] == _DEFAULT_CONFS["spark.sql.session.timeZone"]
+
+
+def test_apply_session_confs_on_an_engine_session_misses_nothing(spark, caplog):
+    from aind_hcr_data_transformation_spark.session import apply_session_confs
+
+    with caplog.at_level("WARNING"):
+        assert apply_session_confs(spark) == []
+    assert not caplog.records

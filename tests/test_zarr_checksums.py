@@ -168,14 +168,20 @@ def test_digest_is_of_stored_bytes():
 
 
 def test_distributed_writer_emits_manifest(spark, tmp_path):
-    """The fused pyramid writer leaves one manifest shard per (level
-    task, array): the shards of a level cover each of its chunks exactly
-    once, their count equals the tasks that wrote chunks (counted by the
-    ``pre_shard`` hook), and every level reads back verified."""
+    """The fused pyramid writer leaves one manifest shard per (task,
+    array): each level's shards cover each of its chunks exactly once,
+    their count equals the tasks that wrote that level (counted by the
+    per-write hook), the region writes the tasks count at the
+    ``pre_shard`` hook sum to one write per chunk of every level, a
+    first-stage task writes two levels, and every level reads back
+    verified."""
     from aind_hcr_data_transformation_spark.config import (
         ZarrConversionSettings,
     )
-    from aind_hcr_data_transformation_spark.pipeline import _convert_pyramid
+    from aind_hcr_data_transformation_spark.pipeline import (
+        _convert_pyramid,
+        fusion_depth,
+    )
     from aind_hcr_data_transformation_spark.sources.czi import (
         synthetic_ramp_block,
     )
@@ -187,38 +193,47 @@ def test_distributed_writer_emits_manifest(spark, tmp_path):
     marks.mkdir()
     marks_dir = str(marks)
 
-    def count_writing_tasks(*args):
+    def mark_writing_task(*args):
         from pyspark import TaskContext
 
-        if args[0] == "pre_shard" and args[1] > 0:
-            tc = TaskContext.get()
-            name = f"{tc.stageId()}_{tc.partitionId()}_{tc.attemptNumber()}"
-            Path(marks_dir, name).write_text(str(args[1]))
+        tc = TaskContext.get()
+        task = f"{tc.stageId()}_{tc.partitionId()}_{tc.attemptNumber()}"
+        if args[0] != "pre_shard":
+            Path(marks_dir, f"{task}_{args[1]}").touch()
+        elif args[1] > 0:
+            Path(marks_dir, f"{task}.n").write_text(str(args[1]))
 
     settings = ZarrConversionSettings(
         output_directory=str(tmp_path / "out"),
         chunk_size=(4, 8, 8),
         scale_factor=(2, 2, 2),
-        downsample_levels=2,
+        downsample_levels=3,
     )
+    # 128 tiles over the session's 4 partitions: levels 0-1 in the
+    # first stage (16 regions), level 2 in the tail
+    assert fusion_depth({"s": (32, 32, 32)}, (4, 8, 8), (2, 2, 2), 3, 4) == 2
     group = _convert_pyramid(
-        spark, settings, {"s": (16, 32, 32)}, "uint16",
-        fault=count_writing_tasks,
+        spark, settings, {"s": (32, 32, 32)}, "uint16",
+        fault=mark_writing_task,
     )["s"]
-    level0 = synthetic_ramp_block(0, 16, 0, 32, 0, 32)
-    level1 = windowed_mean_nd(level0, (2, 2, 2))
-    n_shards = 0
-    for lvl, n_chunks, want in ((0, 64, level0), (1, 8, level1)):
+    want = synthetic_ramp_block(0, 32, 0, 32, 0, 32)
+    tasks = [p.name.rsplit("_", 1) for p in marks.iterdir() if p.suffix != ".n"]
+    written = [int(p.read_text()) for p in marks.glob("*.n")]
+    assert sum(written) == 128 + 16 + 2
+    assert len(written) == len({task for task, _ in tasks})
+    for lvl, n_chunks in ((0, 128), (1, 16), (2, 2)):
         url = os.path.join(group, str(lvl))
         shards = list(Path(url, CHECKSUM_DIR).glob("*.json"))
         keys = [k for sh in shards for k in json.loads(sh.read_text())]
         assert len(keys) == len(set(keys)) == n_chunks
         assert verify_array_checksums(url) == n_chunks
         np.testing.assert_array_equal(read_array(url, verify=True)[0, 0], want)
-        n_shards += len(shards)
-    written = [int(p.read_text()) for p in marks.iterdir()]
-    assert n_shards == len(written)
-    assert sum(written) == 64 + 8
+        assert len(shards) == sum(1 for _, level in tasks if level == str(lvl))
+        want = windowed_mean_nd(want, (2, 2, 2))
+    levels_per_task = {}
+    for task, level in tasks:
+        levels_per_task.setdefault(task, set()).add(level)
+    assert {"0", "1"} in levels_per_task.values()
 
 
 def test_scrub_group_covers_every_level(spark, tmp_path):

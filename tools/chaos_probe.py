@@ -31,10 +31,12 @@ shards).
    attempt AFTER writing a region (partial chunk-file output on
    disk); the job must succeed via Spark task retry (``local[8,3]``)
    and the final chunk TREE must be byte-identical to a clean run's.
-2. ``pyramid_task_retry`` — same kill across the fused multi-level
-   chain with two stacks: first attempts of even partitions die after
-   a region write at every level whose stage gives them one; retried
-   output tree must hash-equal the clean run.
+2. ``pyramid_task_retry`` — kills across the fused multi-level chain
+   with two stacks: attempt ``a`` of an even partition dies right after
+   its first region write at the ``(a+1)``-th level it writes (two
+   kills at most), so a task that writes two levels dies once at each;
+   every marker records its level, kills must hit two levels inside one
+   task, and the retried output tree must hash-equal the clean run.
 3. ``feed_read_retry`` — the broker-shaped feed's ``read()`` dies
    mid-iteration on its first attempt for partition 0 of every
    micro-batch; the parquet sink must end with every event exactly
@@ -123,8 +125,8 @@ from pyspark.sql.datasource import DataSource  # noqa: E402
 
 def _first_attempt_of_even_partition(args):
     """The task context when the hook call ``args`` (see
-    ``pipeline._convert_pyramid``: ``(n_written,)`` after each region
-    write) should fire: a FIRST attempt of an even-numbered partition
+    ``pipeline._convert_pyramid``: ``(n_written, level)`` after each
+    region write) should fire: a FIRST attempt of an even-numbered partition
     (mixing killed and clean tasks in one stage) with at least one
     region write done. Named hook points (``"pre_shard"``) never fire
     here."""
@@ -139,31 +141,46 @@ def _first_attempt_of_even_partition(args):
 
 
 def _mark(marker_dir: str, prefix: str, tc, text: str) -> None:
-    """One marker file per injected failure, named by stage and
-    partition: the failure leaves no in-process trace to assert on."""
-    name = f"{prefix}_s{tc.stageId()}_p{tc.partitionId()}"
+    """One marker file per injected failure, named by stage, partition
+    and attempt: the failure leaves no in-process trace to assert on."""
+    name = f"{prefix}_s{tc.stageId()}_p{tc.partitionId()}_a{tc.attemptNumber()}"
     with open(os.path.join(marker_dir, name), "w") as f:
         f.write(text)
 
 
-class KillFirstTaskAttempt:
-    """Raise on a task's FIRST attempt after its first region write,
-    for even-numbered partitions; subsequent attempts run clean — pure
-    ``TaskContext.attemptNumber()`` logic, no shared state. A marker
-    file records each kill."""
+class KillAtEachLevel:
+    """Raise once per level a task writes: attempt ``a`` of an
+    even-numbered partition dies right after its first region write at
+    the ``(a+1)``-th distinct level it writes, for ``a < max_kills``
+    (keep it below ``spark.task.maxFailures``). A task that writes one
+    level dies once; one that writes two dies at each. The marker file
+    of each kill holds the level of the write it followed."""
 
-    def __init__(self, marker_dir: str):
+    def __init__(self, marker_dir: str, max_kills: int):
         self.marker_dir = marker_dir
+        self.max_kills = max_kills
+        self._levels: dict[tuple, list] = {}
 
     def __call__(self, *args) -> None:
-        tc = _first_attempt_of_even_partition(args)
-        if tc is None:
+        from pyspark import TaskContext
+
+        if not args or isinstance(args[0], str):
             return
-        _mark(self.marker_dir, "killed", tc, str(args[0]))
-        raise RuntimeError(
-            f"chaos: killing attempt 0 of partition "
-            f"{tc.partitionId()} after {args[0]} region writes"
+        tc = TaskContext.get()
+        if tc is None or tc.partitionId() % 2 or tc.attemptNumber() >= self.max_kills:
+            return
+        levels = self._levels.setdefault(
+            (tc.stageId(), tc.partitionId(), tc.attemptNumber()), []
         )
+        if args[1] in levels:
+            return
+        levels.append(args[1])
+        if len(levels) == tc.attemptNumber() + 1:
+            _mark(self.marker_dir, "killed", tc, str(args[1]))
+            raise RuntimeError(
+                f"chaos: killing attempt {tc.attemptNumber()} of partition "
+                f"{tc.partitionId()} after its first level-{args[1]} write"
+            )
 
 
 class HardKillWorkerFirstAttempt:
@@ -457,7 +474,7 @@ def stage_zarr_task_retry(spark, sf_dir: str) -> dict:
         markers = _markers(base)
         run = _convert_clean_and_chaos(
             spark, base, {"chaos_stack": (48, 64, 64)}, 1,
-            KillFirstTaskAttempt(markers),
+            KillAtEachLevel(markers, max_kills=1),
         )
         return _retry_result(run, markers)
     finally:
@@ -535,21 +552,27 @@ def stage_worker_death_manifest_gap(spark, sf_dir: str) -> dict:
 
 
 def stage_pyramid_task_retry(spark, sf_dir: str) -> dict:
-    """The same task kill across ``_convert_pyramid``'s fused
-    multi-level chain with two stacks: first attempts of even
-    partitions die after a region write at every level whose stage
-    gives them one; the retried tree must hash-equal the clean run."""
+    """Kills across ``_convert_pyramid``'s fused multi-level chain with
+    two stacks whose first stage writes levels 0-1 of each region and
+    whose tail writes level 2: an even partition's task dies once at
+    each level it writes (:class:`KillAtEachLevel`); kills must hit two
+    levels inside one task and the retried tree must hash-equal the
+    clean run."""
     base = tempfile.mkdtemp(prefix="chaos_pyr_")
     try:
         markers = _markers(base)
         run = _convert_clean_and_chaos(
-            spark, base, {"stack_a": (32, 64, 64), "stack_b": (16, 32, 32)}, 3,
-            KillFirstTaskAttempt(markers),
+            spark, base, {"stack_a": (128, 64, 64), "stack_b": (128, 32, 32)}, 3,
+            KillAtEachLevel(markers, max_kills=2),
         )
         res = _retry_result(run, markers)
-        res["stages_with_kills"] = len(
-            {k.split("_")[1] for k in res["killed_attempts"]}
-        )
+        per_task: dict[str, set] = {}
+        for k in res["killed_attempts"]:
+            task = k.rsplit("_", 1)[0]
+            per_task.setdefault(task, set()).add(Path(markers, k).read_text())
+        res["killed_levels"] = sorted(set().union(*per_task.values()))
+        res["most_levels_killed_in_one_task"] = max(map(len, per_task.values()), default=0)
+        res["ok"] = res["ok"] and res["most_levels_killed_in_one_task"] >= 2
         return res
     finally:
         shutil.rmtree(base, ignore_errors=True)
